@@ -22,12 +22,14 @@ Scale notes (100 TB discipline):
 - Reconstruction shuffles once on PK; snapshots bound the replay tail the
   same way the reference's snapshots do (snapshot.rs:19-43).
 - Sequence assignment is the one inherently serial point (same as the
-  reference's per-table AtomicU64, table_storage.rs:212-261). We assign
-  ``base + per-partition offset + intra-partition row_number`` — the
-  zipWithIndex recipe expressed in DataFrame ops, so every partition
-  numbers its rows in parallel and only the #partitions-row offset table
-  passes through a single task. On a real cluster you'd use Delta commit
-  versions; the API shape is unchanged.
+  reference's per-table AtomicU64, table_storage.rs:212-261). The head
+  ``base`` is read driver-side with no Spark job (persisted floor, newest
+  snapshot, newest batch's parquet footer). Each row gets ``base +
+  per-partition offset + its index within the partition``: the zipWithIndex
+  recipe, with the per-partition counts collected once and the offsets
+  computed on the driver, so every partition numbers its rows in parallel.
+  On a real cluster you'd use Delta commit versions; the API shape is
+  unchanged.
 - Appends are batch-atomic (reference buffered-txn apply-at-COMMIT,
   sql_bridge.rs:453-568, transaction.rs:25-120): the batch is staged under
   ``events/_staging-*`` (a leading underscore makes it invisible to
@@ -41,15 +43,16 @@ from __future__ import annotations
 import contextlib
 import errno
 import fcntl
+import glob
 import json
 import os
 import shutil
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window as W
 
 from driftdb_spark.temporal import AsOf, apply_asof, resolve_sequence_at
 
@@ -169,6 +172,44 @@ def state_as_events(state: DataFrame) -> DataFrame:
         F.lit(INSERT).alias("event_type"),
         "pk",
         F.col("row").alias("payload"),
+    )
+
+
+def pk_conflicts(ev: DataFrame, rows: DataFrame, pk_col: str) -> DataFrame:
+    """Keys of ``rows`` an INSERT may not write, found by ONE aggregation
+    over the event frame ``ev`` (state as of now: snapshot rows count as
+    Inserts) plus the batch's keys, grouped by pk. A key conflicts when it
+    repeats within the batch (the reference's per-row check catches the
+    second occurrence) or when it is live: its last Insert is newer than
+    its last SoftDelete, the liveness rule of :func:`fold_events`. Shared
+    by ``EventLog.insert`` and the transaction buffer's insert."""
+    batch = rows.select(
+        F.col(pk_col).cast("string").alias("pk"),
+        F.lit(None).cast("long").alias("sequence"),
+        F.lit(None).cast("string").alias("event_type"),
+    )
+    new = F.col("event_type").isNull()
+
+    def last(kind: str) -> F.Column:
+        return F.max(F.when(F.col("event_type") == kind, F.col("sequence")))
+
+    return (
+        ev.select("pk", "sequence", "event_type")
+        .unionByName(batch)
+        .groupBy("pk")
+        .agg(
+            F.count_if(new).alias("n"),
+            last(INSERT).alias("ins"),
+            last(SOFT_DELETE).alias("del"),
+        )
+        .filter(
+            (F.col("n") > 1)
+            | (
+                (F.col("n") == 1)
+                & F.col("ins").isNotNull()
+                & (F.col("del").isNull() | (F.col("del") < F.col("ins")))
+            )
+        )
     )
 
 
@@ -404,7 +445,6 @@ class EventLog:
             # instead of serving an empty log (the reference holds the
             # engine write lock across compaction; this is the lock-free
             # equivalent for a bounded instant).
-            import glob
             import time as _time
 
             deadline = _time.monotonic() + 5.0
@@ -426,30 +466,55 @@ class EventLog:
         )
 
     def last_sequence(self) -> int:
-        """Max assigned sequence. Snapshot sequences participate (compaction
-        may drop trailing SoftDelete events from the log) and so does the
-        persisted ``seq_floor`` (a purge may empty the log AND rewrite every
-        snapshot): sequences must never regress — the reference's per-table
-        counter is a persisted monotonic AtomicU64
-        (table_storage.rs:212-261), and this is its three-source
-        equivalent."""
-        ev_max = 0
-        if os.path.exists(self._events_dir):
-            row = self.events().agg(F.max("sequence").alias("s")).first()
-            ev_max = int(row["s"] or 0)
+        """Max assigned sequence, read on the driver with no Spark job.
+        Sequences must never regress — the reference's per-table counter is
+        a persisted monotonic AtomicU64 (table_storage.rs:212-261) — and
+        this is its three-source equivalent, the max of:
+
+        - the persisted ``seq_floor`` (a purge may empty the log AND
+          rewrite every snapshot);
+        - the newest snapshot (compaction may drop trailing SoftDelete
+          events from the log);
+        - the newest log entry's ``sequence`` max, from its parquet footer
+          statistics. This covers a crash between an append's publish
+          rename and its ``seq_floor`` bump."""
         snaps = self._snapshot_seqs()
         floor = int(self.read_meta().get("seq_floor", 0))
-        return max(ev_max, snaps[-1] if snaps else 0, floor)
+        return max(self._newest_entry_max(), snaps[-1] if snaps else 0, floor)
+
+    def _newest_entry_max(self) -> int:
+        """``sequence`` max of the newest ``batch-<start>`` entry, from the
+        footer statistics of its parquet files. Appends and rewrites only
+        ever publish ``batch-<min sequence>`` names over disjoint ranges, so
+        the newest name holds the log's max. A footer without statistics
+        for the column raises rather than guessing low."""
+        entries = [e for e in self._log_entries() if e.startswith("batch-")]
+        if not entries:
+            return 0
+        hi = 0
+        top = os.path.join(self._events_dir, entries[-1])
+        for path in glob.glob(os.path.join(top, "*.parquet")):
+            meta = pq.read_metadata(path)
+            col = meta.schema.names.index("sequence")
+            for g in range(meta.num_row_groups):
+                stats = meta.row_group(g).column(col).statistics
+                if stats is None or not stats.has_min_max:
+                    raise RuntimeError(
+                        f"{path}: no sequence statistics in the parquet "
+                        "footer; cannot read the sequence head"
+                    )
+                hi = max(hi, int(stats.max))
+        return hi
 
     def _append(self, batch: DataFrame, event_type: str, payload: F.Column | None) -> int:
         """Assign contiguous sequences to the batch and publish it atomically.
 
-        Sequence assignment is the zipWithIndex recipe in DataFrame ops:
-        each partition numbers its own rows with a *partitioned* window
-        (parallel), and partition start offsets come from a cumulative sum
-        over the per-partition counts — a #partitions-row frame, the only
-        single-task step. No global sort, no ``batch.count()`` re-execution
-        (the row total falls out of the same counts frame).
+        Sequence assignment is the zipWithIndex recipe: each partition is
+        sorted locally and numbers its own rows (parallel), one counts pass
+        collects the per-partition row counts, and the driver turns them
+        into partition start offsets that the write inlines as a literal
+        array. No global sort, and the row total falls out of the same
+        counts.
 
         Publication is staged-then-renamed: the batch is written under
         ``events/_staging-<token>`` (hidden from Spark's file listing) and
@@ -470,7 +535,7 @@ class EventLog:
         recomputing; only executor loss (not applicable in local mode)
         could recompute a nondeterministic upstream into different
         partitions. On a cluster, Delta commit versions replace this whole
-        path.
+        path. The steps themselves are in :meth:`_assign_and_publish`.
         """
         if self.validate_fn is not None:
             batch = self.validate_fn(batch, event_type)
@@ -498,35 +563,28 @@ class EventLog:
     def _assign_and_publish(
         self, src: DataFrame, order_cols: list[str], hook_event_type: str
     ) -> int:
+        """The append every write path funnels into: read the sequence head
+        (no job), pin the sorted batch with each row's partition id and
+        ``monotonically_increasing_id`` (``(_pid << 33) + index within the
+        partition``), collect the per-partition counts (the one counts
+        pass), then write ``sequence = base + offset[_pid] + index + 1``
+        with the offsets inlined as a literal array, and publish by
+        rename. The local sort keeps ``order_cols`` order within each
+        partition, which is what ``_append_multi``'s ``(pk, _stmt)``
+        statement order relies on."""
         self._check_writable("append")
         base = self.last_sequence()
         src = (
-            src.withColumn("_pid", F.spark_partition_id())
+            src.sortWithinPartitions(*order_cols)
+            .withColumn("_pid", F.spark_partition_id())
+            .withColumn("_rid", F.monotonically_increasing_id())
             # Pin partition contents: the counts pass and the write pass
             # must see identical partitioning or offsets would misalign.
             .persist()
         )
         try:
-            counts = src.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
-            w_ofs = W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
-            offsets = counts.select(
-                "_pid",
-                F.coalesce(F.sum("_n").over(w_ofs), F.lit(0)).alias("_ofs"),
-                F.col("_n"),
-            )
-            total = int(
-                offsets.agg(F.coalesce(F.max(F.col("_ofs") + F.col("_n")), F.lit(0))).first()[0]
-            )
-            w_loc = W.partitionBy("_pid").orderBy(*order_cols)
-            out = src.join(F.broadcast(offsets.drop("_n")), "_pid").select(
-                (F.row_number().over(w_loc) + F.col("_ofs") + F.lit(base))
-                .cast("long")
-                .alias("sequence"),
-                F.current_timestamp().alias("ts"),
-                F.col("event_type"),
-                F.col("pk"),
-                F.col("payload"),
-            )
+            counts = dict(src.groupBy("_pid").count().collect())
+            total = sum(counts.values())
             if total == 0:
                 # Nothing to publish (validate_fn dropped every row, or a
                 # DELETE/UPDATE matched nothing): claiming batch-<base+1>
@@ -534,6 +592,19 @@ class EventLog:
                 # this base. The sequence counter intentionally does not
                 # advance.
                 return base
+            offsets, run = [], 0
+            for pid in range(max(counts) + 1):
+                offsets.append(F.lit(run))
+                run += counts.get(pid, 0)
+            index = F.col("_rid") - F.shiftleft(F.col("_pid").cast("long"), 33)
+            offset = F.element_at(F.array(*offsets), F.col("_pid") + 1)
+            out = src.select(
+                (F.lit(base + 1) + offset + index).cast("long").alias("sequence"),
+                F.current_timestamp().alias("ts"),
+                F.col("event_type"),
+                F.col("pk"),
+                F.col("payload"),
+            )
             os.makedirs(self._events_dir, exist_ok=True)
             token = uuid.uuid4().hex[:12]
             staging = os.path.join(self._events_dir, f"_staging-{token}")
@@ -562,8 +633,8 @@ class EventLog:
                     f"(a rival append or log rewrite won); retry"
                 ) from exc
             # Persist the high-water mark only after the batch is visible:
-            # a crash in between leaves the floor stale, which the
-            # log-derived max covers (last_sequence takes the max of all
+            # a crash in between leaves the floor stale, which the newest
+            # entry's footer covers (last_sequence takes the max of all
             # three sources). The floor is what survives a future
             # purge-to-empty rewrite. The published entry name rides the
             # commit as a Delta add-file action (commitlog.entries_at);
@@ -598,22 +669,11 @@ class EventLog:
     # sql_bridge.rs:3388-3661, :5473-5669, :5981-6087) ----------------------
 
     def insert(self, rows: DataFrame) -> int:
-        """Full-row Insert events. PK uniqueness against current state is an
-        anti-join check (reference checks committed state + txn buffer);
-        a key repeated WITHIN the batch is equally a violation (the
-        reference's per-row check catches the second occurrence) — found
-        by the constraint fuzz, gated here before anything publishes."""
-        dup = rows.join(
-            self.state_at().select(F.col("pk")),
-            rows[self.pk_col].cast("string") == F.col("pk"),
-            "left_semi",
-        )
-        dup_within = (
-            rows.groupBy(rows[self.pk_col].cast("string").alias("pk"))
-            .count()
-            .filter(F.col("count") > 1)
-        )
-        if not dup.isEmpty() or not dup_within.isEmpty():
+        """Full-row Insert events. PK uniqueness against current state
+        (reference checks committed state + txn buffer) and within the
+        batch (found by the constraint fuzz) is one aggregation,
+        :func:`pk_conflicts`, gated here before anything publishes."""
+        if not pk_conflicts(self._replay_events(), rows, self.pk_col).isEmpty():
             raise ValueError("duplicate primary key(s) in insert batch")
         return self._append(rows, INSERT, _payload_map(rows, self.pk_col))
 
@@ -668,21 +728,14 @@ class EventLog:
                 # transaction, so PK collisions must fail BEFORE anything
                 # publishes: a new key may not hit a surviving (non-updated)
                 # row, and the new keys must be unique among themselves.
-                survivors = self.state_at().join(
+                survivors = self._replay_events().join(
                     matching.select(
                         F.col(self.pk_col).cast("string").alias("pk")
                     ),
                     "pk",
                     "left_anti",
                 )
-                new_keys = new_rows.select(
-                    F.col(self.pk_col).cast("string").alias("pk")
-                )
-                clash = new_keys.join(survivors.select("pk"), "pk", "left_semi")
-                dup_within = (
-                    new_keys.groupBy("pk").count().filter(F.col("count") > 1)
-                )
-                if not clash.isEmpty() or not dup_within.isEmpty():
+                if not pk_conflicts(survivors, new_rows, self.pk_col).isEmpty():
                     raise ValueError(
                         "primary-key UPDATE would collide with an existing "
                         "or sibling key; nothing was changed"
@@ -740,27 +793,25 @@ class EventLog:
         else:
             bound = None  # AS OF now: any snapshot is usable
 
+        return fold_events(self._replay_events(bound, ev))
+
+    def _replay_events(
+        self, bound: int | None = None, ev: DataFrame | None = None
+    ) -> DataFrame:
+        """The event frame whose fold is state at sequence ``bound``
+        (``None`` = now): the newest snapshot at-or-before it as
+        pseudo-Inserts, plus the log tail after that snapshot up to the
+        bound. Shared by ``state_at`` and the insert PK gate."""
+        if ev is None:
+            ev = self.events()
         if bound is not None:
             ev = ev.filter(F.col("sequence") <= bound)
-
         snap, snap_seq = self._usable_snapshot(bound)
-        if snap is not None:
-            tail = ev.filter(F.col("sequence") > snap_seq)
-            last_ts = (
-                F.col("last_ts")
-                if "last_ts" in snap.columns
-                else F.lit(None).cast("timestamp")
-            )
-            snap_as_inserts = snap.select(
-                F.col("last_seq").alias("sequence"),
-                last_ts.alias("ts"),
-                F.lit(INSERT).alias("event_type"),
-                F.col("pk"),
-                F.col("row").alias("payload"),
-            )
-            ev = snap_as_inserts.unionByName(tail)
-
-        return fold_events(ev)
+        if snap is None:
+            return ev
+        return state_as_events(snap).unionByName(
+            ev.filter(F.col("sequence") > snap_seq)
+        )
 
     def state_df(self, schema_cols: dict[str, str], asof: AsOf | None = None) -> DataFrame:
         """State with the row map projected back to typed columns."""

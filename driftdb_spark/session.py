@@ -23,6 +23,27 @@ def _cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def _driver_memory() -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM`` if set, else
+    60% of the memory available now. A heap sized above physical RAM
+    grows into the OOM killer on a host with no swap, instead of
+    spilling."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(
+                int(line.split()[1])
+                for line in fh
+                if line.startswith("MemAvailable:")
+            )
+        avail_mb = kb // 1024
+    except (OSError, StopIteration):
+        avail_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(512, avail_mb * 6 // 10)}m"
+
+
 def get_spark(
     app_name: str = "driftdb_spark",
     master: str | None = None,
@@ -65,7 +86,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.scheduler.mode", scheduler)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
     )
     # Production-scale I/O knobs (optimization guide §2.3/§6), env-
     # parameterized with INERT local defaults: the driver's bench must stay

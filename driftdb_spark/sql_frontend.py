@@ -3220,10 +3220,11 @@ class DriftSession:
         log, schema_cols = self._tables[table]
         doomed = log.state_df(schema_cols).filter(condition)
         # Two phases so the whole delete is all-or-nothing at the FK level:
-        # (1) walk the cascade tree, pinning each level's doomed rows and
-        # raising on ANY violated RESTRICT — before a single event
-        # publishes; (2) apply the soft-deletes children-first. Keys flow
-        # between levels as DataFrames (semi-joins), never via the driver.
+        # (1) walk the cascade tree, pinning the doomed rows of each level
+        # an FK references and raising on ANY violated RESTRICT — before a
+        # single event publishes; (2) apply the soft-deletes
+        # children-first. Keys flow between levels as DataFrames
+        # (semi-joins), never via the driver.
         plan: list[tuple[str, DataFrame]] = []
         try:
             self._plan_delete(table, doomed, plan, depth=0)
@@ -3245,14 +3246,15 @@ class DriftSession:
             state_of = lambda t: self._tables[t][0].state_df(self._tables[t][1])  # noqa: E731
         if depth > 20:
             raise ValueError("FK cascade deeper than 20 levels (cycle?)")
-        log, _schema_cols = self._tables[table]
-        doomed = doomed.persist()
-        doomed.count()  # pin now: later levels must not see mutated logs
+        children = [fk for fk in self._fks if fk[2] == table]
+        if children:
+            # pin now: later levels must not see mutated logs. A level no
+            # FK references is read once, by its own append, which pins it
+            # in the same pass that counts it.
+            doomed = doomed.persist()
+            doomed.count()
         plan.append((table, doomed))
-        for child, child_col, parent, parent_col, action in self._fks:
-            if parent != table:
-                continue
-            clog, ccols = self._tables[child]
+        for child, child_col, _parent, parent_col, action in children:
             referencing = state_of(child).join(
                 doomed.select(F.col(parent_col).cast("string").alias("_pk")),
                 F.col(child_col).cast("string") == F.col("_pk"),

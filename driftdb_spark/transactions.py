@@ -51,6 +51,7 @@ from driftdb_spark.events import (
     EventLog,
     _payload_map,
     fold_events,
+    pk_conflicts,
 )
 
 
@@ -108,17 +109,7 @@ class Transaction:
         aborts the transaction."""
         self._gate()
         try:
-            dup = rows.join(
-                self.state_at().select("pk"),
-                rows[self.log.pk_col].cast("string") == F.col("pk"),
-                "left_semi",
-            )
-            dup_within = (
-                rows.groupBy(rows[self.log.pk_col].cast("string").alias("pk"))
-                .count()
-                .filter(F.col("count") > 1)
-            )
-            if not dup.isEmpty() or not dup_within.isEmpty():
+            if not pk_conflicts(self._replay_events(), rows, self.log.pk_col).isEmpty():
                 raise ValueError("duplicate primary key(s) in transaction insert")
             self._stage(rows, INSERT, _payload_map(rows, self.log.pk_col))
         except ValueError:
@@ -184,9 +175,13 @@ class Transaction:
             out = out.unionByName(f)
         return out
 
+    def _replay_events(self) -> DataFrame:
+        """Committed state as of now (snapshot included) ∪ the buffer."""
+        return self.log._replay_events().unionByName(self.staged_events())
+
     def state_at(self) -> DataFrame:
         """Read-your-writes: committed events ∪ the buffer, folded."""
-        return fold_events(self.log.events().unionByName(self.staged_events()))
+        return fold_events(self._replay_events())
 
     def state_df(self, schema_cols: dict[str, str]) -> DataFrame:
         st = self.state_at()

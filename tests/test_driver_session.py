@@ -108,3 +108,21 @@ def test_load_tables_sets_utc_timezone_at_runtime(plain_conf_session):
     plain_conf_session.conf.set("spark.sql.session.timeZone", "America/New_York")
     catalog.load_tables(plain_conf_session, SF_DIR)
     assert plain_conf_session.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_default_driver_memory_fits_physical_ram(monkeypatch):
+    """Without ``SPARK_GRAFT_DRIVER_MEM`` the driver heap is sized from the
+    memory available, so it stays below physical RAM: on a host with no
+    swap, a larger heap ends in the OOM killer instead of spill. The
+    variable still overrides it."""
+    import os
+
+    from driftdb_spark.session import _driver_memory
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    heap = _driver_memory()
+    assert heap.endswith("m")
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    assert 512 <= int(heap[:-1]) < phys_mb
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert _driver_memory() == "3g"
