@@ -34,8 +34,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL equivalents, keyed like ``queries()``.
-    Entries absent here (MinHash-LSH, SimHash, LSH-ANN) are deterministic
-    but hash-based — not DuckDB-expressible — and get rows-only checks."""
+    Entries absent here (the multimodal decoders and perceptual hashes)
+    are not DuckDB-expressible and get rows-only checks."""
     from driftdb_spark.registry import oracle_map
 
     return oracle_map()

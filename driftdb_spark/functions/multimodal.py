@@ -569,7 +569,7 @@ def phash_near_dup_pairs(
     shuffle on the band value, never all-pairs); survivors take an exact
     popcount(xor) hamming filter. A true near-dup within ``max_hamming``
     bits can miss only if its flipped bits hit every band — the usual LSH
-    recall trade, measured for SimHash in dedup.py's audits."""
+    recall trade, measured by multimodal_phash_recall_audit."""
     width = 64 // n_bands
     mask = (1 << width) - 1
     bands = sigs.select(

@@ -722,6 +722,7 @@ def sample_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .drop("lo", "hi")
     )
+    # Global window on purpose: it runs over the n_bins (32) bin rows only.
     w = Window.orderBy(F.col("bin").desc()).rowsBetween(
         Window.unboundedPreceding, -1
     )

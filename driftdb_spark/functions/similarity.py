@@ -197,19 +197,68 @@ def _plane_dot(plane: list) -> F.Column:
     )
 
 
-_XX_SIGN_SQL = (
-    "CAST(pmod(xxhash64(concat('plane', CAST(j AS STRING), ':', "
-    "CAST(i AS STRING))), 2) * 2 - 1 AS DOUBLE)"
+#: ±1 pseudo-random plane component from md5 parity — identical on both
+#: engines, so bucket ids are oracle-checkable. Spark side, in the
+#: (j, i)-parameterized form _plane_sign_matrix evaluates once (r13; the
+#: per-row re-derivation this replaces is documented there). The concat
+#: reproduces the historical 'plane{j}:{i}' strings byte-for-byte.
+_MD5_SIGN_SQL = (
+    "CAST(pmod(cast(conv(substr(md5(concat('plane', CAST(j AS STRING), ':', "
+    "CAST(i AS STRING))), 1, 1), 16, 10) as bigint), 2) * 2 - 1 AS DOUBLE)"
 )
+
+
+def _md5_dot_duck(j: int) -> str:
+    sign = (
+        f"((CAST('0x' || substr(md5('plane{j}:' || CAST(i - 1 AS VARCHAR)), 1, 1) AS BIGINT) % 2) * 2 - 1)"
+    )
+    return (
+        f"list_sum(list_transform(range(1, {DIM + 1}), "
+        f"i -> CAST(embedding[i] AS DOUBLE) * {sign}))"
+    )
+
+
+def _lsh_probe_oracle() -> str:
+    bucket_duck = " + ".join(
+        f"(CASE WHEN {_md5_dot_duck(j)} > 0 THEN {1 << j} ELSE 0 END)"
+        for j in range(N_PLANES)
+    )
+    probe_cond = " OR ".join(
+        ["b.bucket = q.qb"] + [f"b.bucket = xor(q.qb, {1 << j})" for j in range(N_PLANES)]
+    )
+    return f"""
+    WITH b AS (
+        SELECT vec_id, label, embedding, ({bucket_duck}) AS bucket FROM embeddings
+    ),
+    q AS (SELECT embedding AS qe, bucket AS qb FROM b WHERE vec_id = 0),
+    cand AS (
+        SELECT b.vec_id, b.label, b.embedding, q.qe
+        FROM b, q WHERE b.vec_id <> 0 AND ({probe_cond})
+    ),
+    s AS (
+        SELECT vec_id, label,
+          list_sum(list_transform(range(1, {DIM + 1}),
+            i -> CAST(embedding[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))) AS dot,
+          sqrt(list_sum(list_transform(range(1, {DIM + 1}),
+            i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS na,
+          sqrt(list_sum(list_transform(range(1, {DIM + 1}),
+            i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)))) AS nq
+        FROM cand
+    )
+    SELECT vec_id, label, ROUND(dot / (na * nq), 6) AS cos_sim
+    FROM s
+    ORDER BY cos_sim DESC, vec_id
+    LIMIT 10
+    """
 
 
 def lsh_bucket(emb: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
     """Random-hyperplane LSH: bucket id = sign bits of dot(v, r_j) for
-    deterministic pseudo-random ±1 planes r_j (xxhash64-derived; matrix
+    deterministic pseudo-random ±1 planes r_j (md5-derived; matrix
     pre-evaluated once — see _plane_sign_matrix). One narrow map stage;
     at scale the corpus is written bucketed-by so probes touch one
     bucket."""
-    mat = _plane_sign_matrix(emb.sparkSession, _XX_SIGN_SQL, n_planes)
+    mat = _plane_sign_matrix(emb.sparkSession, _MD5_SIGN_SQL, n_planes)
     bits = []
     for j in range(n_planes):
         dot_j = _plane_dot(mat[j])
@@ -220,12 +269,19 @@ def lsh_bucket(emb: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
     return emb.select("vec_id", "label", "embedding", bucket.cast("long").alias("bucket"))
 
 
-@register("sim_ann_lsh_probe", oracle=None, tags=("similarity", "no-oracle"))
+_LSH_PROBE_ORACLE = _lsh_probe_oracle()
+
+
+@register("sim_ann_lsh_probe", oracle=_LSH_PROBE_ORACLE, tags=("similarity",))
+@register("sim_ann_lsh_portable", oracle=_LSH_PROBE_ORACLE, tags=("similarity",))
 def sim_ann_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via LSH: bucket the corpus, multi-probe the query's bucket plus
     all Hamming-distance-1 neighbors (the standard multi-probe LSH recall
-    fix), exact cosine within the probed buckets only. Deterministic but
-    hash-based → rows-only check; recall vs exact top-k asserted in pytest."""
+    fix), exact cosine within the probed buckets only. Bucket assignment,
+    the probe set and the in-bucket cosine top-10 are all recomputed by
+    the DuckDB oracle (md5 planes); bucketing is one narrow map stage and
+    the probes broadcast. ``sim_ann_lsh_portable`` is the same query under
+    its older name."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     bucketed = lsh_bucket(emb)
     probes = (
@@ -607,111 +663,6 @@ def sim_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_overlap"),
         F.round(F.count(F.lit(1)).cast("double") / 10.0, 6).alias("recall_at_10"),
     )
-
-
-# -- portable (cross-engine bit-exact) LSH ANN twin ---------------------------
-
-#: ±1 pseudo-random plane component from md5 parity — Spark side, in the
-#: (j, i)-parameterized form _plane_sign_matrix evaluates once (r13; the
-#: per-row re-derivation this replaces is documented there). The concat
-#: reproduces the historical 'plane{j}:{i}' strings byte-for-byte.
-_MD5_SIGN_SQL = (
-    "CAST(pmod(cast(conv(substr(md5(concat('plane', CAST(j AS STRING), ':', "
-    "CAST(i AS STRING))), 1, 1), 16, 10) as bigint), 2) * 2 - 1 AS DOUBLE)"
-)
-
-
-def _md5_dot_duck(j: int) -> str:
-    sign = (
-        f"((CAST('0x' || substr(md5('plane{j}:' || CAST(i - 1 AS VARCHAR)), 1, 1) AS BIGINT) % 2) * 2 - 1)"
-    )
-    return (
-        f"list_sum(list_transform(range(1, {DIM + 1}), "
-        f"i -> CAST(embedding[i] AS DOUBLE) * {sign}))"
-    )
-
-
-def _lsh_portable_oracle() -> str:
-    bucket_duck = " + ".join(
-        f"(CASE WHEN {_md5_dot_duck(j)} > 0 THEN {1 << j} ELSE 0 END)"
-        for j in range(N_PLANES)
-    )
-    probe_cond = " OR ".join(
-        ["b.bucket = q.qb"] + [f"b.bucket = xor(q.qb, {1 << j})" for j in range(N_PLANES)]
-    )
-    return f"""
-    WITH b AS (
-        SELECT vec_id, label, embedding, ({bucket_duck}) AS bucket FROM embeddings
-    ),
-    q AS (SELECT embedding AS qe, bucket AS qb FROM b WHERE vec_id = 0),
-    cand AS (
-        SELECT b.vec_id, b.label, b.embedding, q.qe
-        FROM b, q WHERE b.vec_id <> 0 AND ({probe_cond})
-    ),
-    s AS (
-        SELECT vec_id, label,
-          list_sum(list_transform(range(1, {DIM + 1}),
-            i -> CAST(embedding[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))) AS dot,
-          sqrt(list_sum(list_transform(range(1, {DIM + 1}),
-            i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS na,
-          sqrt(list_sum(list_transform(range(1, {DIM + 1}),
-            i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)))) AS nq
-        FROM cand
-    )
-    SELECT vec_id, label, ROUND(dot / (na * nq), 6) AS cos_sim
-    FROM s
-    ORDER BY cos_sim DESC, vec_id
-    LIMIT 10
-    """
-
-
-@register("sim_ann_lsh_portable", oracle=_lsh_portable_oracle(), tags=("similarity",))
-def sim_ann_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe LSH ANN, value-for-value oracle-checked — the md5-keyed
-    twin of ``sim_ann_lsh_probe``: the ±1 hyperplane components come from
-    md5 hex-digit parity (identical on both engines) instead of xxhash64,
-    so bucket assignment, the Hamming-1 probe set, and the in-bucket cosine
-    top-10 are all independently recomputed by DuckDB. Same plan shape:
-    bucketing is one narrow map stage, probes broadcast, exact cosine only
-    inside probed buckets."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    mat = _plane_sign_matrix(spark, _MD5_SIGN_SQL, N_PLANES)
-    bits = []
-    for j in range(N_PLANES):
-        dot_j = _plane_dot(mat[j])
-        bits.append(F.when(dot_j > 0, F.lit(1 << j)).otherwise(0))
-    bucket = bits[0]
-    for x in bits[1:]:
-        bucket = bucket + x
-    bucketed = emb.select(
-        "vec_id", "label", "embedding", bucket.cast("long").alias("bucket")
-    )
-    probes = (
-        bucketed.filter(F.col("vec_id") == 0)
-        .select(
-            F.col("embedding").alias("qe"),
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {N_PLANES}), "
-                    f"j -> CASE WHEN j = {N_PLANES} THEN bucket "
-                    "ELSE CAST(bucket AS BIGINT) ^ shiftleft(1L, j) END)"
-                )
-            ).alias("qbucket"),
-        )
-    )
-    cand = bucketed.join(
-        F.broadcast(probes), F.col("bucket") == F.col("qbucket")
-    ).filter(F.col("vec_id") != 0)
-    scored = cand.select(
-        "vec_id",
-        "label",
-        F.round(
-            _dots("embedding", "qe")
-            / (F.sqrt(_dots("embedding", "embedding")) * F.sqrt(_dots("qe", "qe"))),
-            6,
-        ).alias("cos_sim"),
-    )
-    return scored.orderBy(F.col("cos_sim").desc(), F.col("vec_id")).limit(10)
 
 
 # --- k-means (Lloyd) ---------------------------------------------------------

@@ -907,8 +907,8 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the A/B note inline) -> per-doc islands merge (window keyed on
     doc_id). The shingle key here is the raw token string so the oracle
     is value-exact; the 100 TB variant keys the exchange on
-    xxhash64(shingle) — same topology, 8-byte keys (see dedup.py's
-    hash-vs-portable twin pattern)."""
+    xxhash64(shingle) — same topology, 8-byte keys (the key never leaves
+    the exchange, like dedup.py's band keys)."""
     from pyspark.sql.window import Window as W
 
     d = load_tables(spark, sf_dir)["documents"].filter(F.col("n_chars") > 0)
@@ -1415,6 +1415,7 @@ def text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_bucket = firsts.groupBy(
         F.floor(F.col("first_doc") / 10).cast("long").alias("bucket")
     ).agg(F.count(F.lit(1)).alias("new_tokens"))
+    # Global window on purpose: one row per 10-document bucket, not per token.
     w = W.orderBy("bucket").rowsBetween(W.unboundedPreceding, 0)
     return per_bucket.select(
         "bucket",
@@ -1613,6 +1614,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     top = freq.orderBy(F.col("tf").desc(), F.col("token")).limit(500)
+    # Global window on purpose: ``top`` is at most 500 rows.
     w = Window.orderBy(F.col("tf").desc(), F.col("token"))
     pts = top.select(
         F.round(F.log(F.row_number().over(w).cast("double")), 9)

@@ -1268,6 +1268,7 @@ def events_cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFr
         )
     )
     daily = first_day.groupBy("day").agg(F.count(F.lit(1)).alias("new_users"))
+    # Global window on purpose: one row per calendar day, not per event.
     w = W.orderBy("day").rowsBetween(W.unboundedPreceding, 0)
     return daily.select(
         "day", "new_users", F.sum("new_users").over(w).alias("cum_users")

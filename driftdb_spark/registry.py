@@ -12,8 +12,10 @@ schema, and an order-insensitive value hash — so:
 - LIMIT queries carry unique tie-breaker sort keys so the cut is
   deterministic.
 
-Entries whose semantics are not SQL-expressible (MinHash-LSH dedup, streaming)
-set ``oracle=None`` → the driver records a weaker rows-only check.
+Entries whose semantics are not SQL-expressible (the mapInPandas multimodal
+decoders and perceptual hashes) set ``oracle=None`` and get a weaker
+rows-only check. Hash-based operators key on hashes both engines
+compute identically (md5-derived) so they keep a value-for-value oracle.
 """
 
 from __future__ import annotations

@@ -71,6 +71,27 @@ def test_exact_duplicate_has_identical_signature(spark):
     assert sigs[1] == sigs[2]
 
 
+def test_minhash_lsh_skips_docs_without_shingles(spark, tmp_path):
+    """Documents of fewer than 3 words have no shingles: they used to get
+    an all-p signature, collide with each other in every band, and divide
+    0 by 0 in the Jaccard verify (DIVIDE_BY_ZERO under ANSI). They are
+    dropped before the signature step, and the DuckDB oracle agrees."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from driftdb_spark.registry import QUERIES
+    from tests.oracle import compare
+
+    base = " ".join(f"w{i}" for i in range(60))
+    near = " ".join(f"w{i}" for i in range(59)) + " zz"
+    docs = {"doc_id": [1, 2, 4, 10, 11], "text": ["a b", "c", "", base, near]}
+    pq.write_table(pa.table(docs), str(tmp_path / "documents.parquet"))
+    spec = QUERIES["dedup_minhash_lsh"]
+    df = spec.fn(spark, str(tmp_path))
+    assert [(r.id_a, r.id_b) for r in df.collect()] == [(10, 11)]
+    compare(df, spec.oracle, str(tmp_path))
+
+
 def test_cosine_topk_self_similarity(spark):
     """The most similar vector to a duplicate of v0 must be v0's twin with
     cos ≈ 1."""

@@ -113,30 +113,32 @@ def test_hash_sample_is_narrow(spark):
     assert not re.search(r"^\(\d+\) Exchange", plan, re.MULTILINE), plan
 
 
-def test_portable_bands_flat_aggregation(spark):
-    """The MinHash band builder (r13 flat rewrite; r14 keys bands by one
-    multi-arg xxhash64 instead of an md5 digest chain) must stay ONE
-    hash-aggregated exchange per evaluation: 32 flat min columns over the
-    shingle rows, band keys derived row-locally. No ObjectHashAggregate
-    (the old collect_list regroup) and no explode-by-32 Generate may
-    reappear, and the md5 shingle hash (h32 — the portability contract)
-    must be computed in a projection BELOW the aggregate (once per row),
-    not inlined into the 32 aggregate expressions."""
+def test_minhash_pipeline_flat_signature(spark):
+    """The MinHash candidate pipeline (one fold signature over hashed
+    shingles, xxhash64-keyed band buckets) must stay flat: no
+    ObjectHashAggregate (the old collect_list regroup), no explode-by-32
+    Generate (only the 8-band unpack), and the md5 token hash — the
+    portability contract — computed in ONE projection below the signature
+    fold, never re-derived inside it."""
     import re
 
     from driftdb_spark.catalog import load_tables
-    from driftdb_spark.functions.dedup import _portable_bands, _shingles
+    from driftdb_spark.functions.dedup import lsh_candidate_pairs, minhash_signatures
 
     d = load_tables(spark, SF)["documents"]
-    sh = d.select("doc_id", F.explode(_shingles(F.col("text"))).alias("shingle"))
-    plan = explain_plan(_portable_bands(sh))
+    plan = explain_plan(lsh_candidate_pairs(minhash_signatures(d)))
     assert "ObjectHashAggregate" not in plan
-    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.MULTILINE)) == 1, plan
-    # md5 appears in the 8 row-local band keys and ONCE for h32 — never 32×
-    # inside the min() aggregate expressions (CollapseProject must not have
-    # inlined the non-cheap h32 alias into the aggregate).
-    agg_lines = [l for l in plan.splitlines() if "Functions [32]" in l]
-    assert agg_lines and all("md5" not in l for l in agg_lines), plan
+    lines = plan.splitlines()
+    generators = [
+        next(l for l in lines[i:] if l.startswith("Arguments:"))
+        for i, l in enumerate(lines)
+        if re.fullmatch(r"\(\d+\) Generate", l)
+    ]
+    # every Generate is the 8-band unpack of a finished signature
+    assert generators and all("xxhash64(element_at(sig" in g for g in generators), plan
+    md5_lines = [l for l in lines if "md5(" in l]
+    assert len(md5_lines) == 1, plan
+    assert "aggregate(" not in md5_lines[0], plan
 
 
 def test_above_group_mean_broadcasts_means(spark):
