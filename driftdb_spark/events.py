@@ -9,18 +9,14 @@ Here the event log is an append-only parquet directory (stand-in for a Delta
 table — Delta isn't in this container, but the layout is identical: a
 sequence-ordered append log plus materialized snapshots). Reconstruction is
 declarative DataFrame code, so Catalyst plans it and it scales with
-partitions:
-
-1. last Insert per PK (``max(seq)`` over inserts),
-2. drop PKs whose last SoftDelete is at-or-after their last Insert,
-3. fold Patch payloads *after* the last Insert in sequence order —
-   field-level last-writer-wins merge, exactly the reference's
-   ``apply_event`` merge semantics (table_storage.rs:369-389) — via
-   ``aggregate(array_sort(collect_list(...)))``, bounded by per-key history.
+partitions: state is one ``groupBy("pk")`` aggregation (:func:`fold_events`).
+A PK is live when its last Insert is newer than its last SoftDelete; its row
+folds that Insert and the later Patches in sequence order — the reference's
+field-level ``apply_event`` merge (table_storage.rs:369-389).
 
 Scale notes (100 TB discipline):
-- Reconstruction shuffles once on PK; snapshots bound the replay tail the
-  same way the reference's snapshots do (snapshot.rs:19-43).
+- Reconstruction shuffles once on PK, with no join; snapshots bound the
+  replay tail like the reference's snapshots do (snapshot.rs:19-43).
 - Sequence assignment is the one inherently serial point (same as the
   reference's per-table AtomicU64, table_storage.rs:212-261). The head
   ``base`` is read driver-side with no Spark job (persisted floor, newest
@@ -99,57 +95,63 @@ def _payload_map(df: DataFrame, pk_col: str) -> F.Column:
     )
 
 
+def _last(kind: str) -> F.Column:
+    """Newest sequence of ``kind`` events in the group (null if none)."""
+    return F.max(F.when(F.col("event_type") == kind, F.col("sequence")))
+
+
+def _live(ins: str, dels: str) -> F.Column:
+    """The liveness rule: the last Insert is newer than the last SoftDelete."""
+    return F.col(ins).isNotNull() & (F.col(dels).isNull() | (F.col(dels) < F.col(ins)))
+
+
 def fold_events(ev: DataFrame) -> DataFrame:
     """Reconstruct visible state ``(pk, last_seq, last_ts, row)`` from an
     event frame — the reference's replay loop (table_storage.rs:344-428) as
-    one declarative fold, shared by batch ``EventLog.state_at`` and the
-    streaming micro-batch merge:
+    one ``groupBy("pk")`` aggregation: one exchange on pk, no join. Shared by
+    ``EventLog``, ``Transaction`` and the streaming micro-batch merge.
 
-    1. last Insert per PK; 2. drop PKs whose last SoftDelete is at-or-after
-    it; 3. field-level LWW fold of the Insert + subsequent Patches in
-    sequence order (apply_event merge semantics, table_storage.rs:369-389).
-    One shuffle on pk; a Patch with no preceding Insert is ignored, exactly
-    like the reference's replay of a patch to a missing key.
+    Per key it takes the last Insert's and last SoftDelete's sequence and
+    collects the non-delete events. A live key's row is the field-level LWW
+    fold of its last Insert and the later Patches in sequence order
+    (apply_event merge, table_storage.rs:369-389); a Patch with no preceding
+    Insert is ignored, like the reference's replay of a patch to a missing
+    key. Trade-off: the list holds every non-delete event since the usable
+    snapshot, not only those after the last Insert (older ones are dropped
+    after the aggregation); snapshots bound it.
 
     ``last_ts`` is the max event timestamp that contributed to the key's
     state. Snapshots persist it and replay it as the pseudo-Insert's ``ts``,
     so ``AS OF <timestamp>`` still resolves after a compaction drops the
-    pre-snapshot log (the reference resolves timestamps against the event
-    log the same way — query/executor.rs:194-205 — and its snapshots
-    implicitly keep event timestamps by keeping the events).
+    pre-snapshot log (the reference resolves timestamps against its kept
+    events the same way — query/executor.rs:194-205).
     """
-    ins = (
-        ev.filter(F.col("event_type") == INSERT)
-        .groupBy("pk")
-        .agg(F.max("sequence").alias("ins_seq"))
-    )
-    dels = (
-        ev.filter(F.col("event_type") == SOFT_DELETE)
-        .groupBy("pk")
-        .agg(F.max("sequence").alias("del_seq"))
-    )
-    live = ins.join(dels, "pk", "left").filter(
-        F.col("del_seq").isNull() | (F.col("del_seq") < F.col("ins_seq"))
-    )
-    tail = ev.join(live, "pk").filter(
-        (F.col("sequence") >= F.col("ins_seq"))
-        & (F.col("event_type") != SOFT_DELETE)
-    )
-    # Field-level LWW fold of Insert + Patches in sequence order. The
-    # struct carries a map, so array_sort needs an explicit comparator
+    # The struct carries a map, so array_sort needs an explicit comparator
     # on sequence (maps aren't orderable).
     cmp = (
         "(l, r) -> CASE WHEN l.sequence < r.sequence THEN -1 "
         "WHEN l.sequence > r.sequence THEN 1 ELSE 0 END"
     )
     merge = "(acc, e) -> map_concat(map_filter(acc, (k, v) -> NOT map_contains_key(e.payload, k)), e.payload)"
-    return tail.groupBy("pk").agg(
-        F.max("sequence").alias("last_seq"),
-        F.max("ts").alias("last_ts"),
-        F.expr(
-            f"aggregate(array_sort(collect_list(struct(sequence, payload)), {cmp}), "
-            f"cast(map() as map<string,string>), {merge})"
-        ).alias("row"),
+    kept = F.when(F.col("event_type") != SOFT_DELETE, F.struct("sequence", "ts", "payload"))
+    return (
+        ev.groupBy("pk")
+        .agg(
+            _last(INSERT).alias("ins_seq"),
+            _last(SOFT_DELETE).alias("del_seq"),
+            F.collect_list(kept).alias("evs"),
+        )
+        .filter(_live("ins_seq", "del_seq"))
+        .select("pk", F.filter("evs", lambda e: e.sequence >= F.col("ins_seq")).alias("evs"))
+        .select(
+            "pk",
+            F.array_max("evs.sequence").alias("last_seq"),
+            F.array_max("evs.ts").alias("last_ts"),
+            F.expr(
+                f"aggregate(array_sort(evs, {cmp}), "
+                f"cast(map() as map<string,string>), {merge})"
+            ).alias("row"),
+        )
     )
 
 
@@ -175,6 +177,18 @@ def state_as_events(state: DataFrame) -> DataFrame:
     )
 
 
+def typed_state(st: DataFrame, schema_cols: dict[str, str], pk_col: str) -> DataFrame:
+    """A folded state frame with its row map projected back to typed
+    columns. The PK column comes from the ``pk`` grouping key (equal to
+    ``row[pk_col]``: every payload is built from a frame holding ``pk_col``),
+    so Catalyst pushes a ``WHERE <pk> = K`` below the fold to the scan."""
+    typed = [
+        (F.col("pk") if c == pk_col else F.col("row")[c]).cast(t).alias(c)
+        for c, t in schema_cols.items()
+    ]
+    return st.select("pk", "last_seq", *typed)
+
+
 def pk_conflicts(ev: DataFrame, rows: DataFrame, pk_col: str) -> DataFrame:
     """Keys of ``rows`` an INSERT may not write, found by ONE aggregation
     over the event frame ``ev`` (state as of now: snapshot rows count as
@@ -189,27 +203,16 @@ def pk_conflicts(ev: DataFrame, rows: DataFrame, pk_col: str) -> DataFrame:
         F.lit(None).cast("string").alias("event_type"),
     )
     new = F.col("event_type").isNull()
-
-    def last(kind: str) -> F.Column:
-        return F.max(F.when(F.col("event_type") == kind, F.col("sequence")))
-
     return (
         ev.select("pk", "sequence", "event_type")
         .unionByName(batch)
         .groupBy("pk")
         .agg(
             F.count_if(new).alias("n"),
-            last(INSERT).alias("ins"),
-            last(SOFT_DELETE).alias("del"),
+            _last(INSERT).alias("ins"),
+            _last(SOFT_DELETE).alias("del"),
         )
-        .filter(
-            (F.col("n") > 1)
-            | (
-                (F.col("n") == 1)
-                & F.col("ins").isNotNull()
-                & (F.col("del").isNull() | (F.col("del") < F.col("ins")))
-            )
-        )
+        .filter((F.col("n") > 1) | ((F.col("n") == 1) & _live("ins", "del")))
     )
 
 
@@ -815,12 +818,7 @@ class EventLog:
 
     def state_df(self, schema_cols: dict[str, str], asof: AsOf | None = None) -> DataFrame:
         """State with the row map projected back to typed columns."""
-        st = self.state_at(asof)
-        return st.select(
-            "pk",
-            "last_seq",
-            *[F.col("row").getItem(c).cast(t).alias(c) for c, t in schema_cols.items()],
-        )
+        return typed_state(self.state_at(asof), schema_cols, self.pk_col)
 
     # -- drift history (reference SHOW DRIFT, query/executor.rs:327-354) -----
 

@@ -52,6 +52,7 @@ from driftdb_spark.events import (
     _payload_map,
     fold_events,
     pk_conflicts,
+    typed_state,
 )
 
 
@@ -184,15 +185,7 @@ class Transaction:
         return fold_events(self._replay_events())
 
     def state_df(self, schema_cols: dict[str, str]) -> DataFrame:
-        st = self.state_at()
-        return st.select(
-            "pk",
-            "last_seq",
-            *[
-                F.col("row").getItem(c).cast(t).alias(c)
-                for c, t in schema_cols.items()
-            ],
-        )
+        return typed_state(self.state_at(), schema_cols, self.log.pk_col)
 
     # -- savepoints / rollback ------------------------------------------------
 

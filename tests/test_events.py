@@ -826,7 +826,9 @@ def test_statement_job_budget(spark, tmp_path):
     """Pins the Spark jobs a served single-row statement runs on a few-row
     table. ``last_sequence()`` reads the sequence head driver-side (no
     job); an INSERT is the one-aggregation PK gate, one counts pass and
-    the write; UPDATE/DELETE fold state inside that counts pass."""
+    the write; UPDATE/DELETE fold state (one aggregation on pk) inside
+    that counts pass; a point or AS OF SELECT is the fold and its
+    result."""
     from driftdb_spark.sql_frontend import DriftSession
 
     sess = DriftSession(spark, str(tmp_path / "db"))
@@ -834,17 +836,26 @@ def test_statement_job_budget(spark, tmp_path):
     sess.sql("INSERT INTO t VALUES (1, 'a', 1), (2, 'b', 2), (3, 'c', 3)")
     head, n = _jobs(spark, sess.table("t").last_sequence)
     assert (head, n) == (3, 0)
-    # ceilings: measured 6 / 7 / 7-8 on local[4], where AQE sometimes
-    # runs one more shuffle stage as its own job
+    # ceilings: measured 6 / 5 / 5 on local[4]; AQE may run one more
+    # shuffle stage as its own job
     budget = {
         "INSERT INTO t VALUES (4, 'd', 4)": 6,
-        "UPDATE t SET qty = qty + 10 WHERE id = 1": 8,
-        "DELETE FROM t WHERE id = 2": 8,
+        "UPDATE t SET qty = qty + 10 WHERE id = 1": 5,
+        "DELETE FROM t WHERE id = 2": 5,
     }
     for seq, (stmt, most) in enumerate(budget.items(), start=4):
         end, n = _jobs(spark, lambda: sess.sql(stmt))
         assert end == seq
         assert n <= most, f"{stmt!r} ran {n} Spark jobs, budget {most}"
+    # reads: measured 2 each (the fold's shuffle stage and the result)
+    reads = {
+        "SELECT * FROM t WHERE id = 1": [(1, "a", 11)],
+        "SELECT * FROM t FOR SYSTEM_TIME AS OF @SEQ:4 WHERE id = 2": [(2, "b", 2)],
+    }
+    for stmt, want in reads.items():
+        rows, n = _jobs(spark, lambda: sess.sql(stmt).collect())
+        assert [tuple(r) for r in rows] == want
+        assert n <= 3, f"{stmt!r} ran {n} Spark jobs, budget 3"
     got = {r.id: r.qty for r in sess.sql("SELECT id, qty FROM t").collect()}
     assert got == {1: 11, 3: 3, 4: 4}
 

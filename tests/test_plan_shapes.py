@@ -60,6 +60,52 @@ def test_reconstruction_single_exchange(spark):
     n_exchanges = len(re.findall(r"^\(\d+\) Exchange", plan, re.MULTILINE))
     assert n_exchanges == 1, f"expected 1 pk exchange, saw {n_exchanges}\n{plan}"
 
+
+def _state_log(spark, tmp_path):
+    from driftdb_spark.events import EventLog
+
+    log = EventLog(spark, str(tmp_path / "t"), pk_col="id")
+    schema = "id bigint, name string, qty bigint"
+    log.insert(spark.createDataFrame([(1, "a", 1), (2, "b", 2)], schema))
+    log.patch(spark.createDataFrame([(1, 5)], "id bigint, qty bigint"))
+    log.soft_delete(spark.createDataFrame([(2,)], "id bigint"))
+    return log
+
+
+def test_state_fold_one_exchange_no_join(spark, tmp_path):
+    """``EventLog.state_at`` is one aggregation on pk: exactly one
+    ``Exchange hashpartitioning(pk…)`` and no join."""
+    import re
+
+    plan = explain_plan(_state_log(spark, tmp_path).state_at())
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.MULTILINE)) == 1, plan
+    assert len(re.findall(r"hashpartitioning\(pk#", plan)) == 1, plan
+    assert "Join" not in plan, plan
+
+
+def test_state_df_pk_predicate_below_fold(spark, tmp_path):
+    """``WHERE <pk> = K`` on ``state_df`` is a predicate on the fold's
+    grouping key: it runs on the scan side, below every aggregate."""
+    import re
+
+    log = _state_log(spark, tmp_path)
+    cols = {"id": "bigint", "name": "string", "qty": "bigint"}
+    df = log.state_df(cols).filter("id = 1")
+    plan = explain_plan(df)
+    # formatted plans number operators bottom-up from the scan
+    nodes = re.findall(r"^\((\d+)\) (\w+)", plan, re.MULTILINE)
+    first_agg = min(int(i) for i, op in nodes if op.endswith("Aggregate"))
+    below = [
+        int(i)
+        for i, cond in re.findall(
+            r"^\((\d+)\) Filter\n(?:.*\n)*?Condition : (.*)$", plan, re.MULTILINE
+        )
+        if re.search(r"cast\(pk#\d+ as bigint\) = 1", cond)
+    ]
+    assert below and min(below) < first_agg, plan
+    assert [tuple(r)[2:] for r in df.collect()] == [(1, "a", 5)]
+
+
 def test_topk_uses_window_group_limit(spark):
     """Rank-filter top-k must compile to WindowGroupLimit (per-partition
     k-row pre-pruning) rather than ranking every row then filtering."""
