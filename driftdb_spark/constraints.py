@@ -28,6 +28,7 @@ projected, shuffle-pruned key set — never a driver-side row loop.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -218,18 +219,19 @@ def validate_existing(
 def validate_update(
     table: str,
     cons: TableConstraints,
-    state: DataFrame,
-    condition: str,
-    assignments: dict[str, str],
-    schema_cols: dict[str, str],
+    assigned: Iterable[str],
+    post: DataFrame,
+    survivors: DataFrame,
 ) -> None:
-    """Constraint gate for UPDATE: evaluate the post-update rows (old row
-    with assignments applied, exactly the engine's own Patch semantics)
-    and validate NOT NULL / CHECK on them; UNIQUE keys that involve an
-    assigned column are checked against the *survivors* (rows the
-    condition does not touch) and within the updated set. Runs before the
-    Patch events stage, so a violation leaves state untouched."""
-    touched = set(assignments)
+    """Constraint gate for UPDATE on its post-image ``post`` (the matched
+    rows with the assignments applied, exactly the engine's own Patch
+    semantics): NOT NULL / CHECK on the post-image; UNIQUE keys that
+    involve an assigned column against ``survivors`` (the rows the
+    statement leaves alone) and within the updated set. Runs before the
+    Patch events stage, so a violation leaves state untouched; ``post``
+    and ``survivors`` stay lazy, so a constraint the assignments cannot
+    break runs no job."""
+    touched = set(assigned)
     narrowed = TableConstraints(
         # A UNIQUE/NOT NULL constraint can only break if an assigned
         # column participates; CHECK expressions are not column-parsed,
@@ -238,17 +240,4 @@ def validate_update(
         checks=list(cons.checks),
         not_null=[c for c in cons.not_null if c in touched],
     )
-    if narrowed.is_empty():
-        return
-    matching = state.filter(condition)
-    updated = matching.select(
-        *[
-            F.expr(str(assignments[c])).alias(c) if c in assignments else F.col(c)
-            for c in schema_cols
-        ]
-    )
-    check_not_null(table, narrowed, updated)
-    check_checks(table, narrowed, updated)
-    if narrowed.uniques:
-        survivors = state.filter(~F.coalesce(F.expr(condition), F.lit(False)))
-        check_unique_insert(table, narrowed, updated, survivors)
+    validate_insert(table, narrowed, post, survivors)

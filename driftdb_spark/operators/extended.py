@@ -799,7 +799,7 @@ def data_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     primary keys. All the column expectations fold into ONE scan of the
     fact (conditional counts in a single aggregate); the FK orphan check is
     the only join and the PK-duplicate check reuses the orders scan. The
-    same shape backs `EventLog.insert_checked`'s FK RESTRICT enforcement
+    same shape backs `DriftSession.insert_checked`'s FK RESTRICT enforcement
     (sql_frontend.py) — this is the batch-audit form that reports instead
     of rejecting."""
     t = load_tables(spark, sf_dir)

@@ -881,10 +881,7 @@ class DriftSession:
         ):
             from driftdb_spark.transactions import TransactionAborted
 
-            raise TransactionAborted(
-                "current transaction is aborted, commands ignored until "
-                "end of transaction block"
-            )
+            raise TransactionAborted()
         # Read-only replica gate (replication.py, reference replication.rs:
         # replicas serve reads only — the Postgres-standby 25006 refusal).
         # Catches every statement-level mutation, including DDL and
@@ -2299,7 +2296,10 @@ class DriftSession:
             return out
         m = self._UPDATE_RE.match(q)
         if m and m.group(1) in self._tables:
-            log, schema_cols = self._tables[m.group(1)]
+            from pyspark.sql import functions as F
+
+            tname = m.group(1)
+            schema_cols = self._tables[tname][1]
             if _re.search(r"\bSELECT\b", q, _re.IGNORECASE):
                 # WHERE/SET subqueries resolve through temp views, which
                 # statement-scoped registration no longer refreshes as a
@@ -2313,41 +2313,27 @@ class DriftSession:
             for part in _split_top_level(m.group(2)):
                 col, _, expr = part.partition("=")
                 assigns[col.strip()] = expr.strip()
-            upd_cond = self._rls_condition(m.group(1), m.group(3) or "true", "update")
-            tname = m.group(1)
-            post = None
-            if self._returning is not None:
-                from pyspark.sql import functions as F
+            upd_cond = self._rls_condition(tname, m.group(3) or "true", "update")
 
-                # UPDATE ... RETURNING yields the POST-image (PostgreSQL):
-                # old rows with assignments applied, pinned before the
-                # Patch events land.
-                post = self._pin(
-                    self._txn_state_df(tname)
-                    .filter(upd_cond)
-                    .select(
-                        *[
-                            F.expr(str(assigns[c])).alias(c)
-                            if c in assigns
-                            else F.col(c)
-                            for c in schema_cols
-                        ]
-                    )
+            def image():
+                state = self._view(tname)
+                post = state.filter(upd_cond).select(
+                    *[
+                        F.expr(str(assigns[c])).alias(c) if c in assigns else F.col(c)
+                        for c in schema_cols
+                    ]
                 )
-            if self._active_txn is not None:
+                return post, state.filter(~F.coalesce(F.expr(upd_cond), F.lit(False)))
 
-                def _upd():
-                    self._constraint_check_update(tname, upd_cond, assigns)
-                    self._rls_check_update(tname, upd_cond, assigns)
-                    self._active_txn.table(tname).update_where(
-                        schema_cols, upd_cond, assigns
-                    )
+            # UPDATE ... RETURNING yields the POST-image (PostgreSQL),
+            # pinned before the Patch events land.
+            post = self._pin(image()[0]) if self._returning is not None else None
 
-                out = self._txn_stmt(_upd)
-            else:
-                self._constraint_check_update(tname, upd_cond, assigns)
-                self._rls_check_update(tname, upd_cond, assigns)
-                out = log.update_where(schema_cols, upd_cond, assigns)
+            def update():
+                self._update_gate(tname, assigns, image)
+                return self._writer(tname).update_where(schema_cols, upd_cond, assigns)
+
+            out = self._write(update)
             return self._project_returning(post) if post is not None else out
         m = self._DELETE_RE.match(q)
         if m and m.group(1) in self._tables:
@@ -2360,36 +2346,25 @@ class DriftSession:
             del_cond = self._rls_condition(m.group(1), m.group(2) or "true", "delete")
             pre = None
             if self._returning is not None:
-                _dlog, dcols = self._tables[m.group(1)]
                 # DELETE ... RETURNING yields the PRE-image, pinned before
                 # the tombstones land.
                 pre = self._pin(
-                    self._txn_state_df(m.group(1))
+                    self._view(m.group(1))
                     .filter(del_cond)
-                    .select(*dcols)
+                    .select(*self._tables[m.group(1)][1])
                 )
-            if self._active_txn is not None:
-                out = self._txn_stmt(
-                    lambda: self._txn_delete(m.group(1), del_cond)
-                )
-            else:
-                out = self.delete_checked(m.group(1), del_cond)
+            out = self._delete(m.group(1), del_cond)
             return self._project_returning(pre) if pre is not None else out
         m = self._TRUNCATE_RE.match(q)
         if m and m.group(1) in self._tables:
-            log, schema_cols = self._tables[m.group(1)]
-            # TRUNCATE must not bypass RLS: under a restricted context it
-            # routes through the RLS-conditioned DELETE, wiping only rows
-            # the context can see (PostgreSQL instead requires ownership;
-            # conditioning is the stricter row-sound choice here).
-            trunc_cond = self._rls_condition(m.group(1), "true", "delete")
-            if self._active_txn is not None:
-                return self._txn_stmt(
-                    lambda: self._active_txn.table(m.group(1)).delete_where(
-                        schema_cols, trunc_cond
-                    )
-                )
-            return log.delete_where(schema_cols, trunc_cond)
+            # TRUNCATE is an unconditional DELETE and takes its plan: FK
+            # RESTRICT refuses, CASCADE cascades, and under a restricted
+            # context it wipes only rows the context can see (PostgreSQL
+            # instead requires ownership; conditioning is the stricter
+            # row-sound choice here).
+            return self._delete(
+                m.group(1), self._rls_condition(m.group(1), "true", "delete")
+            )
         return None
 
     def _cte_dml(
@@ -2404,8 +2379,11 @@ class DriftSession:
         the first token). Each CTE body evaluates through the ordinary
         query path, is PINNED (materialized), and registers as a
         statement-scoped temp view; the tail then re-dispatches through
-        the existing DML routes, where RETURNING, ON CONFLICT,
-        transactions, triggers, and constraints all compose unchanged.
+        the ordinary DML routes and so through the session's one set of
+        write gates (:meth:`_write`, :meth:`_insert_gate`,
+        :meth:`_update_gate`, the DELETE plan of :meth:`_delete_rows`):
+        RETURNING, ON CONFLICT, transactions, RLS, FKs and constraints
+        apply exactly as to the bare statement.
 
         Pinning gives PostgreSQL's snapshot semantics: every CTE sees the
         table state as of statement start, even when the tail writes the
@@ -2507,10 +2485,16 @@ class DriftSession:
         WHEN NOT MATCHED [AND c] THEN INSERT [(cols)] VALUES (exprs)``
 
         The reference has no MERGE (its upsert surface is ON CONFLICT);
-        this is the Spark-native equivalent of a Delta ``MERGE``. All
-        staged changes publish as ONE atomic event batch through the same
-        buffered-transaction commit the DML paths use, so readers see the
-        whole merge or none of it.
+        this is the Spark-native equivalent of a Delta ``MERGE``. The
+        clauses stage into the open transaction, or into a statement-scoped
+        one that commits when the last clause succeeds
+        (:meth:`_write_atomic`), so the target's changes publish as ONE
+        atomic event batch and readers see the whole merge or none of it.
+        Each clause reads and writes exactly like the plain statement
+        inside BEGIN: INSERT takes :meth:`_insert_gate`, UPDATE
+        :meth:`_update_gate` on the joined post-image, and DELETE the
+        DELETE plan (FK RESTRICT refuses, CASCADE cascades into the same
+        transaction, whose children publish before the target).
 
         Semantics (SQL standard / PostgreSQL 15):
         - clauses apply in declaration order; a matched row is consumed
@@ -2527,7 +2511,6 @@ class DriftSession:
         once, and the atomic batch is the Delta commit analog."""
         from pyspark.sql import functions as F
 
-        from driftdb_spark import constraints as C
         from driftdb_spark.temporal import AsOf
 
         log, schema_cols = self._tables[table]
@@ -2569,134 +2552,96 @@ class DriftSession:
             raise ValueError(
                 "MERGE: a target row matches more than one source row"
             )
-        txn = (
-            self._active_txn.table(table)
-            if self._active_txn is not None
-            else log.begin()
-        )
-        cons = self._constraints.get(table) or C.TableConstraints()
-        consumed = None  # matched pks already claimed by an earlier clause
-        n_changes = 0
-        for is_not_matched, extra, action in clauses:
-            cond = f" WHERE {extra}" if extra else ""
-            au = action.upper()
-            if is_not_matched:
-                if not au.startswith("INSERT"):
-                    raise ValueError("WHEN NOT MATCHED supports INSERT only")
-                mi = _re.match(
-                    r"INSERT\s*(?:\(([^)]*)\))?\s*VALUES\s*\((.+)\)\s*$",
-                    action,
-                    _re.IGNORECASE | _re.DOTALL,
-                )
-                cols = (
-                    [c.strip() for c in mi.group(1).split(",")]
-                    if mi.group(1)
-                    else list(schema_cols)
-                )
-                exprs = _split_top_level(mi.group(2))
-                sel = ", ".join(
-                    f"({e}) AS {c}" for c, e in zip(cols, exprs)
-                )
-                anti = (
-                    f"SELECT {sel} FROM {src_sql} {salias} "
-                    f"WHERE NOT EXISTS (SELECT 1 FROM {table} {talias} "
-                    f"WHERE {on})" + (f" AND ({extra})" if extra else "")
-                )
-                rows = self.spark.sql(anti).select(
-                    *[
-                        F.col(c).cast(schema_cols[c]).alias(c)
-                        for c in cols
-                        if c in schema_cols
-                    ]
-                )
-                self._constraint_check_insert(
-                    table, rows, state_of=lambda _t: txn.state_df(schema_cols)
-                )
-                self._fk_check_rows(table, rows)
-                txn.insert(rows)
-                n_changes += 1
-                continue
-            keys_sql = f"SELECT {talias}.{pk} AS {pk} {base_from}{cond}"
-            keys = self.spark.sql(keys_sql)
-            if consumed is not None:
-                keys = keys.join(consumed, pk, "left_anti")
-            keys = self._pin(keys)
-            consumed = keys if consumed is None else consumed.unionByName(keys)
-            if au == "DELETE":
-                # FK RESTRICT on merge-deletes (cascades are not offered
-                # through MERGE — use DELETE for cascading semantics)
-                for child, child_col, parent, _pcol, action in self._fks:
-                    if parent != table:
-                        continue
-                    clog, ccols = self._tables[child]
-                    referencing = clog.state_df(ccols).join(
-                        keys.select(F.col(pk).cast("string").alias("__dpk")),
-                        F.col(child_col).cast("string") == F.col("__dpk"),
-                        "left_semi",
+
+        def apply() -> None:
+            consumed = None  # matched pks already claimed by an earlier clause
+            for is_not_matched, extra, action in clauses:
+                cond = f" WHERE {extra}" if extra else ""
+                au = action.upper()
+                if is_not_matched:
+                    if not au.startswith("INSERT"):
+                        raise ValueError("WHEN NOT MATCHED supports INSERT only")
+                    mi = _re.match(
+                        r"INSERT\s*(?:\(([^)]*)\))?\s*VALUES\s*\((.+)\)\s*$",
+                        action,
+                        _re.IGNORECASE | _re.DOTALL,
                     )
-                    if not referencing.isEmpty():
-                        raise ValueError(
-                            f"FK {action.upper()}: {child}.{child_col} "
-                            f"references {table}.{pk}; MERGE does not cascade"
-                        )
-                txn.soft_delete(keys)
-                n_changes += 1
-                continue
-            assigns = {}
-            for a in _split_top_level(action[len("UPDATE SET") :]):
-                col, _, expr = a.partition("=")
-                assigns[col.strip()] = expr.strip()
-            if pk in assigns:
-                raise ValueError("MERGE may not assign the primary key")
-            patch_sel = ", ".join(
-                [f"{talias}.{pk} AS {pk}"]
-                + [f"({e}) AS {c}" for c, e in assigns.items()]
-            )
-            patch = self._pin(
-                self.spark.sql(f"SELECT {patch_sel} {base_from}{cond}").join(
-                    keys.select(pk), pk, "left_semi"
-                )
-            )
-            # constraint gate on the post-image (NOT NULL / CHECK on
-            # touched columns; UNIQUE vs rows this merge doesn't touch)
-            narrowed = C.TableConstraints(
-                uniques=[u for u in cons.uniques if set(assigns) & set(u)],
-                checks=list(cons.checks),
-                not_null=[c for c in cons.not_null if c in assigns],
-            )
-            if not narrowed.is_empty():
-                state = txn.state_df(schema_cols)
-                # post-image: patched columns take the patch value
-                post = state.join(
-                    patch.select(
-                        F.col(pk).cast("string").alias("__mpk"),
-                        *[F.col(c).alias(f"__new_{c}") for c in assigns],
-                    ),
-                    state[pk].cast("string") == F.col("__mpk"),
-                ).select(
-                    *[
-                        (
-                            F.col(f"__new_{c}").cast(schema_cols[c])
-                            if c in assigns
-                            else F.col(c)
-                        ).alias(c)
-                        for c in schema_cols
-                    ]
-                )
-                C.check_not_null(table, narrowed, post)
-                C.check_checks(table, narrowed, post)
-                if narrowed.uniques:
-                    survivors = state.join(
-                        keys.select(F.col(pk).cast("string").alias("__kpk")),
-                        state[pk].cast("string") == F.col("__kpk"),
-                        "left_anti",
+                    cols = (
+                        [c.strip() for c in mi.group(1).split(",")]
+                        if mi.group(1)
+                        else list(schema_cols)
                     )
-                    C.check_unique_insert(table, narrowed, post, survivors)
-            txn.patch(patch)
-            n_changes += 1
-        if self._active_txn is not None:
-            return 0  # publishes at COMMIT
-        return txn.commit() if n_changes else 0
+                    exprs = _split_top_level(mi.group(2))
+                    sel = ", ".join(
+                        f"({e}) AS {c}" for c, e in zip(cols, exprs)
+                    )
+                    anti = (
+                        f"SELECT {sel} FROM {src_sql} {salias} "
+                        f"WHERE NOT EXISTS (SELECT 1 FROM {table} {talias} "
+                        f"WHERE {on})" + (f" AND ({extra})" if extra else "")
+                    )
+                    rows = self.spark.sql(anti).select(
+                        *[
+                            F.col(c).cast(schema_cols[c]).alias(c)
+                            for c in cols
+                            if c in schema_cols
+                        ]
+                    )
+                    self._insert_gate(table, rows)
+                    self._writer(table).insert(rows)
+                    continue
+                keys_sql = f"SELECT {talias}.{pk} AS {pk} {base_from}{cond}"
+                keys = self.spark.sql(keys_sql)
+                if consumed is not None:
+                    keys = keys.join(consumed, pk, "left_anti")
+                keys = self._pin(keys)
+                consumed = keys if consumed is None else consumed.unionByName(keys)
+                if au == "DELETE":
+                    self._delete_rows(
+                        table, self._view(table).join(keys, pk, "left_semi")
+                    )
+                    continue
+                assigns = {}
+                for a in _split_top_level(action[len("UPDATE SET") :]):
+                    col, _, expr = a.partition("=")
+                    assigns[col.strip()] = expr.strip()
+                if pk in assigns:
+                    raise ValueError("MERGE may not assign the primary key")
+                patch_sel = ", ".join(
+                    [f"{talias}.{pk} AS {pk}"]
+                    + [f"({e}) AS {c}" for c, e in assigns.items()]
+                )
+                patch = self._pin(
+                    self.spark.sql(f"SELECT {patch_sel} {base_from}{cond}").join(
+                        keys.select(pk), pk, "left_semi"
+                    )
+                )
+
+                def image():
+                    # post-image: the patched rows with the patch values
+                    state = self._view(table)
+                    post = state.join(
+                        patch.select(
+                            F.col(pk).cast("string").alias("__mpk"),
+                            *[F.col(c).alias(f"__new_{c}") for c in assigns],
+                        ),
+                        state["pk"] == F.col("__mpk"),
+                    ).select(
+                        *[
+                            (
+                                F.col(f"__new_{c}").cast(schema_cols[c])
+                                if c in assigns
+                                else F.col(c)
+                            ).alias(c)
+                            for c in schema_cols
+                        ]
+                    )
+                    return post, state.join(keys, pk, "left_anti")
+
+                self._update_gate(table, assigns, image)
+                self._writer(table).patch(patch)
+
+        return self._write_atomic(table, apply)
 
     def _imv_reg(self):
         """The lazily-built incremental-MV registry."""
@@ -2780,81 +2725,104 @@ class DriftSession:
         self._save_catalog()
         return 0
 
-    def _constraint_check_insert(
-        self, table: str, rows: DataFrame, state_of=None
+    def _insert_gate(
+        self,
+        table: str,
+        rows: DataFrame,
+        upsert: bool = False,
+        proposed: DataFrame | None = None,
     ) -> None:
-        """UNIQUE/CHECK/NOT NULL gate for an INSERT batch (reference
-        constraints.rs validation before apply). ``state_of`` lets the
-        transaction path validate against its own committed ∪ buffer
-        view; violations inside a txn abort it via ``_txn_stmt``."""
+        """Gate for rows a statement is about to insert (INSERT, COPY,
+        MERGE's NOT MATCHED clause), run before anything stages or
+        publishes: RLS WITH CHECK, then the FK parents and the UNIQUE /
+        CHECK / NOT NULL constraints against the statement's view
+        (:meth:`_view`, so a row inserted earlier in the open transaction
+        counts). An ``upsert`` batch (ON CONFLICT DO UPDATE) replaces the
+        live rows with its pks, vacating their UNIQUE keys; ``proposed``
+        (ON CONFLICT DO NOTHING) is the batch before its conflicting rows
+        were dropped, which WITH CHECK reads instead of ``rows``. Each
+        check is skipped when nothing is declared."""
+        from pyspark.sql import functions as F
+
+        from driftdb_spark import constraints as C
+
+        self._rls_check(
+            table,
+            rows if proposed is None else proposed,
+            self.rls.check_predicate(table, self._security),
+        )
+        self._fk_check(table, rows, [fk for fk in self._fks if fk[0] == table])
         cons = self._constraints.get(table)
         if cons is None or cons.is_empty():
             return
-        from driftdb_spark import constraints as C
-
-        state = (state_of or self._txn_state_df)(table)
+        state = self._view(table)
+        if upsert:
+            batch_pks = rows.select(
+                F.col(self._tables[table][0].pk_col).cast("string").alias("_bpk")
+            )
+            state = state.join(batch_pks, state["pk"] == F.col("_bpk"), "left_anti")
         C.validate_insert(table, cons, rows, state)
 
-    def _constraint_check_update(
-        self, table: str, condition: str, assigns: dict[str, str]
-    ) -> None:
-        """Constraint gate for UPDATE: post-update rows must satisfy
-        NOT NULL / CHECK, and assigned UNIQUE keys must not collide with
-        surviving rows. Uses the txn view when one is open."""
-        cons = self._constraints.get(table)
-        if cons is None or cons.is_empty():
-            return
+    def _update_gate(self, table: str, assigns: dict[str, str], image) -> None:
+        """Gate for an UPDATE or a MERGE UPDATE clause, run before the
+        Patch events stage: the post-image must satisfy the constraints an
+        assignment can break (``constraints.validate_update``), the UPDATE
+        WITH CHECK policy, and the FK parents of every assigned FK column.
+        ``image()`` returns ``(post, survivors)`` — the updated rows and
+        the rows the statement leaves alone; it is called only when the
+        table declares a constraint or a policy or FK applies, so an
+        unconstrained table builds no post-image."""
         from driftdb_spark import constraints as C
 
-        _log, schema_cols = self._tables[table]
-        C.validate_update(
-            table, cons, self._txn_state_df(table), condition, assigns, schema_cols
-        )
-
-    def _rls_check_insert(self, table: str, rows: DataFrame) -> None:
-        """WITH CHECK gate (reference row_level_security.rs check side):
-        every inserted row must satisfy the compiled check predicate; a
-        NULL result fails, as in PostgreSQL."""
-        from pyspark.sql import functions as F
-
-        from driftdb_spark.rls import RlsDenied
-
-        pred = self.rls.check_predicate(table, self._security)
-        if pred is None:
-            return
-        violations = rows.filter(~F.coalesce(F.expr(pred), F.lit(False)))
-        if not violations.isEmpty():
-            raise RlsDenied(
-                f"new row violates row-level security policy for table {table}"
-            )
-
-    def _rls_check_update(
-        self, table: str, condition: str, assigns: dict[str, str]
-    ) -> None:
-        """WITH CHECK gate on the UPDATE post-image (reference check_access
-        write side; PostgreSQL applies WITH CHECK to the NEW row of an
-        UPDATE): the old rows with assignments applied must satisfy the
-        compiled check predicate — a restricted user cannot UPDATE a
-        visible row into a state the policy forbids (e.g. reassign its
-        owner). A NULL result fails, as in PostgreSQL."""
-        from pyspark.sql import functions as F
-
-        from driftdb_spark.rls import RlsDenied
-
+        cons = self._constraints.get(table)
         pred = self.rls.check_predicate(table, self._security, "update")
+        fks = [fk for fk in self._fks if fk[0] == table and fk[1] in assigns]
+        if (cons is None or cons.is_empty()) and pred is None and not fks:
+            return
+        post, survivors = image()
+        if cons is not None:
+            C.validate_update(table, cons, assigns, post, survivors)
+        self._rls_check(table, post, pred)
+        self._fk_check(table, post, fks)
+
+    def _rls_check(self, table: str, rows: DataFrame, pred: str | None) -> None:
+        """WITH CHECK gate (reference row_level_security.rs check side;
+        PostgreSQL applies it to the NEW row of an INSERT and an UPDATE):
+        every new row must satisfy the compiled check predicate ``pred``
+        (``None`` = unrestricted). A NULL result fails, as in
+        PostgreSQL."""
         if pred is None:
             return
-        _log, schema_cols = self._tables[table]
-        updated = self._txn_state_df(table).filter(condition).select(
-            *[
-                F.expr(str(assigns[c])).alias(c) if c in assigns else F.col(c)
-                for c in schema_cols
-            ]
-        )
-        if not updated.filter(~F.coalesce(F.expr(pred), F.lit(False))).isEmpty():
+        from pyspark.sql import functions as F
+
+        from driftdb_spark.rls import RlsDenied
+
+        if not rows.filter(~F.coalesce(F.expr(pred), F.lit(False))).isEmpty():
             raise RlsDenied(
                 f"new row violates row-level security policy for table {table}"
             )
+
+    def _fk_check(self, table: str, rows: DataFrame, fks: list) -> None:
+        """FK RESTRICT on written rows: every non-NULL value of each
+        referencing column in ``fks`` must exist in its parent as the
+        statement sees it (:meth:`_view`). One anti-join per FK —
+        distributed, no driver-side row loop (reference validates
+        row-at-a-time, fk.rs:73-150)."""
+        from pyspark.sql import functions as F
+
+        for _child, child_col, parent, parent_col, _action in fks:
+            parent_keys = self._view(parent).select(
+                F.col(parent_col).cast("string").alias("_fk")
+            )
+            orphans = rows.filter(F.col(child_col).isNotNull()).join(
+                parent_keys,
+                F.col(child_col).cast("string") == F.col("_fk"),
+                "left_anti",
+            )
+            if not orphans.isEmpty():
+                raise ValueError(
+                    f"FK violation: {table}.{child_col} -> {parent}.{parent_col}"
+                )
 
     def _rls_condition(self, table: str, condition: str, action: str) -> str:
         """Conjoin the RLS USING predicate into an UPDATE/DELETE WHERE:
@@ -2885,42 +2853,77 @@ class DriftSession:
             sql = _re.sub(f":{k}\\b", lambda _m: lit, sql)
         return self.sql(sql)
 
-    def _txn_stmt(self, thunk) -> int:
-        """Run one buffered-transaction statement; ANY failure poisons the
-        transaction (PostgreSQL / reference abort semantics). Returns 0 —
-        sequences are provisional until COMMIT."""
-        try:
-            thunk()
-        except Exception:
-            self._active_txn.mark_aborted()
-            raise
-        return 0
-
-    def _txn_state_df(self, table: str):
-        """A table's state as THIS transaction sees it: the buffered view
-        for touched tables, committed state otherwise."""
+    def _view(self, table: str):
+        """A table's state as the current statement sees it: the open
+        transaction's view (committed ∪ buffer) for a table it touched,
+        committed state otherwise."""
         log, schema_cols = self._tables[table]
-        if self._active_txn is not None and table in self._active_txn._txns:
-            return self._active_txn._txns[table].state_df(schema_cols)
+        txn = self._active_txn
+        if txn is not None and table in txn._txns:
+            return txn._txns[table].state_df(schema_cols)
         return log.state_df(schema_cols)
 
-    def _txn_delete(self, table: str, condition: str) -> None:
-        """DELETE inside a transaction: FK enforcement against the
-        transaction's own view (committed ∪ buffer), cascades staged
-        children-first into each child table's buffer — nothing publishes
-        until COMMIT, so a violated RESTRICT anywhere aborts with zero
-        events (stronger than the non-txn path, which plans first for the
-        same reason)."""
-        doomed = self._txn_state_df(table).filter(condition)
-        plan: list[tuple[str, DataFrame]] = []
+    def _writer(self, table: str):
+        """Where a statement's events go: the open transaction's buffer
+        for the table, or its EventLog. Both expose ``insert`` /
+        ``patch`` / ``soft_delete`` / ``update_where`` /
+        ``delete_where``."""
+        if self._active_txn is not None:
+            return self._active_txn.table(table)
+        return self._tables[table][0]
+
+    def _write(self, thunk):
+        """Run one DML statement's writes. With no transaction open its
+        EventLog calls publish as they go and it returns their result;
+        inside BEGIN it returns 0 — sequences are provisional until
+        COMMIT. The aborted-transaction refusal and the abort on failure
+        are :meth:`sql`'s for every statement, and
+        :meth:`_as_statement`'s for a direct call."""
+        out = thunk()
+        return 0 if self._active_txn is not None else out
+
+    def _write_atomic(self, table: str, thunk) -> int:
+        """:meth:`_write` for a statement that stages several writes
+        (MERGE). With no transaction open it runs in a statement-scoped
+        one, committed on success and rolled back on any error, so its
+        writes take the same view, writer and gates as inside BEGIN.
+        ``table`` publishes last: every other table here only loses rows
+        to a DELETE cascade, and children-first never shows an orphan,
+        even if a later table's commit fails. Returns ``table``'s last
+        sequence (0 inside BEGIN)."""
+        if self._active_txn is not None:
+            return self._write(thunk)
+        self._active_txn = txn = self.begin()
         try:
-            self._plan_delete(table, doomed, plan, depth=0, state_of=self._txn_state_df)
-            for tbl, rows in reversed(plan):
-                tlog = self._tables[tbl][0]
-                self._active_txn.table(tbl).soft_delete(rows.select(tlog.pk_col))
+            thunk()
+            if table in txn._txns:
+                txn._txns[table] = txn._txns.pop(table)
+            seqs = txn.commit()
+        except BaseException:
+            txn.rollback()
+            raise
         finally:
-            for _tbl, rows in plan:
-                rows.unpersist()
+            self._active_txn = None
+        return seqs.get(table, 0)
+
+    def _as_statement(self, thunk):
+        """Run a direct ``insert_checked`` / ``delete_checked`` call (COPY
+        FROM STDIN) as :meth:`sql` runs a statement: inside BEGIN it is
+        refused once the transaction is aborted, and ANY failure aborts
+        it (PostgreSQL / reference abort semantics,
+        sql_bridge.rs:335-346)."""
+        txn = self._active_txn
+        if txn is None:
+            return thunk()
+        if txn.aborted:
+            from driftdb_spark.transactions import TransactionAborted
+
+            raise TransactionAborted()
+        try:
+            return thunk()
+        except Exception:
+            txn.mark_aborted()
+            raise
 
     def _sql_create_table(self, name: str, body: str) -> int:
         """CREATE TABLE column list → schema registration. PRIMARY KEY may
@@ -3076,41 +3079,17 @@ class DriftSession:
             # re-projects it.
             typed = self._pin(typed)
         if conflict is not None:
-            # PostgreSQL upsert surface. DO NOTHING drops rows whose PK is
-            # already live (anti-join); DO UPDATE is last-writer-wins full
-            # row replacement (an Insert event superseding the old one —
-            # time travel keeps both versions).
+            # PostgreSQL upsert surface. DO NOTHING inserts only the rows
+            # whose PK is not already live (one anti-join, which the FK
+            # and constraint checks see too; WITH CHECK covers the whole
+            # proposed batch, as PostgreSQL's ExecInsert runs it before
+            # the conflict check); DO UPDATE is last-writer-wins full row
+            # replacement (an Insert event superseding the old one — time
+            # travel keeps both versions).
             if self._active_txn is not None:
                 raise ValueError(
                     "ON CONFLICT is not supported inside a transaction block"
                 )
-            self._rls_check_insert(table, typed)
-            self._fk_check_rows(table, typed)
-            cons = self._constraints.get(table)
-            if cons is not None and not cons.is_empty():
-                from driftdb_spark import constraints as C
-
-                state = log.state_df(schema_cols)
-                if conflict == "NOTHING":
-                    # Only genuinely-new rows land; validate exactly those.
-                    will_land = typed.join(
-                        log.state_at().select("pk"),
-                        typed[log.pk_col].cast("string") == F.col("pk"),
-                        "left_anti",
-                    )
-                    C.validate_insert(table, cons, will_land, state)
-                else:
-                    # DO UPDATE replaces same-PK rows, vacating their
-                    # unique slots: validate against the survivors.
-                    C.check_not_null(table, cons, typed)
-                    C.check_checks(table, cons, typed)
-                    batch_pks = typed.select(
-                        F.col(log.pk_col).cast("string").alias("_bpk")
-                    )
-                    survivors = state.join(
-                        batch_pks, state["pk"] == F.col("_bpk"), "left_anti"
-                    )
-                    C.check_unique_insert(table, cons, typed, survivors)
             if conflict == "NOTHING":
                 fresh = typed.join(
                     log.state_at().select("pk"),
@@ -3120,42 +3099,14 @@ class DriftSession:
                 if ret is not None:
                     fresh = self._pin(fresh)  # lazy anti-join would see its
                     # own insert and return nothing
+                self._insert_gate(table, fresh, proposed=typed)
                 out = log.insert(fresh)
                 return self._project_returning(fresh) if ret is not None else out
+            self._insert_gate(table, typed, upsert=True)
             out = log.upsert(typed)
             return self._project_returning(typed) if ret is not None else out
-        if self._active_txn is not None:
-            out = self._txn_stmt(lambda: self._txn_insert(table, typed))
-            return self._project_returning(typed) if ret is not None else out
-        out = self.insert_checked(table, typed)
+        out = self._insert(table, typed)
         return self._project_returning(typed) if ret is not None else out
-
-    def _txn_insert(self, table: str, rows: DataFrame) -> None:
-        """INSERT inside a transaction: FK-RESTRICT validated against the
-        transaction's view of each parent (committed ∪ buffer — a parent
-        row inserted earlier in the txn satisfies the FK, like the
-        reference's buffered execution), then staged with the buffer's own
-        PK-uniqueness check."""
-        from pyspark.sql import functions as F
-
-        self._rls_check_insert(table, rows)
-        for child, child_col, parent, parent_col, _action in self._fks:
-            if child != table:
-                continue
-            parent_keys = self._txn_state_df(parent).select(
-                F.col(parent_col).cast("string").alias("_fk")
-            )
-            orphans = rows.filter(F.col(child_col).isNotNull()).join(
-                parent_keys,
-                F.col(child_col).cast("string") == F.col("_fk"),
-                "left_anti",
-            )
-            if not orphans.isEmpty():
-                raise ValueError(
-                    f"FK violation: {table}.{child_col} -> {parent}.{parent_col}"
-                )
-        self._constraint_check_insert(table, rows)
-        self._active_txn.table(table).insert(rows)
 
     # -- foreign keys ---------------------------------------------------------
 
@@ -3178,72 +3129,68 @@ class DriftSession:
         self._save_catalog()
 
     def insert_checked(self, table: str, rows: DataFrame) -> int:
-        """INSERT with FK-RESTRICT validation: each referencing value must
-        exist in the parent's current state. The check is one anti-join per
-        FK — distributed, no driver-side row loop (reference validates
-        row-at-a-time, fk.rs:73-150)."""
-        log, _ = self._tables[table]
-        self._rls_check_insert(table, rows)
-        self._fk_check_rows(table, rows)
-        self._constraint_check_insert(table, rows)
-        return log.insert(rows)
-
-    def _fk_check_rows(self, table: str, rows: DataFrame) -> None:
-        from pyspark.sql import functions as F
-
-        for child, child_col, parent, parent_col, _action in self._fks:
-            if child != table:
-                continue
-            plog, pcols = self._tables[parent]
-            parent_keys = plog.state_df(pcols).select(
-                F.col(parent_col).cast("string").alias("_fk")
-            )
-            orphans = rows.filter(F.col(child_col).isNotNull()).join(
-                parent_keys,
-                F.col(child_col).cast("string") == F.col("_fk"),
-                "left_anti",
-            )
-            if not orphans.isEmpty():
-                raise ValueError(
-                    f"FK violation: {table}.{child_col} -> {parent}.{parent_col}"
-                )
+        """:meth:`_insert` called directly (COPY FROM STDIN), as one
+        statement of the open transaction (:meth:`_as_statement`)."""
+        return self._as_statement(lambda: self._insert(table, rows))
 
     def delete_checked(self, table: str, condition: str) -> int:
-        """DELETE with FK enforcement on children: RESTRICT refuses if any
-        child row still references a to-be-deleted parent key (anti-join
-        formulation of the reference's RESTRICT walk, fk.rs:73-150);
-        CASCADE (beyond the reference, which parses but never executes it)
-        soft-deletes referencing child rows first, transitively — each
-        level is one semi-join to find the referencing child keys plus one
-        event append, so a cascade over K levels is K distributed jobs, no
-        driver-side row loops."""
-        log, schema_cols = self._tables[table]
-        doomed = log.state_df(schema_cols).filter(condition)
+        """:meth:`_delete` called directly, as one statement of the open
+        transaction (:meth:`_as_statement`)."""
+        return self._as_statement(lambda: self._delete(table, condition))
+
+    def _insert(self, table: str, rows: DataFrame) -> int:
+        """INSERT through the session's insert gate (:meth:`_insert_gate`:
+        RLS WITH CHECK, FK RESTRICT, constraints) into the open
+        transaction or the EventLog — the path of the INSERT statement and
+        of COPY FROM STDIN."""
+
+        def insert():
+            self._insert_gate(table, rows)
+            return self._writer(table).insert(rows)
+
+        return self._write(insert)
+
+    def _delete(self, table: str, condition: str) -> int:
+        """DELETE ... WHERE ``condition`` through the DELETE plan
+        (:meth:`_delete_rows`) — the path of DELETE and TRUNCATE."""
+        return self._write(
+            lambda: self._delete_rows(table, self._view(table).filter(condition))
+        )
+
+    def _delete_rows(self, table: str, doomed: DataFrame):
+        """Delete ``doomed`` (rows of ``table`` as the statement sees it)
+        with FK enforcement on children: RESTRICT refuses if any child row
+        still references a to-be-deleted parent key (anti-join formulation
+        of the reference's RESTRICT walk, fk.rs:73-150); CASCADE (beyond
+        the reference, which parses but never executes it) soft-deletes
+        referencing child rows first, transitively — each level is one
+        semi-join to find the referencing child keys plus one event
+        append, so a cascade over K levels is K distributed jobs, no
+        driver-side row loops. Returns the target's last sequence."""
         # Two phases so the whole delete is all-or-nothing at the FK level:
         # (1) walk the cascade tree, pinning the doomed rows of each level
         # an FK references and raising on ANY violated RESTRICT — before a
-        # single event publishes; (2) apply the soft-deletes
-        # children-first. Keys flow between levels as DataFrames
-        # (semi-joins), never via the driver.
+        # single event stages or publishes; (2) apply the soft-deletes
+        # children-first through the statement's writer. Keys flow between
+        # levels as DataFrames (semi-joins), never via the driver.
         plan: list[tuple[str, DataFrame]] = []
         try:
             self._plan_delete(table, doomed, plan, depth=0)
             last = 0
             for tbl, rows in reversed(plan):
-                tlog = self._tables[tbl][0]
-                last = tlog.soft_delete(rows.select(tlog.pk_col))
+                last = self._writer(tbl).soft_delete(
+                    rows.select(self._tables[tbl][0].pk_col)
+                )
             return last
         finally:
             for _tbl, rows in plan:
                 rows.unpersist()
 
     def _plan_delete(
-        self, table: str, doomed: DataFrame, plan: list, depth: int, state_of=None
+        self, table: str, doomed: DataFrame, plan: list, depth: int
     ) -> None:
         from pyspark.sql import functions as F
 
-        if state_of is None:
-            state_of = lambda t: self._tables[t][0].state_df(self._tables[t][1])  # noqa: E731
         if depth > 20:
             raise ValueError("FK cascade deeper than 20 levels (cycle?)")
         children = [fk for fk in self._fks if fk[2] == table]
@@ -3255,14 +3202,23 @@ class DriftSession:
             doomed.count()
         plan.append((table, doomed))
         for child, child_col, _parent, parent_col, action in children:
-            referencing = state_of(child).join(
+            referencing = self._view(child).join(
                 doomed.select(F.col(parent_col).cast("string").alias("_pk")),
                 F.col(child_col).cast("string") == F.col("_pk"),
                 "left_semi",
             )
+            # A row this statement already deletes (a self-FK, or a
+            # cycle back to a planned table) neither restricts nor
+            # cascades again.
+            child_pk = self._tables[child][0].pk_col
+            for tbl, rows in plan:
+                if tbl == child:
+                    referencing = referencing.join(
+                        rows.select(child_pk), child_pk, "left_anti"
+                    )
             if action == "cascade":
                 if not referencing.isEmpty():
-                    self._plan_delete(child, referencing, plan, depth + 1, state_of)
+                    self._plan_delete(child, referencing, plan, depth + 1)
             elif not referencing.isEmpty():
                 raise ValueError(
                     f"FK RESTRICT: {child}.{child_col} references {table}.{parent_col}"
@@ -3418,7 +3374,6 @@ class DriftSession:
         # staged events) — but ONLY for "current" reads. An explicit
         # temporal target always reads committed history (an uncommitted
         # buffer has no place on a time-travel axis).
-        txn = self._active_txn
         current = (
             asof.sequence is None
             and asof.timestamp is None
@@ -3443,10 +3398,9 @@ class DriftSession:
                     view = view.join(visible, "pk", "left_semi")
                 view.createOrReplaceTempView(name)
                 continue
-            if current and txn is not None and name in txn._txns:
-                view = txn._txns[name].state_df(schema_cols).drop("pk", "last_seq")
-            else:
-                view = log.state_df(schema_cols, asof).drop("pk", "last_seq")
+            view = (
+                self._view(name) if current else log.state_df(schema_cols, asof)
+            ).drop("pk", "last_seq")
             if rls_pred is not None:
                 view = view.filter(rls_pred)
             view.createOrReplaceTempView(name)

@@ -29,6 +29,17 @@ begin-point high-water mark (the reference checks PK uniqueness against
 committed state + the txn buffer the same way, execute_insert_values
 sql_bridge.rs:3505-3661).
 
+Every DML entry point of ``DriftSession`` (INSERT, COPY via
+``insert_checked``, UPDATE, DELETE, TRUNCATE, each MERGE clause) runs the
+same gates inside and outside BEGIN, reading ``DriftSession._view`` (this
+buffer's view for a touched table) and writing through
+``DriftSession._writer`` (a ``Transaction`` here, the ``EventLog``
+outside). ``Transaction`` mirrors the ``EventLog`` write surface
+(``insert`` / ``patch`` / ``soft_delete`` / ``update_where`` /
+``delete_where``) for that reason. A MERGE outside BEGIN runs in a
+statement-scoped ``SessionTransaction``, committed when its last clause
+succeeds and rolled back on any error.
+
 Scope: one transaction spans one table (one EventLog), matching the unit of
 atomic publication. ``DriftSession.begin()`` wraps several per-table
 transactions and commits them in declaration order — each table's commit is
@@ -63,6 +74,13 @@ class TransactionAborted(RuntimeError):
 
     sqlstate = "25P02"  # in_failed_sql_transaction (PostgreSQL's code)
 
+    def __init__(
+        self,
+        msg: str = "current transaction is aborted, commands ignored until "
+        "end of transaction block",
+    ) -> None:
+        super().__init__(msg)
+
 
 class Transaction:
     """Buffered per-table transaction. Use via ``EventLog.begin()``."""
@@ -81,10 +99,7 @@ class Transaction:
         if self._done:
             raise RuntimeError("transaction already finished")
         if self._aborted:
-            raise TransactionAborted(
-                "current transaction is aborted, commands ignored until "
-                "end of transaction block"
-            )
+            raise TransactionAborted()
 
     def _stage(self, batch: DataFrame, event_type: str, payload) -> None:
         if self.log.validate_fn is not None:

@@ -446,6 +446,28 @@ def test_copy_in_and_out(server):
     c.send_msg(b"c", b"")
     msgs = c.read_until_ready()
     assert any(t == "E" for t, _p in msgs)  # duplicate PK rejected
+
+    def copy_in(line):
+        payload = "COPY stock FROM STDIN".encode() + b"\x00"
+        c.sock.sendall(b"Q" + struct.pack("!I", len(payload) + 4) + payload)
+        assert c.read_msg()[0] == "G"
+        c.send_msg(b"d", line)
+        c.send_msg(b"c", b"")
+        return c.read_until_ready()
+
+    # COPY inside BEGIN is one more buffered statement: ROLLBACK drops it,
+    # and an aborted transaction refuses it with 25P02
+    c.query("BEGIN")
+    msgs = copy_in(b"7\tcog\t1\n")
+    assert [p.rstrip(b"\x00").decode() for t, p in msgs if t == "C"] == ["COPY 1"]
+    c.query("ROLLBACK")
+    _c, rows, _t, err = c.query("SELECT COUNT(*) AS n FROM stock")
+    assert err is None and rows == [["3"]]
+    c.query("BEGIN")
+    assert c.query("SELECT nope FROM stock")[3] is not None
+    errs = [p for t, p in copy_in(b"8\trod\t2\n") if t == "E"]
+    assert errs and b"C25P02\x00" in errs[0]
+    c.query("ROLLBACK")
     # -- COPY OUT --
     payload = "COPY (SELECT id, name FROM stock ORDER BY id) TO STDOUT".encode() + b"\x00"
     c.sock.sendall(b"Q" + struct.pack("!I", len(payload) + 4) + payload)

@@ -155,6 +155,41 @@ def test_update_with_check_blocks_owner_reassignment(sess):
     )
 
 
+def test_merge_clauses_apply_with_check(sess):
+    """MERGE's INSERT and UPDATE clauses take the same WITH CHECK gates as
+    the plain statements: a restricted user can neither insert a row the
+    policy forbids nor move a visible row out of it through MERGE."""
+    src = "(SELECT 1 AS id, 'bob' AS owner UNION ALL SELECT 9, 'bob') s"
+    sess.sql("SET SESSION AUTHORIZATION alice")
+    with pytest.raises(RlsDenied):
+        sess.sql(
+            f"MERGE INTO docs t USING {src} ON t.id = s.id "
+            "WHEN NOT MATCHED THEN INSERT (id, owner, body) "
+            "VALUES (s.id, s.owner, 'm')"
+        )
+    with pytest.raises(RlsDenied):
+        sess.sql(
+            f"MERGE INTO docs t USING {src} ON t.id = s.id "
+            "WHEN MATCHED THEN UPDATE SET owner = s.owner"
+        )
+    sess.sql("RESET SESSION AUTHORIZATION")
+    rows = {(r.id, r.owner) for r in sess.sql("SELECT id, owner FROM docs").collect()}
+    assert rows == {(1, "alice"), (2, "bob"), (3, "alice")}
+
+
+def test_on_conflict_do_nothing_checks_every_proposed_row(sess):
+    """WITH CHECK covers an ON CONFLICT DO NOTHING row whose key conflicts
+    too: PostgreSQL runs the INSERT WITH CHECK before the conflict check."""
+    sess.sql("SET SESSION AUTHORIZATION alice")
+    with pytest.raises(RlsDenied):
+        sess.sql("INSERT INTO docs VALUES (2, 'bob', 'x') ON CONFLICT DO NOTHING")
+    sess.sql(
+        "INSERT INTO docs VALUES (1, 'alice', 'x'), (6, 'alice', 'y') "
+        "ON CONFLICT DO NOTHING"
+    )
+    assert _ids(sess) == {1, 3, 6}
+
+
 def test_truncate_respects_rls(sess):
     """TRUNCATE routes through the RLS-conditioned delete: a restricted
     context wipes only rows it can see."""

@@ -371,6 +371,53 @@ def test_create_table_registers_fks_from_sql(spark, tmp_path):
     assert sess.sql("SELECT * FROM emp").count() == 0  # 11 cascaded via mgr
 
 
+def test_fk_enforced_on_update_truncate_and_merge_delete(spark, tmp_path):
+    """UPDATE of a child FK column checks the parent; TRUNCATE and MERGE
+    DELETE take the DELETE plan: RESTRICT refuses, CASCADE cascades."""
+    s = DriftSession(spark, str(tmp_path))
+    s.sql("CREATE TABLE dept (d INT PRIMARY KEY, dname STRING)")
+    s.sql("CREATE TABLE emp (e INT PRIMARY KEY, d INT REFERENCES dept(d))")
+    s.sql(
+        "CREATE TABLE badge (b INT PRIMARY KEY, "
+        "e INT REFERENCES emp(e) ON DELETE CASCADE)"
+    )
+    s.sql("INSERT INTO dept VALUES (1, 'eng'), (2, 'ops')")
+    s.sql("INSERT INTO emp VALUES (10, 1), (11, 1)")
+    s.sql("INSERT INTO badge VALUES (100, 10), (101, 11)")
+    with pytest.raises(ValueError, match="FK violation"):
+        s.sql("UPDATE emp SET d = 99 WHERE e = 10")
+    s.sql("UPDATE emp SET d = 2 WHERE e = 10")
+    with pytest.raises(ValueError, match="FK RESTRICT"):
+        s.sql("TRUNCATE TABLE dept")
+    s.sql(
+        "MERGE INTO emp t USING (SELECT 10 AS e) s ON t.e = s.e "
+        "WHEN MATCHED THEN DELETE"
+    )
+    assert [r.b for r in s.sql("SELECT b FROM badge").collect()] == [101]
+    s.sql("TRUNCATE TABLE emp")
+    assert s.sql("SELECT COUNT(*) AS n FROM badge").first()["n"] == 0
+    assert {(r.d, r.dname) for r in s.sql("SELECT * FROM dept").collect()} == {
+        (1, "eng"),
+        (2, "ops"),
+    }
+    # rows the statement itself deletes neither restrict nor cascade again:
+    # TRUNCATE of a self-referencing table, DELETE around a CASCADE cycle
+    s.sql("CREATE TABLE boss (k INT PRIMARY KEY, mgr INT REFERENCES boss(k))")
+    s.sql("INSERT INTO boss VALUES (1, NULL)")
+    s.sql("INSERT INTO boss VALUES (2, 1)")
+    s.sql("TRUNCATE TABLE boss")
+    s.sql(
+        "CREATE TABLE ring (k INT PRIMARY KEY, "
+        "nxt INT REFERENCES ring(k) ON DELETE CASCADE)"
+    )
+    s.sql("INSERT INTO ring VALUES (1, NULL)")
+    s.sql("INSERT INTO ring VALUES (2, 1), (3, NULL)")
+    s.sql("UPDATE ring SET nxt = 2 WHERE k = 1")
+    s.sql("DELETE FROM ring WHERE k = 1")
+    assert [r.k for r in s.sql("SELECT k FROM ring").collect()] == [3]
+    assert s.sql("SELECT COUNT(*) AS n FROM boss").first()["n"] == 0
+
+
 def test_ctas_on_conflict_drop_column(spark, tmp_path):
     """CTAS infers schema from the query; ON CONFLICT DO NOTHING/UPDATE is
     the PostgreSQL upsert surface; DROP COLUMN deregisters the column while

@@ -189,6 +189,85 @@ def test_txn_delete_cascade_staged_atomically(spark, tmp_path):
     assert {r.d for r in s.sql("SELECT d FROM dept").collect()} == {2}
 
 
+def test_txn_merge_checks_fk_against_buffer(spark, tmp_path):
+    """MERGE inside BEGIN reads FK parents and children through the
+    transaction's view, like INSERT and DELETE do."""
+    s = DriftSession(spark, str(tmp_path))
+    s.sql("CREATE TABLE dept (d int PRIMARY KEY, dname string)")
+    s.sql(
+        "CREATE TABLE emp (e int PRIMARY KEY, d int REFERENCES dept(d), "
+        "ename string)"
+    )
+    s.sql("INSERT INTO dept VALUES (1, 'eng')")
+    s.sql("BEGIN")
+    # a parent inserted earlier in the transaction satisfies the FK
+    s.sql("INSERT INTO dept VALUES (2, 'ops')")
+    s.sql(
+        "MERGE INTO emp t USING (SELECT 10 AS e, 2 AS d) s ON t.e = s.e "
+        "WHEN NOT MATCHED THEN INSERT (e, d, ename) VALUES (s.e, s.d, 'ada')"
+    )
+    # a child inserted earlier in the transaction blocks the RESTRICT
+    s.sql("INSERT INTO emp VALUES (11, 1, 'bob')")
+    with pytest.raises(ValueError, match="FK RESTRICT"):
+        s.sql(
+            "MERGE INTO dept t USING (SELECT 1 AS d) s ON t.d = s.d "
+            "WHEN MATCHED THEN DELETE"
+        )
+    s.sql("ROLLBACK")
+    assert s.sql("SELECT COUNT(*) AS n FROM emp").first()["n"] == 0
+
+
+def test_merge_cascade_publishes_children_first(spark, tmp_path, monkeypatch):
+    """A MERGE outside BEGIN commits its DELETE cascade's children before
+    the target, so a failure between the two commits leaves no orphan."""
+    from driftdb_spark import transactions as T
+
+    s = DriftSession(spark, str(tmp_path))
+    s.sql("CREATE TABLE dept (d int PRIMARY KEY, dname string)")
+    s.sql(
+        "CREATE TABLE emp (e int PRIMARY KEY, "
+        "d int REFERENCES dept(d) ON DELETE CASCADE)"
+    )
+    s.sql("INSERT INTO dept VALUES (1, 'eng'), (2, 'ops')")
+    s.sql("INSERT INTO emp VALUES (10, 1)")
+    commit, calls = T.Transaction.commit, []
+
+    def second_commit_fails(txn):
+        calls.append(txn)
+        if len(calls) == 2:
+            raise RuntimeError("lost the append race")
+        return commit(txn)
+
+    monkeypatch.setattr(T.Transaction, "commit", second_commit_fails)
+    with pytest.raises(RuntimeError, match="append race"):
+        s.sql(
+            "MERGE INTO dept t USING (SELECT 1 AS d UNION ALL SELECT 2) s "
+            "ON t.d = s.d WHEN MATCHED AND t.d = 2 THEN UPDATE SET dname = 'x' "
+            "WHEN MATCHED THEN DELETE"
+        )
+    monkeypatch.undo()
+    orphans = s.sql("SELECT e FROM emp WHERE d NOT IN (SELECT d FROM dept)")
+    assert orphans.count() == 0
+
+
+def test_insert_checked_joins_open_transaction(sess, spark):
+    """``insert_checked`` (the COPY FROM STDIN path) buffers inside BEGIN
+    and is refused inside an aborted transaction."""
+    row = spark.createDataFrame([(7, "cog", 1)], "id int, name string, qty int")
+    sess.sql("BEGIN")
+    sess.insert_checked("products", row)
+    assert _ids(sess) == {1, 2, 3, 7}
+    sess.sql("ROLLBACK")
+    assert _ids(sess) == {1, 2, 3}
+    sess.sql("BEGIN")
+    with pytest.raises(ValueError, match="duplicate primary key"):
+        sess.sql("INSERT INTO products VALUES (1, 'dup', 0)")
+    with pytest.raises(TransactionAborted):
+        sess.insert_checked("products", row)
+    sess.sql("ROLLBACK")
+    assert _ids(sess) == {1, 2, 3}
+
+
 def test_vacuum_checkpoint_analyze(sess, tmp_path):
     # CHECKPOINT TABLE → snapshot on disk
     seq = sess.sql("CHECKPOINT TABLE products")
