@@ -27,36 +27,9 @@ Python bodies are session-scoped (code doesn't belong in a JSON catalog).
 
 from __future__ import annotations
 
-import functools
-import re
 from typing import Callable
 
-_QUERYLIKE = re.compile(r"^\s*(SELECT|WITH|VALUES|EXPLAIN|TABLE)\b", re.IGNORECASE)
-
-
-@functools.lru_cache(maxsize=256)
-def _MARKER(name: str) -> re.Pattern:
-    return re.compile(f":{re.escape(name)}\\b")
-
-
-def _render_literal(v) -> str:
-    """Render one parameter value as a SQL literal for DML statement
-    templates. Strings escape backslashes AND embedded quotes — Spark SQL
-    processes C-style escapes in string literals, so a bare trailing ``\\``
-    would swallow the closing quote (injection vector); everything else
-    renders from a fixed type table — there is no raw passthrough."""
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, (int, float)):
-        return repr(v)
-    from decimal import Decimal
-
-    if isinstance(v, Decimal):
-        return str(v)  # exact decimal literal, never quoted
-    s = str(v).replace("\\", "\\\\").replace("'", "''")
-    return f"'{s}'"
+from driftdb_spark.sqltext import bind_params
 
 
 class ProcedureRegistry:
@@ -109,25 +82,11 @@ class ProcedureRegistry:
             self._check_args(name, params, args)
             result = None
             for stmt in stmts:
-                bound = {k: v for k, v in args.items() if _MARKER(k).search(stmt)}
-                if not bound:
-                    result = self._session.sql(stmt)
-                elif _QUERYLIKE.match(stmt):
-                    # Query statements: Spark's native parameter binding —
-                    # values never touch the SQL text.
-                    result = self._session.sql(stmt, args=bound)
-                else:
-                    # DML routes through the event dispatcher, which hands
-                    # fragments (VALUES tails, WHERE conditions) to
-                    # separate parsers that can't see a binding map — so
-                    # parameters become SQL literals via a typed renderer
-                    # (quotes escaped by doubling), not raw concatenation.
-                    for k, v in bound.items():
-                        lit = _render_literal(v)
-                        # lambda replacement: re.sub would otherwise
-                        # re-process backslashes in the rendered literal.
-                        stmt = _MARKER(k).sub(lambda _m: lit, stmt)
-                    result = self._session.sql(stmt)
+                # a query binds natively (values never touch the SQL
+                # text); DML gets typed, escaped literals — the
+                # dispatcher hands its fragments to parsers that cannot
+                # see a binding map
+                result = self._session.sql(*bind_params(stmt, args))
             return result
         raise KeyError(f"no such procedure: {name}")
 

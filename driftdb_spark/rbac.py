@@ -31,6 +31,8 @@ from __future__ import annotations
 
 import re as _re
 
+from driftdb_spark.sqltext import classify
+
 PERMISSIONS = frozenset(
     {
         "create_table",
@@ -117,14 +119,6 @@ SYSTEM_ROLES: dict[str, frozenset] = {
 # first-token (or two-token) statement classes → required permission
 _VERB_PERMS: list[tuple[str, str]] = [
     (r"SELECT|WITH|VALUES|TABLE\s", "select"),
-    # PostgreSQL: EXPLAIN requires the privileges of the explained
-    # statement (it plans against real catalog/table state even though
-    # this engine never executes an explained DML — sql_frontend.
-    # _sql_explain)
-    (r"EXPLAIN\s+(ANALYZE\s+)?INSERT", "insert"),
-    (r"EXPLAIN\s+(ANALYZE\s+)?(UPDATE|MERGE)", "update"),
-    (r"EXPLAIN\s+(ANALYZE\s+)?DELETE", "delete"),
-    (r"EXPLAIN", "select"),
     (r"ANALYZE", "select"),  # reads data to build stats
     (r"INSERT", "insert"),
     (r"UPDATE", "update"),
@@ -169,83 +163,30 @@ _VERB_PERMS: list[tuple[str, str]] = [
 _VERB_RES = [(_re.compile(rf"^({p})", _re.IGNORECASE), perm) for p, perm in _VERB_PERMS]
 
 
-_EXPLAIN_WITH_RE = _re.compile(
-    r"^EXPLAIN\s+(?:ANALYZE\s+)?(WITH\b.*)$", _re.IGNORECASE | _re.DOTALL
-)
-_WITH_RE = _re.compile(r"^WITH\b", _re.IGNORECASE)
-
-
-_DML_WORD_ANYWHERE = _re.compile(
-    r"\b(INSERT|MERGE|DELETE|UPDATE)\b", _re.IGNORECASE
-)
-_DML_WORD_PERM = {
-    "INSERT": "insert",
-    "MERGE": "update",
-    "UPDATE": "update",
-    "DELETE": "delete",
-}
-
-
-def _normalize_head(sql: str) -> str:
-    """Skip leading comments, and comments between EXPLAIN [ANALYZE] and
-    the inner statement, so verb classification can't be dodged by a
-    comment prefix (``EXPLAIN /*c*/ INSERT …`` must demand 'insert', not
-    fall to the generic EXPLAIN→select rule — r10 ADVICE)."""
-    from driftdb_spark.sql_frontend import _skip_ws_comments
-
-    i = _skip_ws_comments(sql, 0)
-    out = sql if i is None else sql[i:]
-    m = _re.match(r"^EXPLAIN\b", out, _re.IGNORECASE)
-    if not m:
-        return out
-    j = _skip_ws_comments(out, m.end())
-    rest = out if j is None else out[j:]
-    ma = _re.match(r"^ANALYZE\b", rest, _re.IGNORECASE)
-    if ma:
-        k = _skip_ws_comments(rest, ma.end())
-        inner = rest if k is None else rest[k:]
-        return "EXPLAIN ANALYZE " + inner
-    return "EXPLAIN " + rest
+_DML_PERM = {"INSERT": "insert", "MERGE": "update", "UPDATE": "update", "DELETE": "delete"}
 
 
 def statement_permissions(stripped_sql: str) -> list[str]:
-    """Permission(s) a statement requires — normally exactly one. A
-    CTE-prefixed statement (bare or under EXPLAIN) classifies on the verb
-    FOLLOWING the WITH prefix — Spark SQL allows WITH ... INSERT, and
-    PostgreSQL requires the explained statement's privilege. When the
-    prefix doesn't lex, stay CONSERVATIVE: require the permission of
-    EVERY DML verb appearing anywhere OUTSIDE string literals, quoted
-    identifiers, and comments (the real verb is one of them; requiring
+    """Permission(s) a statement requires — normally exactly one, from
+    the verb table on the statement as :func:`sqltext.classify` reads it:
+    past leading comments, EXPLAIN and a WITH prefix (Spark SQL allows
+    WITH ... INSERT). EXPLAIN needs the privilege of the explained DML,
+    as in PostgreSQL (it plans against real catalog/table state even
+    though this engine never executes an explained DML), and 'select'
+    otherwise. When the head does not lex, stay CONSERVATIVE: require the
+    permission of EVERY DML verb appearing OUTSIDE string literals, quoted
+    identifiers and comments (the real verb is one of them; requiring
     only the first would let a role holding that verb's permission
     execute a different write kind; scanning raw text would deny a query
-    merely CONTAINING 'UPDATE' in a literal — r10 ADVICE)."""
-    stripped_sql = _normalize_head(stripped_sql)
-    m = _EXPLAIN_WITH_RE.match(stripped_sql) or _WITH_RE.match(stripped_sql)
-    if m:
-        from driftdb_spark.sql_frontend import (
-            scrub_literals_and_comments,
-            strip_leading_ctes,
-        )
-
-        body = m.group(1) if m.re is _EXPLAIN_WITH_RE else stripped_sql
-        rest = strip_leading_ctes(body)
-        if rest is not None:
-            inner = statement_permissions(rest.strip())
-            if inner:
-                return inner
-        else:
-            found = sorted(
-                {
-                    _DML_WORD_PERM[w.upper()]
-                    for w in _DML_WORD_ANYWHERE.findall(
-                        scrub_literals_and_comments(body)
-                    )
-                }
-            )
-            if found:
-                return found
+    merely CONTAINING 'UPDATE' in a literal)."""
+    head = classify(stripped_sql)
+    dml = head.dml_verbs()
+    if head.opaque and dml:
+        return sorted({_DML_PERM[v] for v in dml})
+    if head.explain and not dml:
+        return ["select"]
     for rx, perm in _VERB_RES:
-        if rx.match(stripped_sql):
+        if rx.match(head.body):
             return [perm]
     return []
 

@@ -55,6 +55,8 @@ import socketserver
 import struct
 import threading
 
+from driftdb_spark.sqltext import QUERY_VERBS, bind_params, classify, number_params
+
 _PROTO_V3 = 196608
 _SSL_REQUEST = 80877103
 _GSSENC_REQUEST = 80877104
@@ -77,7 +79,6 @@ _FORBIDDEN_SET = re.compile(
     r"^(?:SET|RESET)\s+(?:LOCAL\s+)?(?:ROLE\b|SESSION_AUTHORIZATION\b)",
     re.IGNORECASE,
 )
-_PARAM = re.compile(r"\$(\d+)")
 _COPY_IN = re.compile(
     r"^COPY\s+(\w+)\s*(?:\(([^)]*)\))?\s+FROM\s+STDIN"
     r"(?:\s+WITH)?(?:\s*\(\s*FORMAT\s+(\w+)\s*\))?$",
@@ -203,58 +204,27 @@ def _binary_param(raw: bytes | None, oid: int):
 #: set stays cache-resident at this size)
 _WIRE_BATCH_ROWS = 4096
 
-#: Statements that only READ: dispatched WITHOUT the server write lock —
-#: per-connection SparkSessions isolate the temp-view namespace, Spark's
-#: analyzer/optimizer are thread-safe, and storage reads are immutable
-#: parquet snapshots. Everything else (DML, DDL, transactions, CALL,
-#: SQL-level EXECUTE whose body may write) serializes on exec_lock: the
-#: catalog file and the event-log sequence claim are cheap to serialize
-#: and races would surface retryable-but-ugly ConcurrentAppendErrors to
-#: clients. Classification is via :func:`_is_readonly_sql`, not this
-#: regex alone — two verbs need a second look: EXPLAIN is read-only only
-#: when the explained statement is itself query-like (the dispatcher
-#: never executes an explained DML, sql_frontend._sql_explain, but an
-#: EXPLAIN of DML still parses against catalog state and belongs with
-#: the writes), and WITH can prefix DML in Spark SQL
-#: (WITH t AS (...) INSERT INTO ...), so a WITH statement containing a
-#: write verb anywhere takes the lock — false positives merely
-#: serialize, which is the safe direction.
-_READONLY_SQL = re.compile(
-    r"^\s*(SELECT|WITH|VALUES|TABLE|EXPLAIN|SHOW|DESCRIBE|DESC)\b", re.IGNORECASE
-)
-_WRITE_VERB_ANYWHERE = re.compile(
-    r"\b(INSERT|UPDATE|DELETE|MERGE|TRUNCATE|CREATE|DROP|ALTER|REFRESH|GRANT|REVOKE)\b",
-    re.IGNORECASE,
-)
-_EXPLAIN_PREFIX = re.compile(
-    r"^\s*EXPLAIN\s+(?:ANALYZE\s+)?(.*)$", re.IGNORECASE | re.DOTALL
-)
+#: verbs of statements that only READ: dispatched WITHOUT the server
+#: write lock — per-connection SparkSessions isolate the temp-view
+#: namespace, Spark's analyzer/optimizer are thread-safe, and storage
+#: reads are immutable parquet snapshots. Everything else (DML, DDL,
+#: transactions, CALL, SQL-level EXECUTE whose body may write)
+#: serializes on exec_lock: the catalog file and the event-log sequence
+#: claim are cheap to serialize and races would surface
+#: retryable-but-ugly ConcurrentAppendErrors to clients.
+_READ_VERBS = QUERY_VERBS | {"SHOW", "DESCRIBE", "DESC"}
 
 
 def _is_readonly_sql(sql: str) -> bool:
     """True only when the statement provably performs no writes — the
-    lock-free concurrent dispatch gate. When in doubt, returns False:
-    a read that serializes is slow, a write that skips exec_lock breaks
-    the single-writer invariant. WITH-prefixed statements classify
-    structurally (strip the CTE prefix, check the following verb); if
-    the prefix doesn't parse, a write verb ANYWHERE in the text keeps
-    the statement on the locked path — false positives merely
-    serialize, which is the safe direction."""
-    m = _READONLY_SQL.match(sql)
-    if not m:
-        return False
-    verb = m.group(1).upper()
-    if verb == "EXPLAIN":
-        me = _EXPLAIN_PREFIX.match(sql)
-        return bool(me) and _is_readonly_sql(me.group(1))
-    if verb == "WITH":
-        from driftdb_spark.sql_frontend import CTE_DML_RE, strip_leading_ctes
-
-        rest = strip_leading_ctes(sql)
-        if rest is not None:
-            return not CTE_DML_RE.match(rest)
-        return not _WRITE_VERB_ANYWHERE.search(sql)
-    return True
+    lock-free concurrent dispatch gate. The verb is the classifier's
+    (:func:`sqltext.classify`): past leading comments, past EXPLAIN (an
+    EXPLAIN of DML never executes it, but still parses against catalog
+    state and belongs with the writes) and past a WITH prefix (Spark SQL
+    allows WITH t AS (...) INSERT INTO ...). A head that does not lex
+    has no verb and takes the lock: a read that serializes is slow, a
+    write that skips exec_lock breaks the single-writer invariant."""
+    return classify(sql).verb in _READ_VERBS
 
 
 def _parse_session_tz(tz_id: str):
@@ -1112,15 +1082,7 @@ class _Handler(socketserver.BaseRequestHandler):
         # keeps the value verbatim, numeric/bool OIDs convert, and only
         # OID 0 = unspecified falls back to shape inference.
         oids = list(struct.unpack(f"!{n_oids}I", payload[off : off + 4 * n_oids]))
-        sql = query.strip().rstrip(";").strip()
-        n_params = 0
-
-        def _sub(m: re.Match) -> str:
-            nonlocal n_params
-            n_params = max(n_params, int(m.group(1)))
-            return f":p{m.group(1)}"
-
-        sql = _PARAM.sub(_sub, sql)
+        sql, n_params = number_params(query.strip().rstrip(";").strip())
         oids += [0] * (n_params - len(oids))
         self._stmts[name] = (sql, n_params, oids)
         self._send(self._msg(b"1", b""))  # ParseComplete
@@ -1206,7 +1168,7 @@ class _Handler(socketserver.BaseRequestHandler):
         """RowDescription for query-like statements (planning only — a lazy
         DataFrame has a schema without executing), NoData for DML (whose
         execution is deferred to Execute, where side effects belong)."""
-        if _EXPLAIN_PREFIX.match(sql):
+        if classify(sql).explain:
             # every EXPLAIN variant returns exactly one 'plan' column —
             # answer statically so Describe never plans (or, for
             # EXPLAIN ANALYZE, EXECUTES) the inner statement; execution
@@ -1255,17 +1217,8 @@ class _Handler(socketserver.BaseRequestHandler):
             return
         if self._compat_shim(sql):
             return
-        if not _QUERYLIKE.match(sql) and args:
-            # DML routes through the event dispatcher, which hands
-            # fragments (VALUES tails, WHERE conditions) to separate
-            # parsers that can't see a binding map — render parameters
-            # as typed, escaped literals (same policy as procedures).
-            from driftdb_spark.procedures import _render_literal
-
-            for k, v in args.items():
-                lit = _render_literal(v)
-                sql = re.sub(f":{k}\\b", lambda _m: lit, sql)
-            args = None
+        if args:  # a query binds natively, DML gets typed literals
+            sql, args = bind_params(sql, args)
         result = self._dispatch(sql, args)
         self._check_cancelled()
         if isinstance(result, (int, str)):

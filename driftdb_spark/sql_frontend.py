@@ -19,35 +19,19 @@ import re as _re
 from pyspark.sql import DataFrame, SparkSession
 
 from driftdb_spark.events import EventLog
+from driftdb_spark.sqltext import (  # noqa: F401 — the WITH-prefix names are public here
+    CTE_DML_RE,
+    bind_params,
+    classify,
+    extract_clause,
+    number_params,
+    render_literal,
+    search_code,
+    split_leading_ctes,
+    split_top_level,
+    strip_leading_ctes,
+)
 from driftdb_spark.temporal import AsOf, parse_system_time
-
-
-def _split_top_level(s: str) -> list[str]:
-    """Split on commas at paren/quote depth 0 (column defs, SET lists)."""
-    parts, depth, buf, quote = [], 0, [], None
-    for ch in s:
-        if quote:
-            buf.append(ch)
-            if ch == quote:
-                quote = None
-            continue
-        if ch in "'\"":
-            quote = ch
-            buf.append(ch)
-        elif ch == "(":
-            depth += 1
-            buf.append(ch)
-        elif ch == ")":
-            depth -= 1
-            buf.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    if buf:
-        parts.append("".join(buf))
-    return [p for p in (x.strip() for x in parts) if p]
 
 
 class QueryCancelled(RuntimeError):
@@ -82,273 +66,6 @@ class TokenBucket:
             self._tokens -= tokens
             return True
         return False
-
-
-_WITH_HEAD_RE = _re.compile(r"^\s*WITH\b", _re.IGNORECASE)
-_RECURSIVE_RE = _re.compile(r"^RECURSIVE\b", _re.IGNORECASE)
-#: backtick identifiers with `` doubling, matching Spark's lexer — a
-#: valid ``WITH `a``b` AS (...)`` must lex, or the classifier falls to
-#: the conservative path and over-demands DML permissions (r10 ADVICE)
-_CTE_NAME_RE = _re.compile(r"^(\w+|`(?:[^`]|``)+`)", _re.IGNORECASE)
-_AS_RE = _re.compile(r"^AS\b", _re.IGNORECASE)
-
-#: the verbs that make a CTE-prefixed statement DML — shared by the
-#: EXPLAIN dispatcher, the wire server's lock gate, and RBAC so the three
-#: consumers can never drift apart
-CTE_DML_RE = _re.compile(r"^(INSERT|UPDATE|DELETE|MERGE)\b", _re.IGNORECASE)
-
-
-def _skip_ws_comments(sql: str, i: int) -> int | None:
-    """Advance past whitespace and SQL comments (``--`` line, nesting
-    ``/* */`` block). Returns None on an unterminated block comment."""
-    n = len(sql)
-    while i < n:
-        if sql[i].isspace():
-            i += 1
-        elif sql.startswith("--", i):
-            j = sql.find("\n", i)
-            if j == -1:
-                return n
-            i = j + 1
-        elif sql.startswith("/*", i):
-            d, i = 1, i + 2
-            while i < n and d:
-                if sql.startswith("/*", i):
-                    d, i = d + 1, i + 2
-                elif sql.startswith("*/", i):
-                    d, i = d - 1, i + 2
-                else:
-                    i += 1
-            if d:
-                return None
-        else:
-            return i
-    return i
-
-
-def _skip_balanced_paren(sql: str, i: int) -> int | None:
-    """``i`` points just past an opening '('; return the index just past
-    its matching ')', or None if unbalanced. Skips string literals
-    (single/double quoted, '' doubling AND backslash escapes — Spark's
-    parser accepts both), backtick-quoted identifiers, and comments, so
-    parens or quotes inside any of those cannot derail the balance."""
-    depth, n = 1, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in "'\"":
-            q, i = ch, i + 1
-            while i < n:
-                c = sql[i]
-                if c == "\\":
-                    i += 2
-                elif c == q:
-                    if i + 1 < n and sql[i + 1] == q:  # '' doubling
-                        i += 2
-                    else:
-                        i += 1
-                        break
-                else:
-                    i += 1
-            else:
-                return None  # unterminated literal
-            continue
-        if ch == "`":
-            j = sql.find("`", i + 1)
-            if j == -1:
-                return None
-            i = j + 1
-            continue
-        if sql.startswith("--", i) or sql.startswith("/*", i):
-            j = _skip_ws_comments(sql, i)
-            if j is None:
-                return None
-            i = j
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    return None
-
-
-def split_leading_ctes(
-    sql: str,
-) -> tuple[bool, list[tuple[str, str | None, str]], str] | None:
-    """Lex a leading ``WITH [RECURSIVE] name [(cols)] AS (...)
-    [, name AS (...)]*`` prefix into its parts: ``(recursive,
-    [(name, column_list_or_None, body_sql), ...], tail)``. Returns None
-    if ``sql`` is not WITH-prefixed or the prefix doesn't lex (the
-    caller must then stay CONSERVATIVE — treat as possibly-DML). The
-    scan lexes string literals (backslash escapes and '' doubling),
-    backtick identifiers (`` doubling), and line/block comments, so a
-    ``')'`` or DML verb inside any of those cannot derail it.
-
-    Two consumers: STRUCTURAL classification of WITH-prefixed
-    statements (Spark SQL allows CTE-prefixed DML, and a word-search
-    would misfire on literals/aliases that merely contain a DML verb),
-    and EXECUTION of ``WITH … INSERT/UPDATE/DELETE/MERGE`` — the
-    dispatcher materializes each (name, body) as a statement-scoped
-    temp view and re-dispatches the tail (PostgreSQL executes
-    data-modifying CTE statements; the reference's sqlparser cannot
-    even parse them)."""
-    m = _WITH_HEAD_RE.match(sql)
-    if not m:
-        return None
-    pos = _skip_ws_comments(sql, m.end())
-    if pos is None:
-        return None
-    recursive = False
-    mr = _RECURSIVE_RE.match(sql[pos:])
-    if mr:
-        recursive = True
-        pos = _skip_ws_comments(sql, pos + mr.end())
-        if pos is None:
-            return None
-    ctes: list[tuple[str, str | None, str]] = []
-    while True:
-        mc = _CTE_NAME_RE.match(sql[pos:])
-        if not mc:
-            return None  # malformed WITH prefix: caller stays conservative
-        raw = mc.group(1)
-        name = raw[1:-1].replace("``", "`") if raw.startswith("`") else raw
-        pos = _skip_ws_comments(sql, pos + mc.end())
-        if pos is None:
-            return None
-        cols: str | None = None
-        if pos < len(sql) and sql[pos] == "(":  # optional column list
-            nxt = _skip_balanced_paren(sql, pos + 1)
-            if nxt is None:
-                return None
-            cols = sql[pos + 1 : nxt - 1]
-            pos = _skip_ws_comments(sql, nxt)
-            if pos is None:
-                return None
-        ma = _AS_RE.match(sql[pos:])
-        if not ma:
-            return None
-        pos = _skip_ws_comments(sql, pos + ma.end())
-        if pos is None or pos >= len(sql) or sql[pos] != "(":
-            return None
-        body_start = pos + 1
-        pos = _skip_balanced_paren(sql, pos + 1)
-        if pos is None:
-            return None
-        ctes.append((name, cols, sql[body_start : pos - 1]))
-        pos = _skip_ws_comments(sql, pos)
-        if pos is None:
-            return None
-        if pos < len(sql) and sql[pos] == ",":
-            pos = _skip_ws_comments(sql, pos + 1)
-            if pos is None:
-                return None
-            continue
-        rest = sql[pos:]
-        if not rest:
-            return None
-        return recursive, ctes, rest
-
-
-def strip_leading_ctes(sql: str) -> str | None:
-    """The statement body after a leading WITH prefix, or None if not
-    WITH-prefixed / unlexable — see :func:`split_leading_ctes`."""
-    parts = split_leading_ctes(sql)
-    return None if parts is None else parts[2]
-
-
-def scrub_literals_and_comments(sql: str) -> str:
-    """Blank out the CONTENTS of string literals, backtick identifiers,
-    and comments (structure preserved, one space per blanked region) so
-    a word-scan over the result cannot match text inside them. Uses the
-    same lexing rules as :func:`_skip_balanced_paren` (backslash escapes
-    and '' doubling in quotes, `` doubling in backticks, nesting block
-    comments). Consumer: rbac's conservative fallback for unlexable WITH
-    prefixes — pre-r11 it scanned raw text, so a query merely CONTAINING
-    'UPDATE' in a literal was denied for a user lacking update."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in "'\"":
-            q, i = ch, i + 1
-            while i < n:
-                c = sql[i]
-                if c == "\\":
-                    i += 2
-                elif c == q:
-                    if i + 1 < n and sql[i + 1] == q:  # '' doubling
-                        i += 2
-                    else:
-                        i += 1
-                        break
-                else:
-                    i += 1
-            out.append(f"{q} {q}")
-            continue
-        if ch == "`":
-            j = i + 1
-            while j < n:
-                if sql[j] == "`":
-                    if j + 1 < n and sql[j + 1] == "`":
-                        j += 2
-                        continue
-                    j += 1
-                    break
-                j += 1
-            out.append("` `")
-            i = j
-            continue
-        if sql.startswith("--", i) or sql.startswith("/*", i):
-            j = _skip_ws_comments(sql, i)
-            if j is None:  # unterminated block comment: blank to the end
-                j = n
-            out.append(" ")
-            i = j
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-def _extract_clause(text: str, keyword: str) -> str | None:
-    """Extract the balanced-paren expression after ``keyword (`` — e.g.
-    ``USING (f(x) = 1)`` → ``f(x) = 1`` (regex can't balance parens)."""
-    kw = keyword.replace(" ", r"\s+")
-    m = _re.search(rf"\b{kw}\s*\(", text, _re.IGNORECASE)
-    if not m:
-        return None
-    depth, start = 1, m.end()
-    for i in range(start, len(text)):
-        if text[i] == "(":
-            depth += 1
-        elif text[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return text[start:i].strip()
-    raise ValueError(f"unbalanced parentheses after {keyword}")
-
-
-def _split_statements(body: str) -> list[str]:
-    """Split a procedure body on semicolons outside string quotes."""
-    stmts, buf, quote = [], [], None
-    for ch in body:
-        if quote:
-            buf.append(ch)
-            if ch == quote:
-                quote = None
-        elif ch in "'\"":
-            quote = ch
-            buf.append(ch)
-        elif ch == ";":
-            stmts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    if buf:
-        stmts.append("".join(buf))
-    return [s for s in (x.strip() for x in stmts) if s]
 
 
 class DriftSession:
@@ -655,11 +372,10 @@ class DriftSession:
             # Future inserts that omit the column also get the default
             # (reference Default constraint, constraints.rs:30-33).
             from driftdb_spark.constraints import TableConstraints
-            from driftdb_spark.procedures import _render_literal
 
             self._constraints.setdefault(table, TableConstraints()).defaults[
                 col
-            ] = _render_literal(default)
+            ] = render_literal(default)
         schema_cols[col] = coltype
         self._save_catalog()
 
@@ -888,22 +604,13 @@ class DriftSession:
         # maintenance; anything that slips through an indirect path
         # (procedure body, direct EventLog call) is caught again by the
         # per-log read_only check in events.py.
-        if self._read_only:
-            is_write = bool(self._WRITE_VERB_RE.match(stripped))
-            if not is_write and _WITH_HEAD_RE.match(stripped):
-                # WITH-prefixed DML is now executable — classify it the
-                # same way the wire lock gate does (unlexable prefix
-                # stays conservative: the per-log read_only check in
-                # events.py backstops anyway)
-                rest = strip_leading_ctes(stripped)
-                is_write = rest is not None and bool(CTE_DML_RE.match(rest))
-            if is_write:
-                from driftdb_spark.events import ReadOnlyLog
+        if self._read_only and self._writes(stripped):
+            from driftdb_spark.events import ReadOnlyLog
 
-                raise ReadOnlyLog(
-                    f"cannot execute {stripped.split(None, 1)[0].upper()} on a "
-                    "read-only replica (promote it to accept writes)"
-                )
+            raise ReadOnlyLog(
+                f"cannot execute {stripped.split(None, 1)[0].upper()} on a "
+                "read-only replica (promote it to accept writes)"
+            )
         if self._ESCAPED_LITERALS_SET_RE.match(stripped):
             # The engine's statement classifiers (the wire write-lock
             # gate, RBAC, EXPLAIN's DML guard) lex string literals with
@@ -1074,12 +781,23 @@ class DriftSession:
         r"|ansi\.enabled)",
         _re.IGNORECASE,
     )
-    _WRITE_VERB_RE = _re.compile(
-        r"^(INSERT|UPDATE|DELETE|TRUNCATE|MERGE|CREATE|DROP|ALTER|SNAPSHOT"
-        r"|COMPACT|PURGE|VACUUM|CHECKPOINT|REFRESH|GRANT|REVOKE)\b",
-        _re.IGNORECASE,
+    #: verbs a read-only replica refuses: every statement-level mutation,
+    #: DDL and maintenance included
+    _WRITE_VERBS = frozenset(
+        "INSERT UPDATE DELETE TRUNCATE MERGE CREATE DROP ALTER SNAPSHOT "
+        "COMPACT PURGE VACUUM CHECKPOINT REFRESH GRANT REVOKE".split()
     )
-    _EXPLAIN_RE = _re.compile(r"^EXPLAIN\s+(.*)$", _re.IGNORECASE | _re.DOTALL)
+
+    @classmethod
+    def _writes(cls, sql: str) -> bool:
+        """The read-only replica gate: running ``sql`` mutates state.
+        EXPLAIN never does; a head that does not lex writes if a DML verb
+        appears in it outside literals and comments."""
+        head = classify(sql)
+        return not head.explain and (
+            head.verb in cls._WRITE_VERBS or bool(head.dml_verbs())
+        )
+
     _ALTER_RE = _re.compile(
         r"^ALTER\s+TABLE\s+(\w+)\s+ADD\s+COLUMN\s+(\w+)\s+(\w+)"
         r"(?:\s+DEFAULT\s+(.+))?$",
@@ -1433,21 +1151,14 @@ class DriftSession:
             # rewrite to the session's :pN named parameters; declared
             # type lists are accepted and ignored (text-shape inference,
             # like the wire path).
-            body = m.group(2).strip().rstrip(";")
-            n_params = 0
-
-            def _sub(pm):
-                nonlocal n_params
-                n_params = max(n_params, int(pm.group(1)))
-                return f":p{pm.group(1)}"
-
-            body = _re.sub(r"\$(\d+)", _sub, body)
-            self._prepared[m.group(1)] = (body, n_params)
+            self._prepared[m.group(1)] = number_params(
+                m.group(2).strip().rstrip(";")
+            )
             return 0
         m = self._EXECUTE_RE.match(q)
         if m and m.group(1) in self._prepared:
             body, n_params = self._prepared[m.group(1)]
-            exprs = _split_top_level(m.group(2) or "")
+            exprs = split_top_level(m.group(2) or "")
             if len(exprs) != n_params:
                 raise ValueError(
                     f"prepared statement {m.group(1)} expects {n_params} "
@@ -1477,7 +1188,7 @@ class DriftSession:
             body = m.group(3).strip()
             if body.startswith("$$") and body.endswith("$$"):
                 body = body[2:-2]
-            stmts = _split_statements(body)
+            stmts = split_top_level(body, ";")
             self.procedures.create(m.group(1), params, stmts)
             self._save_catalog()
             return 0
@@ -1496,7 +1207,7 @@ class DriftSession:
             )[0]
             if params is None:
                 raise KeyError(f"no such procedure: {name}")
-            exprs = _split_top_level(m.group(2))
+            exprs = split_top_level(m.group(2))
             if len(exprs) != len(params):
                 raise ValueError(
                     f"procedure {name} expects {len(params)} argument(s), "
@@ -1643,8 +1354,8 @@ class DriftSession:
         m = self._CREATE_POLICY_RE.match(q)
         if m:
             name, table, tail = m.group(1), m.group(2), m.group(3)
-            using_expr = _extract_clause(tail, "USING")
-            check_expr = _extract_clause(tail, "WITH CHECK")
+            using_expr = extract_clause(tail, "USING")
+            check_expr = extract_clause(tail, "WITH CHECK")
             am = _re.search(
                 r"\bFOR\s+(SELECT|INSERT|UPDATE|DELETE|ALL)\b", tail, _re.IGNORECASE
             )
@@ -1764,10 +1475,6 @@ class DriftSession:
         _re.IGNORECASE | _re.DOTALL,
     )
 
-    _EXPLAIN_QUERYLIKE_RE = _re.compile(
-        r"^\s*(SELECT|WITH|VALUES|TABLE)\b", _re.IGNORECASE
-    )
-
     def _internal_sql(self, query: str) -> DataFrame:
         """Plan an ENGINE-INITIATED read (EXPLAIN's read-side scan of the
         explained DML) without the statement-level RBAC recheck: the
@@ -1783,7 +1490,7 @@ class DriftSession:
         finally:
             self._rbac_exempt -= 1
 
-    def _sql_explain(self, inner: str):
+    def _sql_explain(self, head):
         """EXPLAIN <statement> → the plan as a one-column frame, NEVER
         executing the statement (PostgreSQL contract: EXPLAIN without
         ANALYZE has no side effects; the reference builds a PlanNode tree
@@ -1812,34 +1519,14 @@ class DriftSession:
         def indent(text: str, pad: str = "   ") -> list[str]:
             return [pad + line for line in text.splitlines()]
 
-        def skip_comments(text: str) -> str:
-            # EXPLAIN /*c*/ SELECT 1 must classify on SELECT, not refuse
-            # (r10 ADVICE): strip leading whitespace/comments before any
-            # verb match; an unterminated comment keeps the raw text so
-            # the error surfaces downstream
-            i = _skip_ws_comments(text, 0)
-            return text if i is None else text[i:]
-
-        body = skip_comments(inner.strip().rstrip(";").strip())
-        analyze = False
-        ma = _re.match(r"^ANALYZE\b\s*(.*)$", body, _re.IGNORECASE | _re.DOTALL)
-        if ma:
-            analyze, body = True, skip_comments(ma.group(1).strip())
-
-        # A WITH-prefixed statement can still be DML in Spark SQL
-        # (WITH t AS (...) INSERT INTO ...): classify STRUCTURALLY by
-        # stripping the CTE prefix and checking the verb that follows —
-        # a word-search would refuse valid queries whose literals or
-        # aliases merely contain a DML verb ('... WHERE status='DELETE'').
-        querylike = bool(self._EXPLAIN_QUERYLIKE_RE.match(body))
-        if querylike and _re.match(r"^\s*WITH\b", body, _re.IGNORECASE):
-            rest = strip_leading_ctes(body)
-            if rest is None or CTE_DML_RE.match(rest):
-                querylike = False  # DML body (or unlexable: stay safe)
-
-        if querylike:
+        # head.query routes a WITH-prefixed statement on the verb after the
+        # CTE prefix (Spark SQL allows WITH t AS (...) INSERT INTO ...), so
+        # a literal that merely contains a DML verb stays a query, and a
+        # prefix that does not lex is not one
+        body = head.text
+        if head.query:
             df = self.sql(body)
-            if analyze:
+            if head.analyze:
                 lines = []
                 for node in explain_analyze(df):
                     metrics = ", ".join(
@@ -1853,7 +1540,7 @@ class DriftSession:
                 return frame(lines)
             return frame(explain_plan(df).splitlines())
 
-        if analyze:
+        if head.analyze:
             raise ValueError(
                 "EXPLAIN ANALYZE of a DML/utility statement is not supported: "
                 "this engine never executes a statement from EXPLAIN "
@@ -1869,31 +1556,25 @@ class DriftSession:
         # executes the statement for real.
         header: list[str] = []
         cte_names: list[str] = []
-        if _WITH_HEAD_RE.match(body):
-            parts = split_leading_ctes(body)
-            if parts is not None and CTE_DML_RE.match(parts[2]):
-                recursive, cte_defs, tail = parts
-                for name, ccols, cbody in cte_defs:
-                    header.append(f"Cte [{name}]")
-                    df = self._internal_sql(
-                        f"WITH RECURSIVE {name} AS ({cbody}) "
-                        f"SELECT * FROM {name}"
-                        if recursive
-                        else cbody
-                    )
-                    if ccols:
-                        df = df.toDF(
-                            *[c.strip().strip("`") for c in ccols.split(",")]
-                        )
-                    df.createOrReplaceTempView(name)
-                    cte_names.append(name)
-                body = tail
+        if head.ctes is not None and head.dml_verbs():
+            recursive, cte_defs, tail = head.ctes
+            for name, ccols, cbody in cte_defs:
+                header.append(f"Cte [{name}]")
+                df = self._internal_sql(
+                    f"WITH RECURSIVE {name} AS ({cbody}) "
+                    f"SELECT * FROM {name}"
+                    if recursive
+                    else cbody
+                )
+                if ccols:
+                    df = df.toDF(*[c.strip("`") for c in split_top_level(ccols)])
+                df.createOrReplaceTempView(name)
+                cte_names.append(name)
+            body = tail
         try:
             mr = (
-                self._RETURNING_RE.search(body)
-                if _re.match(
-                    r"^\s*(INSERT|UPDATE|DELETE)\b", body, _re.IGNORECASE
-                )
+                search_code(self._RETURNING_RE, body)
+                if head.verb in ("INSERT", "UPDATE", "DELETE")
                 else None
             )
             if mr:
@@ -1995,22 +1676,21 @@ class DriftSession:
         # statement-scoped temp view, and re-dispatch the tail through
         # the ordinary DML routes (r10 VERDICT ask #2). WITH…SELECT
         # passes through untouched (None → Catalyst handles it natively).
-        if _WITH_HEAD_RE.match(q):
-            parts = split_leading_ctes(q)
-            if parts is not None and CTE_DML_RE.match(parts[2]):
-                recursive, ctes, tail = parts
-                return self._cte_dml(recursive, ctes, tail)
-            if parts is None and CTE_DML_RE.search(
-                scrub_literals_and_comments(q)
-            ):
-                # unlexable prefix that really does carry a DML verb
-                # outside literals/comments: refuse clearly (SQLSTATE
-                # 0A000) instead of letting Catalyst's RDD error surface
-                raise ValueError(
-                    "CTE-prefixed DML could not be parsed (unsupported "
-                    "WITH-prefix shape); simplify the WITH clause "
-                    "[SQLSTATE 0A000]"
-                )
+        head = classify(q)
+        if head.explain:
+            return self._sql_explain(head)
+        if head.ctes is not None and head.dml_verbs():
+            return self._cte_dml(*head.ctes)
+        if head.verb == "WITH" and head.dml_verbs():
+            # a WITH prefix that does not lex but carries a DML verb
+            # outside literals/comments: refuse clearly (SQLSTATE 0A000)
+            # instead of letting Catalyst's RDD error surface
+            raise ValueError(
+                "CTE-prefixed DML could not be parsed (unsupported "
+                "WITH-prefix shape); simplify the WITH clause "
+                "[SQLSTATE 0A000]"
+            )
+        q = head.text
         # Peel a trailing RETURNING clause off DML (PostgreSQL surface):
         # the statement executes normally, then the affected rows project
         # through the requested expressions — INSERT returns the inserted
@@ -2018,19 +1698,19 @@ class DriftSession:
         # pre-image, each pinned BEFORE the write so the returned frame
         # cannot observe its own mutation.
         self._returning = None
-        if _re.match(r"^\s*(INSERT|UPDATE|DELETE)\b", q, _re.IGNORECASE):
-            mr = self._RETURNING_RE.search(q)
-            if mr:
-                self._returning = mr.group(1).strip()
-                q = q[: mr.start()].strip()
+        mr = (
+            search_code(self._RETURNING_RE, q)
+            if head.verb in ("INSERT", "UPDATE", "DELETE")
+            else None
+        )
+        if mr:
+            self._returning = mr.group(1).strip()
+            q = q[: mr.start()].strip()
         m = self._MERGE_RE.match(q)
         if m and m.group(1) in self._tables:
             return self._sql_merge(
                 m.group(1), m.group(2), m.group(3), m.group(4), m.group(5)
             )
-        m = self._EXPLAIN_RE.match(q)
-        if m:
-            return self._sql_explain(m.group(1).strip())
         m = self._CREATE_IMVIEW_RE.match(q)
         if m and m.group(2) in self._tables:
             # CREATE INCREMENTAL MATERIALIZED VIEW v ON t GROUP BY (cols)
@@ -2202,7 +1882,7 @@ class DriftSession:
                     unique_cols=[c.strip() for c in m.group(4).split(",")],
                 )
             return self._add_constraint_validated(
-                table, cname, check_expr=_extract_clause(m.group(3), "CHECK")
+                table, cname, check_expr=extract_clause(m.group(3), "CHECK")
             )
         m = self._DROP_CONSTRAINT_RE.match(q)
         if m and m.group(1) in self._tables:
@@ -2275,15 +1955,16 @@ class DriftSession:
         if m:
             # CREATE TABLE AS SELECT: schema inferred from the query
             # result, PK defaults to the first column (the reference's
-            # CREATE TABLE default), rows land through the normal
-            # PK-checked insert.
+            # CREATE TABLE default), rows land through the insert gate
+            # and the statement's writer (inside BEGIN the table is
+            # created at once, its rows commit or roll back).
             name, select_sql = m.group(1), m.group(2)
             if name in self._tables:
                 raise ValueError(f"table {name} already exists")
             df = self.sql(select_sql)
             cols = {f.name: f.dataType.simpleString() for f in df.schema.fields}
             self.create_table(name, cols)
-            return self._tables[name][0].insert(df)
+            return self._insert(name, df)
         conflict = None
         mc = self._ON_CONFLICT_RE.search(q)
         if mc:
@@ -2310,7 +1991,7 @@ class DriftSession:
                 self._register_states(AsOf.now(), scope)
                 self._register_views(AsOf.now(), scope)
             assigns = {}
-            for part in _split_top_level(m.group(2)):
+            for part in split_top_level(m.group(2)):
                 col, _, expr = part.partition("=")
                 assigns[col.strip()] = expr.strip()
             upd_cond = self._rls_condition(tname, m.group(3) or "true", "update")
@@ -2448,9 +2129,7 @@ class DriftSession:
                         "non-query statement"
                     )
                 if cols:
-                    df = df.toDF(
-                        *[c.strip().strip("`") for c in cols.split(",")]
-                    )
+                    df = df.toDF(*[c.strip("`") for c in split_top_level(cols)])
                 df = self._pin(df)
                 pinned.append(df)
                 df.createOrReplaceTempView(name)
@@ -2571,7 +2250,7 @@ class DriftSession:
                         if mi.group(1)
                         else list(schema_cols)
                     )
-                    exprs = _split_top_level(mi.group(2))
+                    exprs = split_top_level(mi.group(2))
                     sel = ", ".join(
                         f"({e}) AS {c}" for c, e in zip(cols, exprs)
                     )
@@ -2602,7 +2281,7 @@ class DriftSession:
                     )
                     continue
                 assigns = {}
-                for a in _split_top_level(action[len("UPDATE SET") :]):
+                for a in split_top_level(action[len("UPDATE SET") :]):
                     col, _, expr = a.partition("=")
                     assigns[col.strip()] = expr.strip()
                 if pk in assigns:
@@ -2684,7 +2363,7 @@ class DriftSession:
         """Project the affected-rows frame through the RETURNING list."""
         from pyspark.sql import functions as F
 
-        exprs = _split_top_level(self._returning)
+        exprs = split_top_level(self._returning)
         if exprs == ["*"]:
             return df
         return df.select(*[F.expr(e) for e in exprs])
@@ -2767,23 +2446,40 @@ class DriftSession:
         """Gate for an UPDATE or a MERGE UPDATE clause, run before the
         Patch events stage: the post-image must satisfy the constraints an
         assignment can break (``constraints.validate_update``), the UPDATE
-        WITH CHECK policy, and the FK parents of every assigned FK column.
-        ``image()`` returns ``(post, survivors)`` — the updated rows and
-        the rows the statement leaves alone; it is called only when the
-        table declares a constraint or a policy or FK applies, so an
-        unconstrained table builds no post-image."""
+        WITH CHECK policy, and the FK parents of every assigned FK column;
+        and an assigned column that an FK references must not take away a
+        value a child row still references (FK RESTRICT, PostgreSQL's
+        default ON UPDATE NO ACTION). ``image()`` returns ``(post,
+        survivors)`` — the updated rows and the rows the statement leaves
+        alone; it is called only when the table declares a constraint or
+        a policy or FK applies, so an unconstrained table builds no
+        post-image."""
+        from pyspark.sql import functions as F
+
         from driftdb_spark import constraints as C
 
         cons = self._constraints.get(table)
         pred = self.rls.check_predicate(table, self._security, "update")
         fks = [fk for fk in self._fks if fk[0] == table and fk[1] in assigns]
-        if (cons is None or cons.is_empty()) and pred is None and not fks:
+        refs = [fk for fk in self._fks if fk[2] == table and fk[3] in assigns]
+        if (cons is None or cons.is_empty()) and pred is None and not (fks or refs):
             return
         post, survivors = image()
         if cons is not None:
             C.validate_update(table, cons, assigns, post, survivors)
         self._rls_check(table, post, pred)
         self._fk_check(table, post, fks)
+        for child, child_col, _parent, parent_col, _action in refs:
+            key = F.col(parent_col).cast("string").alias("_pk")
+            kept = post.select(key).unionByName(survivors.select(key))
+            gone = self._view(table).select(key).join(kept, "_pk", "left_anti")
+            referencing = self._view(child).join(
+                gone, F.col(child_col).cast("string") == F.col("_pk"), "left_semi"
+            )
+            if not referencing.isEmpty():
+                raise ValueError(
+                    f"FK RESTRICT: {child}.{child_col} references {table}.{parent_col}"
+                )
 
     def _rls_check(self, table: str, rows: DataFrame, pred: str | None) -> None:
         """WITH CHECK gate (reference row_level_security.rs check side;
@@ -2832,26 +2528,10 @@ class DriftSession:
             return condition
         return f"({condition}) AND ({pred})"
 
-    _QUERYLIKE_RE = _re.compile(
-        r"^\s*(SELECT|WITH|VALUES|EXPLAIN|TABLE)\b", _re.IGNORECASE
-    )
-
     def _run_with_params(self, sql: str, vals: list):
-        """Execute a ``:pN``-parameterized statement with bound values —
-        query-like statements use Spark's native parameter binding (values
-        never touch the SQL text); DML routes through the event dispatcher,
-        whose fragment parsers can't see a binding map, so parameters
-        render as typed escaped literals (same policy as procedures and
-        the wire server's Execute)."""
-        args = {f"p{i + 1}": v for i, v in enumerate(vals)}
-        if self._QUERYLIKE_RE.match(sql):
-            return self.sql(sql, args) if args else self.sql(sql)
-        from driftdb_spark.procedures import _render_literal
-
-        for k, v in args.items():
-            lit = _render_literal(v)
-            sql = _re.sub(f":{k}\\b", lambda _m: lit, sql)
-        return self.sql(sql)
+        """Execute a ``:pN``-parameterized statement (EXECUTE of a PREPARE)
+        with bound values — see :func:`sqltext.bind_params`."""
+        return self.sql(*bind_params(sql, {f"p{i + 1}": v for i, v in enumerate(vals)}))
 
     def _view(self, table: str):
         """A table's state as the current statement sees it: the open
@@ -2945,7 +2625,7 @@ class DriftSession:
         pk = None
         fks: list[tuple[str, str, str, str]] = []
         cons = TableConstraints()
-        for part in _split_top_level(body):
+        for part in split_top_level(body):
             part = part.strip()
             named = re.match(r"CONSTRAINT\s+(\w+)\s+(.*)$", part, re.IGNORECASE | re.DOTALL)
             cname = None
@@ -2976,7 +2656,7 @@ class DriftSession:
                 cons.checks.append(
                     (
                         cname or f"{name}_check_{len(cons.checks) + 1}",
-                        _extract_clause(part, "CHECK"),
+                        extract_clause(part, "CHECK"),
                     )
                 )
                 continue
@@ -2999,7 +2679,7 @@ class DriftSession:
                     cons.add_unique([col])
                 if re.search(r"\bCHECK\s*\(", part, re.IGNORECASE):
                     cons.checks.append(
-                        (f"{name}_{col}_check", _extract_clause(part, "CHECK"))
+                        (f"{name}_{col}_check", extract_clause(part, "CHECK"))
                     )
                 dm = re.search(
                     # literal ('..', number, TRUE) or a zero/one-arg call
@@ -3245,21 +2925,23 @@ class DriftSession:
         over current state plus a global row_number on the batch. Contiguity
         requires the single-partition window; at 100 TB you'd trade
         contiguity for ``monotonically_increasing_id``. Batches are the unit
-        of write here, so the serial window only sees the new rows."""
+        of write here, so the serial window only sees the new rows. The
+        base reads the statement's view and the rows go through
+        :meth:`insert_checked`, so inside BEGIN they stay in the
+        transaction and RLS, FKs and constraints apply."""
         from pyspark.sql import functions as F
         from pyspark.sql.window import Window as W
 
-        log, schema_cols = self._tables[table]
-        state = log.state_df(schema_cols)
+        pk = self._tables[table][0].pk_col
         base = (
-            state.agg(F.max(F.col(log.pk_col).cast("long")).alias("m")).collect()[0].m
+            self._view(table).agg(F.max(F.col(pk).cast("long")).alias("m")).first().m
             or 0
         )
         w = W.orderBy(F.monotonically_increasing_id())
         with_pk = rows.withColumn(
-            log.pk_col, (F.lit(base) + F.row_number().over(w)).cast("long")
+            pk, (F.lit(base) + F.row_number().over(w)).cast("long")
         )
-        return log.insert(with_pk)
+        return self.insert_checked(table, with_pk)
 
     def begin(self):
         """BEGIN — a buffered multi-table transaction (see

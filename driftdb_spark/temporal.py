@@ -19,6 +19,8 @@ from datetime import datetime
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from driftdb_spark.sqltext import search_code
+
 # FOR SYSTEM_TIME AS OF @SEQ:N | 'ts' | CURRENT_TIMESTAMP ; FOR SYSTEM_TIME ALL ;
 # FOR SYSTEM_TIME BETWEEN a AND b (closed) ; FOR SYSTEM_TIME FROM a TO b
 # (half-open [a, b) — SQL:2011). The reference parses BETWEEN and FROM…TO
@@ -50,8 +52,11 @@ class AsOf:
 
 
 def parse_system_time(sql: str) -> tuple[str, AsOf]:
-    """Peel a FOR SYSTEM_TIME clause from SQL text; returns (clean_sql, AsOf)."""
-    m = _SYSTEM_TIME_RE.search(sql)
+    """Peel a FOR SYSTEM_TIME clause from SQL text; returns (clean_sql, AsOf).
+    Only a clause in code counts: the same words in a literal or comment
+    are text, and text that does not lex keeps its clause, so Spark's
+    parser refuses it."""
+    m = search_code(_SYSTEM_TIME_RE, sql)
     if not m:
         return sql, AsOf.now()
     clean = sql[: m.start()] + sql[m.end() :]

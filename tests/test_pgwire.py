@@ -289,6 +289,9 @@ def test_extended_protocol_prepared_statements(server):
     assert err is None and rows == [["2"]]
     cols, rows, _t, err = c.ext_query("SELECT 41 + 1 AS v")
     assert err is None and rows == [["42"]]
+    # a $N inside a literal is text, not a marker
+    cols, rows, _t, err = c.ext_query("SELECT '$1 off' AS a, $1 AS b", [5])
+    assert err is None and rows == [["$1 off", "5"]]
     # error inside extended flow: ErrorResponse, then Sync recovers
     _c, _r, _t, err = c.ext_query("SELECT broken FROM nowhere")
     assert err is not None

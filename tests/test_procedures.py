@@ -44,6 +44,14 @@ def test_sql_procedure_params_dml_and_result(sess):
     )
     sess.sql("CALL rename_item(2, 'o''ring')")
     assert sess.sql("SELECT name FROM products WHERE id = 2").first()["name"] == "o'ring"
+    # a marker or a ';' inside a literal or comment is text, not syntax
+    sess.sql(
+        "CREATE PROCEDURE tag(pid) AS $$ -- sets :pid; then reads it\n"
+        "UPDATE products SET name = ':pid; kept' WHERE id = :pid; "
+        "SELECT name, ':pid' AS lit FROM products WHERE id = :pid $$"
+    )
+    out = sess.sql("CALL tag(2)").first()
+    assert (out["name"], out["lit"]) == (":pid; kept", ":pid")
 
 
 def test_call_argument_expressions_and_arity(sess):

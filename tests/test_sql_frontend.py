@@ -384,6 +384,11 @@ def test_fk_enforced_on_update_truncate_and_merge_delete(spark, tmp_path):
     s.sql("INSERT INTO dept VALUES (1, 'eng'), (2, 'ops')")
     s.sql("INSERT INTO emp VALUES (10, 1), (11, 1)")
     s.sql("INSERT INTO badge VALUES (100, 10), (101, 11)")
+    # a parent key a child still references cannot change: RESTRICT,
+    # and nothing is written
+    with pytest.raises(ValueError, match="FK RESTRICT: emp.d references dept.d"):
+        s.sql("UPDATE dept SET d = 5 WHERE d = 1")
+    assert {r.d for r in s.sql("SELECT d FROM dept").collect()} == {1, 2}
     with pytest.raises(ValueError, match="FK violation"):
         s.sql("UPDATE emp SET d = 99 WHERE e = 10")
     s.sql("UPDATE emp SET d = 2 WHERE e = 10")
@@ -532,6 +537,10 @@ def test_prepare_execute_deallocate(spark, tmp_path):
     # argument expressions fold (no table access)
     s.sql("EXECUTE ins(1 + 2, upper('three'))")
     assert s.sql("SELECT v FROM kv WHERE id = 3").first()["v"] == "THREE"
+    # a $N inside a literal is text, not a marker
+    s.sql("PREPARE lit AS INSERT INTO kv VALUES ($1, '$1 kept')")
+    s.sql("EXECUTE lit(9)")
+    assert s.sql("SELECT v FROM kv WHERE id = 9").first()["v"] == "$1 kept"
     s.sql("DEALLOCATE get")
     with pytest.raises(Exception):
         s.sql("EXECUTE get(1)")  # falls through to Catalyst -> error
@@ -561,6 +570,16 @@ def test_dml_returning(spark, tmp_path):
     # expressions in the RETURNING list
     out = s.sql("INSERT INTO acc VALUES (3, 'cal', 7) RETURNING id * 10 AS id10")
     assert out.first()["id10"] == 30
+    # keywords inside a literal are text: no RETURNING peel, and no
+    # FOR SYSTEM_TIME peel (current state, the literal unchanged)
+    assert s.sql("INSERT INTO acc VALUES (4, 'see RETURNING x', 1)") > 0
+    assert s.sql("SELECT owner FROM acc WHERE id = 4").first()["owner"] == "see RETURNING x"
+    rows = s.sql("SELECT id, 'x FOR SYSTEM_TIME ALL' AS s FROM acc").collect()
+    assert sorted((r.id, r.s) for r in rows) == [
+        (1, "x FOR SYSTEM_TIME ALL"),
+        (3, "x FOR SYSTEM_TIME ALL"),
+        (4, "x FOR SYSTEM_TIME ALL"),
+    ]
     # inside a transaction: returns staged post-image, nothing published
     s.sql("BEGIN")
     out = s.sql("UPDATE acc SET bal = 0 WHERE id = 1 RETURNING bal")

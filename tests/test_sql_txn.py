@@ -169,6 +169,12 @@ def test_txn_fk_restrict_and_parent_in_buffer(spark, tmp_path):
     s.sql("ROLLBACK")
     # dept 2 was inserted inside the rolled-back txn — only dept 1 remains
     assert s.sql("SELECT COUNT(*) AS n FROM dept").first()["n"] == 1
+    # an auto-increment batch takes the same FK check
+    with pytest.raises(ValueError, match="FK violation"):
+        s.insert_auto_increment(
+            "emp", spark.createDataFrame([(99, "eve")], "d int, ename string")
+        )
+    assert s.sql("SELECT COUNT(*) AS n FROM emp").first()["n"] == 1
 
 
 def test_txn_delete_cascade_staged_atomically(spark, tmp_path):
@@ -259,6 +265,19 @@ def test_insert_checked_joins_open_transaction(sess, spark):
     assert _ids(sess) == {1, 2, 3, 7}
     sess.sql("ROLLBACK")
     assert _ids(sess) == {1, 2, 3}
+    # auto-increment and CTAS rows stay in the transaction too: the base
+    # reads the buffer (7 -> 8), ROLLBACK discards both
+    sess.sql("BEGIN")
+    sess.insert_checked("products", row)
+    sess.insert_auto_increment(
+        "products", spark.createDataFrame([("pin", 1)], "name string, qty int")
+    )
+    assert _ids(sess) == {1, 2, 3, 7, 8}
+    sess.sql("CREATE TABLE copy AS SELECT * FROM products")
+    assert sess.sql("SELECT COUNT(*) AS n FROM copy").first()["n"] == 5
+    sess.sql("ROLLBACK")
+    assert _ids(sess) == {1, 2, 3}
+    assert sess.sql("SELECT COUNT(*) AS n FROM copy").first()["n"] == 0
     sess.sql("BEGIN")
     with pytest.raises(ValueError, match="duplicate primary key"):
         sess.sql("INSERT INTO products VALUES (1, 'dup', 0)")
