@@ -1360,14 +1360,19 @@ class _Handler(socketserver.BaseRequestHandler):
                 self.session.disable_result_cache()  # reclaim instance dir
 
     def _classify_error(self, exc: Exception) -> tuple[str, str]:
-        """SQLSTATE + message for an execution error; a cancellation this
-        backend's cancel flag explains maps to 57014 (query_canceled),
-        and the job group rotates so the NEXT statement runs clean."""
+        """SQLSTATE + message for an execution error: the engine's own
+        ``sqlstate``, else Spark's (PySpark errors carry it behind
+        ``getSqlState()``), else XX000. A cancellation this backend's
+        cancel flag explains maps to 57014 (query_canceled), and the job
+        group rotates so the NEXT statement runs clean."""
         if getattr(self, "cancel_flag", None) is not None and self.cancel_flag.is_set():
             self.cancel_flag.clear()
             self._set_job_group()
             return "57014", "canceling statement due to user request"
-        return getattr(exc, "sqlstate", "XX000"), f"{type(exc).__name__}: {exc}"
+        state = getattr(exc, "sqlstate", None)
+        if state is None and hasattr(exc, "getSqlState"):
+            state = exc.getSqlState()
+        return state or "XX000", f"{type(exc).__name__}: {exc}"
 
     def _serve_loop(self, ext_error: bool) -> None:
         while True:

@@ -15,6 +15,7 @@ everything else is ``spark.sql``.
 from __future__ import annotations
 
 import re as _re
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,9 +28,12 @@ from driftdb_spark.sqltext import (  # noqa: F401 — the WITH-prefix names are 
     number_params,
     render_literal,
     search_code,
+    skip_balanced_paren,
     split_leading_ctes,
     split_top_level,
     strip_leading_ctes,
+    sub_code,
+    unclosed_parens,
 )
 from driftdb_spark.temporal import AsOf, parse_system_time
 
@@ -37,6 +41,45 @@ from driftdb_spark.temporal import AsOf, parse_system_time
 class QueryCancelled(RuntimeError):
     """A statement exceeded its timeout and its Spark job group was
     cancelled (reference query_cancellation.rs)."""
+
+
+#: PostgreSQL's column-less MERGE ``INSERT VALUES``, which Spark's grammar lacks
+_INSERT_VALUES_RE = _re.compile(r"\bINSERT\s+VALUES\b", _re.IGNORECASE)
+
+
+class UnsupportedStatement(ValueError):
+    """A statement shape the engine refuses on purpose (0A000)."""
+
+    sqlstate = "0A000"
+
+
+class UndefinedColumn(ValueError):
+    """A DML statement names a column its target table lacks (42703)."""
+
+    sqlstate = "42703"
+
+
+@dataclass
+class DmlShape:
+    """An INSERT, UPDATE, DELETE or MERGE as Spark's parser reads it
+    (:meth:`DriftSession._dml_shape`): names from the parsed plan, every
+    expression the statement's own text cut at its parser span."""
+
+    verb: str
+    text: str  # as parsed: RETURNING, ON CONFLICT, FOR SYSTEM_TIME peeled
+    table: str
+    alias: str | None = None  # MERGE target alias
+    columns: tuple[str, ...] = ()  # INSERT column list
+    source: str | None = None  # INSERT: VALUES/query text; MERGE: FROM item
+    source_alias: str | None = None  # MERGE
+    assigns: dict[str, str] = field(default_factory=dict)  # UPDATE SET
+    where: str | None = None  # UPDATE/DELETE WHERE, MERGE ON
+    # MERGE, in declaration order: (matched, UPDATE|DELETE|INSERT, AND
+    # condition or None, {column: expression} — empty for DELETE)
+    clauses: tuple[tuple[bool, str, str | None, dict[str, str]], ...] = ()
+    returning: str | None = None
+    conflict: str | None = None  # INSERT ON CONFLICT DO NOTHING | UPDATE
+    asof: AsOf = field(default_factory=AsOf.now)  # INSERT … SELECT source
 
 
 class RateLimitExceeded(RuntimeError):
@@ -392,11 +435,11 @@ class DriftSession:
         ``UPDATE``, ``DELETE FROM``, and ``TRUNCATE`` on event-backed
         tables route to the EventLog (returning the end sequence);
         everything else goes to Catalyst as a query over the reconstructed
-        state views. DML expression parsing is delegated: a VALUES tail is
-        handed to Spark's own parser (``SELECT * FROM VALUES ...``),
-        UPDATE assignments and WHERE conditions stay SQL expression strings
-        evaluated by Catalyst — this dispatcher only routes, it never
-        re-implements expression parsing.
+        state views. DML parsing is Spark's: :meth:`_dml_shape` reads each
+        INSERT/UPDATE/DELETE/MERGE with Spark's own parser, and its
+        VALUES, assignments and conditions stay SQL expression text
+        evaluated by Catalyst — this dispatcher never re-implements
+        expression parsing.
 
         ``args`` enables parameterized SQL (reference ``$1``-style params,
         sql_bridge.rs:183-226): a dict binds named ``:name`` markers, a
@@ -738,18 +781,6 @@ class DriftSession:
             return None
         return self._referenced_catalog_objects(clean)
 
-    _INSERT_RE = _re.compile(
-        r"^INSERT\s+INTO\s+(\w+)\s*(?:\(([^)]*)\))?\s*(VALUES\s*\(.*\)|SELECT\b.*)$",
-        _re.IGNORECASE | _re.DOTALL,
-    )
-    _UPDATE_RE = _re.compile(
-        r"^UPDATE\s+(\w+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$",
-        _re.IGNORECASE | _re.DOTALL,
-    )
-    _DELETE_RE = _re.compile(
-        r"^DELETE\s+FROM\s+(\w+)(?:\s+WHERE\s+(.*))?$",
-        _re.IGNORECASE | _re.DOTALL,
-    )
     _TRUNCATE_RE = _re.compile(
         r"^TRUNCATE\s+(?:TABLE\s+)?(\w+)$", _re.IGNORECASE
     )
@@ -1464,16 +1495,6 @@ class DriftSession:
     _RETURNING_RE = _re.compile(
         r"\s+RETURNING\s+(.+)$", _re.IGNORECASE | _re.DOTALL
     )
-    _MERGE_RE = _re.compile(
-        r"^MERGE\s+INTO\s+(\w+)(?:\s+(?:AS\s+)?(\w+))?\s+USING\s+(.+?)"
-        r"\s+ON\s+(.+?)\s+(WHEN\s+.*)$",
-        _re.IGNORECASE | _re.DOTALL,
-    )
-    _MERGE_WHEN_RE = _re.compile(
-        r"^\s*(NOT\s+)?MATCHED\s*(?:AND\s+(.+?))?\s*THEN\s+"
-        r"(UPDATE\s+SET\s+.+|DELETE|INSERT\s*(?:\([^)]*\))?\s*VALUES\s*\(.+\))\s*$",
-        _re.IGNORECASE | _re.DOTALL,
-    )
 
     def _internal_sql(self, query: str) -> DataFrame:
         """Plan an ENGINE-INITIATED read (EXPLAIN's read-side scan of the
@@ -1548,117 +1569,47 @@ class DriftSession:
                 "the statement directly)"
             )
 
-        # DML: build the dispatch-node header + the lazy read-side plan.
-        # A WITH prefix registers each CTE as a LAZY statement-scoped
-        # temp view first (planning only — reads are side-effect-free and
-        # nothing is pinned or published), then the tail plans through
-        # the ordinary DML branches below, mirroring how _cte_dml
-        # executes the statement for real.
+        # DML: the dispatch-node header + the lazy read-side plan. A WITH
+        # prefix registers each CTE as a LAZY temp view first (nothing is
+        # pinned or published), mirroring how _cte_dml executes it.
         header: list[str] = []
         cte_names: list[str] = []
-        if head.ctes is not None and head.dml_verbs():
-            recursive, cte_defs, tail = head.ctes
-            for name, ccols, cbody in cte_defs:
-                header.append(f"Cte [{name}]")
-                df = self._internal_sql(
-                    f"WITH RECURSIVE {name} AS ({cbody}) "
-                    f"SELECT * FROM {name}"
-                    if recursive
-                    else cbody
-                )
-                if ccols:
-                    df = df.toDF(*[c.strip("`") for c in split_top_level(ccols)])
-                df.createOrReplaceTempView(name)
-                cte_names.append(name)
-            body = tail
         try:
-            mr = (
-                search_code(self._RETURNING_RE, body)
-                if head.verb in ("INSERT", "UPDATE", "DELETE")
-                else None
-            )
-            if mr:
-                header.append(f"Returning [{mr.group(1).strip()}]")
-                body = body[: mr.start()].strip()
-
-            conflict = None
-            mc = self._ON_CONFLICT_RE.search(body)
-            if mc:
-                conflict, body = mc.group(1).upper(), body[: mc.start()].strip()
-
-            m = self._INSERT_RE.match(body)
-            if m and m.group(1) in self._tables:
-                table, cols, source = m.group(1), m.group(2), m.group(3).strip()
-                head = f"InsertEvents [table={table}"
-                if cols:
-                    head += f", columns=({cols.strip()})"
-                if conflict:
-                    head += f", on_conflict=DO {conflict}"
-                lines = header + [head + "]"]
-                try:
-                    # SELECT/WITH/VALUES sources all plan through sql()
-                    # (VALUES is query-like); anything unparseable
-                    # (defaults-bearing VALUES etc.) degrades to the
-                    # Source line below
-                    lines += indent(explain_plan(self._internal_sql(source)))
-                except Exception:
-                    lines.append(f"   Source [{source[:120]}]")
-                return frame(lines)
-
-            m = self._UPDATE_RE.match(body)
-            if m and m.group(1) in self._tables:
-                table, set_clause, where = m.group(1), m.group(2), m.group(3)
-                lines = header + [
-                    f"UpdateEvents [table={table}, set={set_clause.strip()}]"
-                ]
-                scan = f"SELECT * FROM {table}" + (
-                    f" WHERE {where}" if where else ""
+            if head.ctes is not None and head.dml_verbs():
+                recursive, cte_defs, body = head.ctes
+                header = [f"Cte [{name}]" for name, _cols, _body in cte_defs]
+                self._register_ctes(recursive, cte_defs, cte_names)
+            verb = head.verb
+            shape = self._dml_shape(verb, body) if verb in self._DML_VERBS else None
+            if shape is None or shape.table not in self._tables:
+                raise ValueError(
+                    f"EXPLAIN is not supported for this statement (only queries "
+                    f"and INSERT/UPDATE/DELETE/MERGE on known tables): "
+                    f"{body[:80]!r}"
                 )
-                lines += indent(explain_plan(self._internal_sql(scan)))
-                return frame(lines)
-
-            m = self._DELETE_RE.match(body)
-            if m and m.group(1) in self._tables:
-                table, where = m.group(1), m.group(2)
-                lines = header + [f"DeleteEvents [table={table}]"]
-                scan = f"SELECT * FROM {table}" + (
-                    f" WHERE {where}" if where else ""
-                )
-                lines += indent(explain_plan(self._internal_sql(scan)))
-                return frame(lines)
-
-            m = self._MERGE_RE.match(body)
-            if m and m.group(1) in self._tables:
-                table, _alias, source, on, whens = (
-                    m.group(1),
-                    m.group(2),
-                    m.group(3).strip(),
-                    m.group(4).strip(),
-                    m.group(5).strip(),
-                )
-                lines = header + [
-                    f"MergeEvents [table={table}, on={on}]",
-                    f"   When [{' '.join(whens.split())[:200]}]",
-                ]
-                try:
-                    src = source
-                    msub = _re.match(
-                        r"^\((.*)\)\s*(?:AS\s+)?\w*$", src, _re.DOTALL
+            if shape.returning:
+                header.append(f"Returning [{shape.returning}]")
+            node = f"{verb.title()}Events [table={shape.table}"
+            if verb == "INSERT":
+                if shape.columns:
+                    node += f", columns=({', '.join(shape.columns)})"
+                if shape.conflict:
+                    node += f", on_conflict=DO {shape.conflict}"
+                df = self._insert_source(shape)
+            else:
+                scan = f"SELECT * FROM {shape.table} WHERE {shape.where or 'true'}"
+                if verb == "MERGE":
+                    whens = "; ".join(
+                        f"{'' if matched else 'NOT '}MATCHED THEN {action}"
+                        for matched, action, *_ in shape.clauses
                     )
-                    if msub:
-                        src = msub.group(1)
-                    else:
-                        src = f"SELECT * FROM {src.split()[0]}"
-                    lines += indent(explain_plan(self._internal_sql(src)))
-                except Exception:
-                    lines.append(f"   Source [{source[:120]}]")
-                return frame(lines)
-
-            raise ValueError(
-                f"EXPLAIN is not supported for this statement (only queries "
-                f"and INSERT/UPDATE/DELETE/MERGE on known tables): "
-                f"{body[:80]!r}"
-            )
+                    node += f", on={shape.where}, when={whens}"
+                    scan = f"SELECT * FROM {shape.source} {shape.source_alias}"
+                elif verb == "UPDATE":
+                    sets = ", ".join(f"{c} = {e}" for c, e in shape.assigns.items())
+                    node += f", set={sets}"
+                df = self._internal_sql(scan)
+            return frame(header + [node + "]"] + indent(explain_plan(df)))
         finally:
             for name in cte_names:
                 try:
@@ -1667,15 +1618,11 @@ class DriftSession:
                     pass
 
     def _dispatch_dml(self, q: str):
-        # CTE-prefixed DML (WITH src AS (SELECT …) INSERT INTO t …): a
-        # stock ETL idiom PostgreSQL executes but the reference's
-        # sqlparser cannot parse. The anchored ^INSERT/^UPDATE/… routes
-        # below never see the WITH prefix, and raw spark.sql dies with an
-        # opaque UNSUPPORTED_INSERT.RDD_BASED on this engine's RDD-backed
-        # state views — so lex the prefix, materialize each CTE as a
-        # statement-scoped temp view, and re-dispatch the tail through
-        # the ordinary DML routes (r10 VERDICT ask #2). WITH…SELECT
-        # passes through untouched (None → Catalyst handles it natively).
+        # CTE-prefixed DML (WITH src AS (SELECT …) INSERT INTO t …), a
+        # stock ETL idiom the reference's sqlparser cannot parse: raw
+        # spark.sql dies with UNSUPPORTED_INSERT.RDD_BASED on the
+        # RDD-backed state views, so :meth:`_cte_dml` registers each CTE
+        # and re-dispatches the tail. WITH…SELECT passes through (None).
         head = classify(q)
         if head.explain:
             return self._sql_explain(head)
@@ -1685,32 +1632,27 @@ class DriftSession:
             # a WITH prefix that does not lex but carries a DML verb
             # outside literals/comments: refuse clearly (SQLSTATE 0A000)
             # instead of letting Catalyst's RDD error surface
-            raise ValueError(
+            raise UnsupportedStatement(
                 "CTE-prefixed DML could not be parsed (unsupported "
                 "WITH-prefix shape); simplify the WITH clause "
                 "[SQLSTATE 0A000]"
             )
         q = head.text
-        # Peel a trailing RETURNING clause off DML (PostgreSQL surface):
-        # the statement executes normally, then the affected rows project
-        # through the requested expressions — INSERT returns the inserted
-        # batch (defaults applied), UPDATE the post-image, DELETE the
-        # pre-image, each pinned BEFORE the write so the returned frame
-        # cannot observe its own mutation.
-        self._returning = None
-        mr = (
-            search_code(self._RETURNING_RE, q)
-            if head.verb in ("INSERT", "UPDATE", "DELETE")
-            else None
-        )
-        if mr:
-            self._returning = mr.group(1).strip()
-            q = q[: mr.start()].strip()
-        m = self._MERGE_RE.match(q)
-        if m and m.group(1) in self._tables:
-            return self._sql_merge(
-                m.group(1), m.group(2), m.group(3), m.group(4), m.group(5)
-            )
+        if head.verb in self._DML_VERBS:
+            shape = self._dml_shape(head.verb, q)
+            if shape.table not in self._tables:
+                return None  # not an event-backed table: Catalyst's to answer
+            if shape.verb == "MERGE" or (
+                shape.verb != "INSERT"
+                and _re.search(r"\bSELECT\b", shape.text, _re.IGNORECASE)
+            ):
+                # the MERGE join and UPDATE/DELETE subqueries read the temp
+                # views of what the statement names, the target included
+                scope = self._referenced_catalog_objects(shape.text)
+                self._register_states(AsOf.now(), scope)
+                self._register_views(AsOf.now(), scope)
+            # _sql_insert / _sql_update / _sql_delete / _sql_merge
+            return getattr(self, f"_sql_{shape.verb.lower()}")(shape)
         m = self._CREATE_IMVIEW_RE.match(q)
         if m and m.group(2) in self._tables:
             # CREATE INCREMENTAL MATERIALIZED VIEW v ON t GROUP BY (cols)
@@ -1965,77 +1907,6 @@ class DriftSession:
             cols = {f.name: f.dataType.simpleString() for f in df.schema.fields}
             self.create_table(name, cols)
             return self._insert(name, df)
-        conflict = None
-        mc = self._ON_CONFLICT_RE.search(q)
-        if mc:
-            conflict, q_ins = mc.group(1).upper(), q[: mc.start()].strip()
-        else:
-            q_ins = q
-        m = self._INSERT_RE.match(q_ins)
-        if m and m.group(1) in self._tables:
-            out = self._sql_insert(m.group(1), m.group(2), m.group(3), conflict)
-            return out
-        m = self._UPDATE_RE.match(q)
-        if m and m.group(1) in self._tables:
-            from pyspark.sql import functions as F
-
-            tname = m.group(1)
-            schema_cols = self._tables[tname][1]
-            if _re.search(r"\bSELECT\b", q, _re.IGNORECASE):
-                # WHERE/SET subqueries resolve through temp views, which
-                # statement-scoped registration no longer refreshes as a
-                # side effect of unrelated statements: refresh this
-                # statement's scope (including the target — a
-                # self-referencing subquery reads its temp view too)
-                scope = self._referenced_catalog_objects(q)
-                self._register_states(AsOf.now(), scope)
-                self._register_views(AsOf.now(), scope)
-            assigns = {}
-            for part in split_top_level(m.group(2)):
-                col, _, expr = part.partition("=")
-                assigns[col.strip()] = expr.strip()
-            upd_cond = self._rls_condition(tname, m.group(3) or "true", "update")
-
-            def image():
-                state = self._view(tname)
-                post = state.filter(upd_cond).select(
-                    *[
-                        F.expr(str(assigns[c])).alias(c) if c in assigns else F.col(c)
-                        for c in schema_cols
-                    ]
-                )
-                return post, state.filter(~F.coalesce(F.expr(upd_cond), F.lit(False)))
-
-            # UPDATE ... RETURNING yields the POST-image (PostgreSQL),
-            # pinned before the Patch events land.
-            post = self._pin(image()[0]) if self._returning is not None else None
-
-            def update():
-                self._update_gate(tname, assigns, image)
-                return self._writer(tname).update_where(schema_cols, upd_cond, assigns)
-
-            out = self._write(update)
-            return self._project_returning(post) if post is not None else out
-        m = self._DELETE_RE.match(q)
-        if m and m.group(1) in self._tables:
-            if _re.search(r"\bSELECT\b", q, _re.IGNORECASE):
-                # WHERE subqueries resolve through temp views: refresh
-                # the statement's scope (see the UPDATE branch above)
-                scope = self._referenced_catalog_objects(q)
-                self._register_states(AsOf.now(), scope)
-                self._register_views(AsOf.now(), scope)
-            del_cond = self._rls_condition(m.group(1), m.group(2) or "true", "delete")
-            pre = None
-            if self._returning is not None:
-                # DELETE ... RETURNING yields the PRE-image, pinned before
-                # the tombstones land.
-                pre = self._pin(
-                    self._view(m.group(1))
-                    .filter(del_cond)
-                    .select(*self._tables[m.group(1)][1])
-                )
-            out = self._delete(m.group(1), del_cond)
-            return self._project_returning(pre) if pre is not None else out
         m = self._TRUNCATE_RE.match(q)
         if m and m.group(1) in self._tables:
             # TRUNCATE is an unconditional DELETE and takes its plan: FK
@@ -2047,6 +1918,193 @@ class DriftSession:
                 m.group(1), self._rls_condition(m.group(1), "true", "delete")
             )
         return None
+
+    #: the statements :meth:`_dml_shape` reads (sqltext.CTE_DML_RE's verbs)
+    _DML_VERBS = frozenset({"INSERT", "UPDATE", "DELETE", "MERGE"})
+
+    def _dml_shape(self, verb: str, text: str) -> DmlShape:
+        """Read an INSERT, UPDATE, DELETE or MERGE with Spark's own parser
+        (its ParseException is the statement's error), after peeling
+        RETURNING, ON CONFLICT and an INSERT source's FOR SYSTEM_TIME and
+        spelling out a MERGE's column-less ``INSERT VALUES`` (PostgreSQL:
+        every column). Expressions are cut from the text at their parser
+        spans, not re-rendered (``Expression.sql()`` prints a subquery as
+        ``scalarsubquery()``); only a literal is its own SQL. Unrouted
+        shapes raise UnsupportedStatement, a column an event-backed target
+        lacks UndefinedColumn."""
+        returning = conflict = None
+        asof = AsOf.now()
+        if verb != "MERGE":
+            mr = search_code(self._RETURNING_RE, text)
+            if mr:
+                returning, text = mr.group(1).strip(), text[: mr.start()].strip()
+        if verb == "INSERT":
+            mc = self._ON_CONFLICT_RE.search(text)
+            if mc:
+                conflict, text = mc.group(1).upper(), text[: mc.start()].strip()
+            text, asof = parse_system_time(text)
+        target = text.split(None, 3)[2:3] if verb == "MERGE" else []
+        if target and target[0] in self._tables:
+            into = f"INSERT ({', '.join(self._tables[target[0]][1])}) VALUES"
+            text = sub_code(_INSERT_VALUES_RE, lambda _m: into, text)
+        plan = self.spark._jsparkSession.sessionState().sqlParser().parsePlan(text)
+        kind = plan.nodeName()
+
+        def bounds(node) -> tuple[int, int] | None:
+            # None for a shared node whose span is another statement's
+            o = node.origin()
+            if not o.sqlText().contains(text):
+                return None
+            return o.startIndex().get(), o.stopIndex().get()
+
+        def span(node) -> str:
+            # A node carries the span of the grammar rule that built it,
+            # which is not always its own: a literal may be a shared
+            # instance (TRUE, FALSE) spanning another statement, so it is
+            # Spark's own literal SQL; EXISTS spans its enclosing rule, so
+            # its subquery places it; a predicate (IN, LIKE, IS, BETWEEN …)
+            # starts at its keyword, so the operand just before it moves
+            # the start back, over the parentheses the operand sits in.
+            name = node.nodeName()
+            if name == "Literal":
+                return node.sql()
+            b = bounds(node.plan() if name == "Exists" else node)
+            if b is None:
+                raise UnsupportedStatement(f"{verb}: cannot place {node.sql()}")
+            start, stop = b
+            if name == "Exists":
+                paren = text.rindex("(", 0, start)
+                start = len(text[:paren].rstrip()) - len("EXISTS")
+                return text[start : skip_balanced_paren(text, paren + 1)]
+            child = node
+            while not child.children().isEmpty():
+                child = child.children().head()
+                b = bounds(child)
+                if b is None or b[1] > stop or b[0] < start <= b[1]:
+                    break
+                if b[1] < start:
+                    if text[b[1] + 1 : start].strip(" \t\r\n)"):
+                        break
+                    start = b[0]
+            for _ in range(unclosed_parens(text[start : stop + 1])):
+                start = text.rindex("(", 0, start)
+            return text[start : stop + 1]
+
+        def cond_span(opt) -> str | None:
+            return span(opt.get()) if opt.isDefined() else None
+
+        def items(seq) -> list:
+            return [seq.apply(i) for i in range(seq.size())]
+
+        def assigns(seq) -> dict[str, str]:
+            # a key's span covers the whole SET list: name it by key.sql()
+            return {a.key().sql(): span(a.value()) for a in items(seq)}
+
+        def refuse(what: str) -> UnsupportedStatement:
+            return UnsupportedStatement(f"{verb} with {what} is not supported")
+
+        def unaliased(node):
+            if node.nodeName() == "SubqueryAlias":
+                return node.alias(), node.child()
+            return None, node
+
+        merge = kind == "MergeIntoTable"
+        if not merge and kind not in (
+            "InsertIntoStatement", "UpdateTable", "DeleteFromTable"
+        ):
+            raise refuse(f"the statement shape {kind}")
+        alias, rel = unaliased(plan.targetTable() if merge else plan.table())
+        if alias is not None and not merge:
+            raise refuse("an aliased target")
+        if rel.nodeName() != "UnresolvedRelation":
+            raise refuse("a computed target")
+        if rel.multipartIdentifier().size() != 1:
+            raise refuse(f"the qualified target {rel.name()}")
+        shape = DmlShape(verb, text, rel.name(), alias=alias, returning=returning)
+        if kind == "UpdateTable":
+            shape.where = cond_span(plan.condition())
+            shape.assigns = assigns(plan.assignments())
+        elif kind == "DeleteFromTable":
+            # without WHERE the condition is the literal true
+            shape.where = span(plan.condition())
+        elif kind == "InsertIntoStatement":
+            if plan.overwrite() or not plan.partitionSpec().isEmpty() or plan.byName():
+                raise refuse("OVERWRITE, PARTITION or BY NAME")
+            # the statement spans its head: the source is the rest
+            shape.source = text[bounds(plan)[1] + 1 :].strip()
+            shape.columns = tuple(items(plan.userSpecifiedCols()))
+            shape.conflict, shape.asof = conflict, asof
+        else:
+            if not plan.notMatchedBySourceActions().isEmpty():
+                raise refuse("WHEN NOT MATCHED BY SOURCE")
+            salias, source = unaliased(plan.sourceTable())
+            # a SubqueryAlias spans the whole statement; its child spans
+            # the bare table name or the subquery without its parentheses
+            shape.source = span(source)
+            if source.nodeName() != "UnresolvedRelation":
+                shape.source, salias = f"({shape.source})", salias or "__src"
+            # an unaliased table source keeps its own name as the alias
+            shape.source_alias = salias or shape.source
+            shape.where = span(plan.mergeCondition())
+            clauses = []
+            for matched, actions in (
+                (True, plan.matchedActions()),
+                (False, plan.notMatchedActions()),
+            ):
+                for a in items(actions):
+                    action = a.nodeName()
+                    if action not in ("UpdateAction", "DeleteAction", "InsertAction"):
+                        raise refuse("INSERT * or UPDATE SET *")
+                    sets = {} if action == "DeleteAction" else assigns(a.assignments())
+                    action = action[: -len("Action")].upper()
+                    clauses.append((matched, action, cond_span(a.condition()), sets))
+            shape.clauses = tuple(clauses)
+        schema = self._tables.get(shape.table, (None, {}))[1]
+        named = [*shape.columns, *shape.assigns]
+        named += [c for *_, sets in shape.clauses for c in sets]
+        missing = [c for c in named if schema and c not in schema]
+        if missing:
+            raise UndefinedColumn(
+                f'column "{missing[0]}" of relation "{shape.table}" does not exist'
+            )
+        return shape
+
+    def _sql_update(self, shape: DmlShape):
+        from pyspark.sql import functions as F
+
+        tname, assigns = shape.table, shape.assigns
+        schema_cols = self._tables[tname][1]
+        upd_cond = self._rls_condition(tname, shape.where or "true", "update")
+
+        def image():
+            state = self._view(tname)
+            post = state.filter(upd_cond).select(
+                *[
+                    F.expr(str(assigns[c])).alias(c) if c in assigns else F.col(c)
+                    for c in schema_cols
+                ]
+            )
+            return post, state.filter(~F.coalesce(F.expr(upd_cond), F.lit(False)))
+
+        post = self._pin(image()[0]) if shape.returning is not None else None
+
+        def update():
+            self._update_gate(tname, assigns, image)
+            return self._writer(tname).update_where(schema_cols, upd_cond, assigns)
+
+        out = self._write(update)
+        return out if post is None else self._project_returning(post, shape.returning)
+
+    def _sql_delete(self, shape: DmlShape):
+        table = shape.table
+        del_cond = self._rls_condition(table, shape.where or "true", "delete")
+        pre = None
+        if shape.returning is not None:
+            pre = self._pin(
+                self._view(table).filter(del_cond).select(*self._tables[table][1])
+            )
+        out = self._delete(table, del_cond)
+        return out if pre is None else self._project_returning(pre, shape.returning)
 
     def _cte_dml(
         self,
@@ -2072,71 +2130,17 @@ class DriftSession:
         INTO t SELECT …``) — an unpinned lazy view would re-read mid-
         write. Statement-level gates (wire exec_lock via server.py's
         classifier, RBAC via rbac.statement_permissions, EXPLAIN's DML
-        guard) already classify the WITH-prefixed text as a write; this
-        is the missing execution half (r10 VERDICT "What's missing" #1).
+        guard) already classify the WITH-prefixed text as a write.
 
         Temp views are session-scoped in Spark, so names are dropped in
         a ``finally``; concurrent wire statements cannot interleave here
         because the server's write lock serializes WITH-DML."""
         registered: list[str] = []
-        pinned: list[DataFrame] = []
         try:
-            for name, cols, body in ctes:
-                if (
-                    name in self._tables
-                    or name in self._views
-                    or name in self._mviews
-                    or name in self._imvs
-                ):
-                    # A CTE shadowing a catalog object inside DML would
-                    # make the tail's table references ambiguous between
-                    # the temp view and the statement-scoped state view
-                    # registration — refuse rather than risk writing
-                    # through the wrong relation (PostgreSQL shadows; the
-                    # conservative refusal is the row-sound choice here).
-                    err = ValueError(
-                        f"CTE name {name!r} shadows an existing catalog "
-                        "object; rename the CTE in a data-modifying "
-                        "statement"
-                    )
-                    # deliberate feature refusal (PostgreSQL shadows);
-                    # 0A000 feature_not_supported, same as the repo's
-                    # other reasoned refusals, so wire clients can tell
-                    # it from an internal error
-                    err.sqlstate = "0A000"
-                    raise err
-                # CTE bodies evaluate through the INTERNAL path: the
-                # statement-level RBAC gate already ran on the full
-                # WITH-DML text (rbac.statement_permissions classifies on
-                # the tail verb — the same single-permission model that
-                # lets an insert-only role run INSERT…SELECT), so
-                # re-demanding 'select' here would deny WITH…INSERT to a
-                # role that can run the equivalent INSERT…SELECT. RLS
-                # still scopes rows at state-view registration.
-                if recursive:
-                    # self-referential body: run it through the recursive-
-                    # CTE fixpoint machinery; earlier CTEs resolve as the
-                    # temp views already registered below
-                    df = self._internal_sql(
-                        f"WITH RECURSIVE {name} AS ({body}) "
-                        f"SELECT * FROM {name}"
-                    )
-                else:
-                    df = self._internal_sql(body)
-                if not isinstance(df, DataFrame):
-                    raise ValueError(
-                        f"CTE {name!r} body must be a query, got a "
-                        "non-query statement"
-                    )
-                if cols:
-                    df = df.toDF(*[c.strip("`") for c in split_top_level(cols)])
-                df = self._pin(df)
-                pinned.append(df)
-                df.createOrReplaceTempView(name)
-                registered.append(name)
+            self._register_ctes(recursive, ctes, registered, pin=True)
             out = self._dispatch_dml(tail)
             if out is None:
-                raise ValueError(
+                raise UnsupportedStatement(
                     "CTE-prefixed statement tail is not executable DML: "
                     + tail.split(None, 1)[0].upper()
                     + " [SQLSTATE 0A000]"
@@ -2148,20 +2152,60 @@ class DriftSession:
                     self.spark.catalog.dropTempView(name)
                 except Exception:
                     pass
-            for df in pinned:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
 
-    def _sql_merge(
-        self, table: str, talias: str | None, source: str, on: str, whens: str
-    ) -> int:
+    def _register_ctes(
+        self,
+        recursive: bool,
+        ctes: list[tuple[str, str | None, str]],
+        registered: list[str],
+        pin: bool = False,
+    ) -> None:
+        """Register each CTE of a WITH-prefixed DML statement as a temp
+        view, appending its name to ``registered`` for the caller to drop.
+        With ``pin`` each body is materialized first (:meth:`_cte_dml`);
+        without, it stays lazy (EXPLAIN)."""
+        for name, cols, body in ctes:
+            if (
+                name in self._tables
+                or name in self._views
+                or name in self._mviews
+                or name in self._imvs
+            ):
+                # the tail's table references would be ambiguous between the
+                # CTE and the state view (PostgreSQL shadows; refusing is safe)
+                raise UnsupportedStatement(
+                    f"CTE name {name!r} shadows an existing catalog object; "
+                    "rename the CTE in a data-modifying statement"
+                )
+            # CTE bodies evaluate through the INTERNAL path: RBAC already
+            # gated the WITH-DML text on its tail verb (the model that lets
+            # an insert-only role run INSERT…SELECT), so re-demanding
+            # 'select' would deny WITH…INSERT to a role that can run the
+            # equivalent INSERT…SELECT. RLS still scopes rows.
+            if recursive:
+                # the recursive-CTE fixpoint; earlier CTEs are temp views
+                df = self._internal_sql(
+                    f"WITH RECURSIVE {name} AS ({body}) SELECT * FROM {name}"
+                )
+            else:
+                df = self._internal_sql(body)
+            if not isinstance(df, DataFrame):
+                raise ValueError(f"CTE {name!r} body must be a query")
+            if cols:
+                df = df.toDF(*[c.strip("`") for c in split_top_level(cols)])
+            if pin:
+                df = self._pin(df)
+            df.createOrReplaceTempView(name)
+            registered.append(name)
+
+    def _sql_merge(self, shape: DmlShape) -> int:
         """MERGE INTO — the SQL-standard / Delta-Lake upsert statement:
 
-        ``MERGE INTO t [AS a] USING src|(query) [AS s] ON cond
+        ``MERGE INTO t [[AS] a] USING src|(query) [[AS] s] ON cond
         WHEN MATCHED [AND c] THEN UPDATE SET col = expr, ... | DELETE
-        WHEN NOT MATCHED [AND c] THEN INSERT [(cols)] VALUES (exprs)``
+        WHEN NOT MATCHED [BY TARGET] [AND c] THEN INSERT [(cols)] VALUES (exprs)``
+        as Spark's parser reads it (:meth:`_dml_shape`); ``WHEN NOT MATCHED
+        BY SOURCE``, ``UPDATE SET *`` and ``INSERT *`` are refused (0A000).
 
         The reference has no MERGE (its upsert surface is ON CONFLICT);
         this is the Spark-native equivalent of a Delta ``MERGE``. The
@@ -2185,41 +2229,14 @@ class DriftSession:
 
         Plan shape: one target⋈source join on the ON condition feeds every
         matched clause (ReuseExchange dedupes the join across clauses);
-        NOT MATCHED is the same join flipped to left-anti. At 100 TB this
-        is the canonical CDC-apply: the join shuffles on the merge key
-        once, and the atomic batch is the Delta commit analog."""
+        NOT MATCHED is the same join flipped to left-anti."""
         from pyspark.sql import functions as F
 
-        from driftdb_spark.temporal import AsOf
-
+        table, on = shape.table, shape.where
         log, schema_cols = self._tables[table]
         pk = log.pk_col
-        talias = talias or table
-        merge_scope = self._referenced_catalog_objects(table, source, on, whens)
-        self._register_states(AsOf.now(), merge_scope)
-        # the USING source (or an ON/WHEN subquery) may read a stored
-        # VIEW: re-execute referenced definitions over the fresh states
-        self._register_views(AsOf.now(), merge_scope)
-        src = source.strip()
-        # `USING (subquery) [AS] alias` or `USING table [AS] alias`
-        ms = _re.match(r"^(\(.*\)|\w+)\s*(?:AS\s+)?(\w+)?$", src, _re.DOTALL)
-        if ms is None:
-            raise ValueError(f"cannot parse MERGE source: {src!r}")
-        # an unaliased bare source keeps its own name as the alias
-        # (standard SQL: `USING src ON t.id = src.id` must resolve);
-        # only an unaliased subquery needs the synthetic alias
-        default_alias = "__src" if ms.group(1).startswith("(") else ms.group(1)
-        src_sql, salias = ms.group(1), (ms.group(2) or default_alias)
-        clauses = []
-        for part in _re.split(r"\bWHEN\b", whens, flags=_re.IGNORECASE):
-            part = part.strip()
-            if not part:
-                continue
-            mw = self._MERGE_WHEN_RE.match(part)
-            if mw is None:
-                raise ValueError(f"cannot parse MERGE WHEN clause: {part!r}")
-            clauses.append((mw.group(1) is not None, mw.group(2), mw.group(3)))
-
+        talias = shape.alias or table
+        src_sql, salias = shape.source, shape.source_alias
         base_from = f"FROM {table} {talias} JOIN {src_sql} {salias} ON {on}"
         # duplicate-match guard (PostgreSQL: "MERGE command cannot affect
         # row a second time")
@@ -2234,37 +2251,17 @@ class DriftSession:
 
         def apply() -> None:
             consumed = None  # matched pks already claimed by an earlier clause
-            for is_not_matched, extra, action in clauses:
+            for matched, verb, extra, assigns in shape.clauses:
                 cond = f" WHERE {extra}" if extra else ""
-                au = action.upper()
-                if is_not_matched:
-                    if not au.startswith("INSERT"):
-                        raise ValueError("WHEN NOT MATCHED supports INSERT only")
-                    mi = _re.match(
-                        r"INSERT\s*(?:\(([^)]*)\))?\s*VALUES\s*\((.+)\)\s*$",
-                        action,
-                        _re.IGNORECASE | _re.DOTALL,
-                    )
-                    cols = (
-                        [c.strip() for c in mi.group(1).split(",")]
-                        if mi.group(1)
-                        else list(schema_cols)
-                    )
-                    exprs = split_top_level(mi.group(2))
-                    sel = ", ".join(
-                        f"({e}) AS {c}" for c, e in zip(cols, exprs)
-                    )
+                if not matched:
+                    sel = ", ".join(f"({e}) AS {c}" for c, e in assigns.items())
                     anti = (
                         f"SELECT {sel} FROM {src_sql} {salias} "
                         f"WHERE NOT EXISTS (SELECT 1 FROM {table} {talias} "
                         f"WHERE {on})" + (f" AND ({extra})" if extra else "")
                     )
                     rows = self.spark.sql(anti).select(
-                        *[
-                            F.col(c).cast(schema_cols[c]).alias(c)
-                            for c in cols
-                            if c in schema_cols
-                        ]
+                        *[F.col(c).cast(schema_cols[c]).alias(c) for c in assigns]
                     )
                     self._insert_gate(table, rows)
                     self._writer(table).insert(rows)
@@ -2275,15 +2272,11 @@ class DriftSession:
                     keys = keys.join(consumed, pk, "left_anti")
                 keys = self._pin(keys)
                 consumed = keys if consumed is None else consumed.unionByName(keys)
-                if au == "DELETE":
+                if verb == "DELETE":
                     self._delete_rows(
                         table, self._view(table).join(keys, pk, "left_semi")
                     )
                     continue
-                assigns = {}
-                for a in split_top_level(action[len("UPDATE SET") :]):
-                    col, _, expr = a.partition("=")
-                    assigns[col.strip()] = expr.strip()
                 if pk in assigns:
                     raise ValueError("MERGE may not assign the primary key")
                 patch_sel = ", ".join(
@@ -2359,22 +2352,22 @@ class DriftSession:
         self._mview_paths[name] = path
         return 0
 
-    def _project_returning(self, df: DataFrame) -> DataFrame:
-        """Project the affected-rows frame through the RETURNING list."""
+    def _project_returning(self, df: DataFrame, returning: str) -> DataFrame:
+        """Project the affected rows — the INSERT batch, the UPDATE
+        post-image, the DELETE pre-image — through the RETURNING list."""
         from pyspark.sql import functions as F
 
-        exprs = split_top_level(self._returning)
+        exprs = split_top_level(returning)
         if exprs == ["*"]:
             return df
         return df.select(*[F.expr(e) for e in exprs])
 
     def _pin(self, df: DataFrame) -> DataFrame:
-        """Materialize a frame BEFORE a write mutates the state it reads
-        (persist spills rather than recomputes — the same pinning
-        contract as EventLog._append's)."""
-        df = df.persist()
-        df.count()
-        return df
+        """Materialize a frame BEFORE a write mutates the state it reads.
+        A local checkpoint, not a cache entry: Spark's cache answers every
+        later plan equal to a cached one, so a cached pin would serve a
+        later statement's same plan with rows that have since changed."""
+        return df.localCheckpoint()
 
     def _add_constraint_validated(
         self,
@@ -2712,35 +2705,25 @@ class DriftSession:
             self.add_foreign_key(name, child_col, parent, parent_col, on_delete=action)
         return 0
 
-    def _sql_insert(
-        self, table: str, col_list: str | None, tail: str, conflict: str | None = None
-    ) -> int:
+    def _insert_source(self, shape: DmlShape) -> DataFrame:
+        """The rows an INSERT writes, one column per listed (or schema)
+        column: its VALUES or query source, read at the source's own FOR
+        SYSTEM_TIME target over the states and stored views it names."""
+        cols = list(shape.columns or self._tables[shape.table][1])
+        scope = self._referenced_catalog_objects(shape.source)
+        self._register_states(shape.asof, scope)
+        self._register_views(shape.asof, scope)
+        return self.spark.sql(shape.source).toDF(*cols)
+
+    def _sql_insert(self, shape: DmlShape) -> int:
         from pyspark.sql import functions as F
 
+        table, conflict, ret = shape.table, shape.conflict, shape.returning
         log, schema_cols = self._tables[table]
-        cols = (
-            [c.strip() for c in col_list.split(",")]
-            if col_list
-            else list(schema_cols)
-        )
-        if tail.upper().startswith("VALUES"):
-            # Spark's own parser handles the literal syntax.
-            rows = self.spark.sql(
-                f"SELECT * FROM ({tail}) AS _v({', '.join(cols)})"
-            )
-        else:
-            # INSERT ... SELECT: the SELECT may carry its own temporal
-            # clause — peel and resolve it like any query (including any
-            # stored views it reads, re-executed over the fresh states).
-            clean, asof = parse_system_time(tail)
-            ins_scope = self._referenced_catalog_objects(clean)
-            self._register_states(asof, ins_scope)
-            self._register_views(asof, ins_scope)
-            rows = self.spark.sql(clean).toDF(*cols)
-        typed = rows.select(
+        cols = list(shape.columns or schema_cols)
+        typed = self._insert_source(shape).select(
             *[F.col(c).cast(schema_cols[c]).alias(c) for c in cols]
         )
-        ret = getattr(self, "_returning", None)
         cons0 = self._constraints.get(table)
         if cons0 is not None and cons0.defaults:
             # Columns omitted from the INSERT list fill from their DEFAULT
@@ -2758,7 +2741,12 @@ class DriftSession:
             # lazily and must not observe its own insert when RETURNING
             # re-projects it.
             typed = self._pin(typed)
-        if conflict is not None:
+        rows = typed
+        if conflict is None:
+            out = self._insert(table, typed)
+        elif self._active_txn is not None:
+            raise ValueError("ON CONFLICT is not supported inside a transaction block")
+        elif conflict == "NOTHING":
             # PostgreSQL upsert surface. DO NOTHING inserts only the rows
             # whose PK is not already live (one anti-join, which the FK
             # and constraint checks see too; WITH CHECK covers the whole
@@ -2766,27 +2754,20 @@ class DriftSession:
             # the conflict check); DO UPDATE is last-writer-wins full row
             # replacement (an Insert event superseding the old one — time
             # travel keeps both versions).
-            if self._active_txn is not None:
-                raise ValueError(
-                    "ON CONFLICT is not supported inside a transaction block"
-                )
-            if conflict == "NOTHING":
-                fresh = typed.join(
-                    log.state_at().select("pk"),
-                    typed[log.pk_col].cast("string") == F.col("pk"),
-                    "left_anti",
-                )
-                if ret is not None:
-                    fresh = self._pin(fresh)  # lazy anti-join would see its
-                    # own insert and return nothing
-                self._insert_gate(table, fresh, proposed=typed)
-                out = log.insert(fresh)
-                return self._project_returning(fresh) if ret is not None else out
+            rows = typed.join(
+                log.state_at().select("pk"),
+                typed[log.pk_col].cast("string") == F.col("pk"),
+                "left_anti",
+            )
+            if ret is not None:
+                rows = self._pin(rows)  # a lazy anti-join would see its
+                # own insert and return nothing
+            self._insert_gate(table, rows, proposed=typed)
+            out = log.insert(rows)
+        else:
             self._insert_gate(table, typed, upsert=True)
             out = log.upsert(typed)
-            return self._project_returning(typed) if ret is not None else out
-        out = self._insert(table, typed)
-        return self._project_returning(typed) if ret is not None else out
+        return self._project_returning(rows, ret) if ret is not None else out
 
     # -- foreign keys ---------------------------------------------------------
 

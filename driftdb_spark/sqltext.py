@@ -126,6 +126,16 @@ def skip_balanced_paren(sql: str, pos: int) -> int | None:
     return None
 
 
+def unclosed_parens(sql: str) -> int:
+    """How many ``)`` in the code of ``sql`` close a ``(`` before it.
+    Raises :class:`Unlexable` on text that does not lex."""
+    depth = low = 0
+    for m in _code_matches(_PAREN, sql):
+        depth += 1 if m.group() == "(" else -1
+        low = min(low, depth)
+    return -low
+
+
 def search_code(rx: re.Pattern, sql: str, pos: int = 0) -> re.Match | None:
     """The first match of ``rx`` that starts outside literals, quoted
     identifiers and comments, or ``None`` (also when the text does not

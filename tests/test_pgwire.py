@@ -128,6 +128,9 @@ def test_wire_protocol_end_to_end(server):
     # error recovers: bad SQL -> ErrorResponse, connection stays usable
     _c, _r, _t, err = c.query("SELECT definitely_broken FROM nowhere")
     assert err is not None
+    # Spark's own SQLSTATE reaches the ErrorResponse code field
+    _c, _r, _t, err = c.query("SELEC 1")
+    assert err is not None and b"C42601\x00" in err
     cols, rows, tag, err = c.query("SELECT 1 AS one")
     assert err is None and rows == [["1"]]
     c.close()

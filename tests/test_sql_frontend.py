@@ -56,6 +56,27 @@ def test_update_expressions_see_old_row(sess):
     log.update_where(COLS, "id = 1", {"qty": "qty * 2", "name": "concat(name, '-v2')"})
     row = sess.sql("SELECT name, qty FROM products WHERE id = 1").first()
     assert row["name"] == "bolt-v2" and row["qty"] == 10
+    # the SQL UPDATE reads its SET and WHERE through Spark's parser: a
+    # keyword inside a literal or a subquery does not cut the statement
+    sess.sql("UPDATE products SET name = ' WHERE x' WHERE id = 2")
+    sess.sql(
+        "UPDATE products SET qty = (SELECT max(qty) FROM products WHERE id <> 3) "
+        "WHERE id = 3"
+    )
+    rows = {(r.id, r.name, r.qty) for r in sess.sql("SELECT * FROM products").collect()}
+    assert rows == {(1, "bolt-v2", 10), (2, " WHERE x", 9), (3, "gear", 10)}
+    # the parser places a predicate (IN, LIKE …) at its keyword and EXISTS
+    # at its enclosing clause: the cut condition still reads as written
+    sess.sql(
+        "UPDATE products SET qty = 1 "
+        "WHERE (id) IN (SELECT id FROM products WHERE name LIKE 'g%')"
+    )
+    sess.sql(
+        "UPDATE products SET name = upper(name) "
+        "WHERE EXISTS (SELECT 1 FROM products WHERE qty = 1)"
+    )
+    rows = {(r.id, r.name, r.qty) for r in sess.sql("SELECT * FROM products").collect()}
+    assert rows == {(1, "BOLT-V2", 10), (2, " WHERE X", 9), (3, "GEAR", 1)}
 
 
 def test_views_and_materialized_views(sess, spark, tmp_path):
@@ -168,6 +189,20 @@ def test_alter_table_add_column(sess):
     assert sess.sql("SELECT grade FROM products WHERE id = 1").first()["grade"] == "A"
     with pytest.raises(ValueError):
         sess.alter_table_add_column("products", "grade", "string")
+    # a column the table lacks fails loudly (42703) and writes nothing: a
+    # later ADD COLUMN of that name must not surface the refused value
+    seq = sess.table("products").last_sequence()
+    for stmt in (
+        "UPDATE products SET nope = 7 WHERE id = 1",
+        "INSERT INTO products (id, bogus) VALUES (9, 1)",
+    ):
+        with pytest.raises(ValueError, match="does not exist") as err:
+            sess.sql(stmt)
+        assert err.value.sqlstate == "42703"
+    assert sess.table("products").last_sequence() == seq
+    sess.sql("ALTER TABLE products ADD COLUMN nope INT")
+    rows = {(r.id, r.nope) for r in sess.sql("SELECT id, nope FROM products").collect()}
+    assert rows == {(1, None), (2, None), (3, None)}
 
 
 def test_fk_on_delete_cascade_transitive(spark, tmp_path):
@@ -564,6 +599,12 @@ def test_dml_returning(spark, tmp_path):
     assert [(r.id, r.bal) for r in out.collect()] == [(1, 150)]
     # post-image, not pre-image
     assert s.sql("SELECT bal FROM acc WHERE id = 1").first()["bal"] == 150
+    # the same statement again sees the state it left: a pinned image must
+    # not answer the repeat (nor feed its Patch events)
+    for want in (151, 152):
+        out = s.sql("UPDATE acc SET bal = bal + 1 WHERE id = 1 RETURNING bal")
+        assert [r.bal for r in out.collect()] == [want]
+    s.sql("UPDATE acc SET bal = 150 WHERE id = 1")
     out = s.sql("DELETE FROM acc WHERE id = 2 RETURNING *")
     assert [(r.id, r.owner, r.bal) for r in out.collect()] == [(2, "bob", 100)]
     assert s.sql("SELECT COUNT(*) AS n FROM acc").first()["n"] == 1
@@ -636,6 +677,39 @@ def test_merge_into(spark, tmp_path):
             "WHEN MATCHED THEN UPDATE SET qty = -99"
         )
     assert s.sql("SELECT qty FROM inv WHERE sku = 1").first()["qty"] == 15
+
+    def inv():
+        return {
+            (r.sku, r.qty, r.status)
+            for r in s.sql("SELECT sku, qty, status FROM inv").collect()
+        }
+
+    # a subquery source with its own JOIN ... ON; a column-less INSERT
+    # (PostgreSQL) fills every column in schema order
+    s.sql(
+        "MERGE INTO inv t USING (SELECT d.sku, d.dq FROM delta d "
+        "JOIN dup_src x ON d.sku = x.k) s ON t.sku = s.sku "
+        "WHEN NOT MATCHED THEN INSERT VALUES (s.sku, s.dq, 'cl')"
+    )
+    assert inv() == {(1, 15, "ok"), (2, 0, "cl"), (3, 7, "ok"), (4, 3, "new")}
+    # a CASE WHEN inside an assignment is not a WHEN clause
+    s.sql(
+        "MERGE INTO inv t USING delta d ON t.sku = d.sku WHEN MATCHED THEN "
+        "UPDATE SET status = CASE WHEN d.dq > 0 THEN 'up' ELSE 'flat' END"
+    )
+    assert inv() == {(1, 15, "up"), (2, 0, "flat"), (3, 7, "ok"), (4, 3, "up")}
+    # shapes the engine does not route refuse with 0A000, an unknown
+    # column with 42703, before anything is written
+    for stmt, state in (
+        ("WHEN NOT MATCHED BY SOURCE THEN DELETE", "0A000"),
+        ("WHEN MATCHED THEN UPDATE SET *", "0A000"),
+        ("WHEN NOT MATCHED THEN INSERT *", "0A000"),
+        ("WHEN MATCHED THEN UPDATE SET nope = 1", "42703"),
+    ):
+        with pytest.raises(ValueError) as err:
+            s.sql(f"MERGE INTO inv t USING delta d ON t.sku = d.sku {stmt}")
+        assert err.value.sqlstate == state, stmt
+    assert inv() == {(1, 15, "up"), (2, 0, "flat"), (3, 7, "ok"), (4, 3, "up")}
 
 
 def test_catalog_introspection(spark, tmp_path):
@@ -1075,6 +1149,14 @@ def test_explain_dml_builds_plan_without_executing(spark, tmp_path):
         "EXPLAIN DELETE FROM t WHERE id = 2": "DeleteEvents",
         "EXPLAIN MERGE INTO t USING t s ON t.id = s.id "
         "WHEN MATCHED THEN UPDATE SET v = s.v": "MergeEvents",
+        # the statement is cut where Spark's parser cuts it, not at the
+        # first keyword inside a literal or a subquery
+        "EXPLAIN UPDATE t SET v = length(' WHERE x') WHERE id = 1": (
+            "set=v = length(' WHERE x')"
+        ),
+        "EXPLAIN MERGE INTO t USING (SELECT a.id, a.v FROM t a JOIN t b "
+        "ON a.id = b.id) s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET v = s.v": "on=t.id = s.id",
     }
     for stmt, node in cases.items():
         plan = sess.sql(stmt)
