@@ -15,6 +15,9 @@ regression; the per-pass raw times ship in "runs" for spread inspection.
 Results are materialized through the noop sink (full computation, no
 driver transfer noise). Internal persists made by iterative queries are
 built once up front and dropped after the suite.
+
+The suite is ``perfbench/headline.py``'s frozen HEADLINE list (suite_rev
+7); the repository benchmark, ``perfbench/run.py``, times the same list.
 """
 
 from __future__ import annotations
@@ -29,86 +32,32 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from driftdb_spark.registry import query_map  # noqa: E402
 from driftdb_spark.session import get_spark  # noqa: E402
-
-# Representative slice of SURVEY §2: scan+agg, multi-join, window, temporal
-# reconstruction, dedup, similarity, text — the operator families a user
-# actually runs, each stressing a different physical plan shape.
-HEADLINE = [
-    "q1_pricing_summary",
-    "agg_group_having",
-    "join_multi_chain",
-    "join_left_agg",
-    "window_agg_frames",
-    "orderby_limit_offset",
-    "events_reconstruct_current",
-    "events_asof_sequence",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "sim_cosine_topk",
-    "text_token_df",
-    # breadth markers added before BENCH_r1: widest join tree, quantifier
-    # collapse, the fused corpus pipeline, and cohort analytics
-    "q8_market_share",
-    "q21_waiting_supplier",
-    "pipeline_training_corpus",
-    "events_retention_cohorts",
-    # r3 breadth: iterative machinery (connected components, pagerank),
-    # correlated-min and double-quantifier TPC-H shapes, TF-IDF ranking —
-    # the expensive non-headline families where regressions used to hide
-    "dedup_cluster_components",
-    "graph_pagerank_nations",
-    "q2_min_cost_supplier",
-    "q20_potential_promotion",
-    "fulltext_tfidf_search",
-    # r4 breadth: trained quantizer (2-round Lloyd, one lazy plan),
-    # substring-level exact dedup (corpus-wide shingle exchange), and
-    # overlapping chunking (map-only HOF plan) — the three new pipeline
-    # operator families added this round
-    "sim_kmeans_lloyd",
-    "dedup_substring_spans",
-    "text_chunk_overlap",
-    "text_bpe_learn_merges",
-    # r7 breadth: batched retrieval (Q-fold scan + WindowGroupLimit) and
-    # the bin-pruned exact skyline — the two new scan shapes this round
-    "sim_cosine_topk_batch",
-    "sample_pareto_frontier",
-]
+from perfbench.headline import HEADLINE, ITERATIVE  # noqa: E402
 
 N_WARMUP = 2
 N_REPEATS = 3
 
 # ---------------------------------------------------------------------------
-# Machine-drift control arm (r12 judge ask #3). BENCH_r11-vs-r10 measured a
-# uniform 1.31x "regression" that a cross-commit A/B (BENCH_drift_ab_r12)
-# proved was the MACHINE drifting 1.37x between rounds with code held
-# constant. This block makes every future BENCH_r*.json carry its own drift
-# divisor: a FROZEN workload — pure-Spark queries written inline here, no
-# driftdb_spark code on the path, bit-identical across rounds as long as
-# this block is never edited (control_rev guards that) — timed alongside
-# the suite and compared to the reference medians recorded when the block
-# was introduced. "drift" = median(control_now / control_ref); divide two
-# rounds' totals by their drift factors before comparing them.
-# DO NOT EDIT the control queries; bump control_rev and re-pin CONTROL_REF
-# if they ever must change.
+# Machine-drift control arm. Between two rounds the same code once measured
+# a uniform 1.31x "regression" that a cross-commit A/B traced to the
+# machine, not the code. So every run carries its own drift divisor: a
+# FROZEN workload — pure-Spark queries written inline here, no driftdb_spark
+# code on the path — timed alongside the suite and compared to reference
+# medians pinned when the block was introduced. "drift" =
+# median(control_now / control_ref); divide two runs' totals by their drift
+# factors before comparing them. DO NOT EDIT the control queries; bump
+# control_rev and re-pin CONTROL_REF if they ever must change.
 #
-# r14 (judge asks #2/#3, additions only — the control queries themselves are
-# byte-unchanged): the suite is now BRACKETED by the control arm — one pass
-# BEFORE the suite and one AFTER — because r13's single post-suite reading
-# could not separate "machine was slow all run" from "machine degraded
-# during the run" (the ITERATIVE block runs last and absorbed monotone
-# end-of-run degradation). Each arm gets its own pinned reference medians
-# (a pre-suite control runs on a colder JVM than a post-suite one, so the
-# two arms are pinned separately and never compared to each other's ref).
-# control_rev bumped 1 -> 2 for the re-pin; the r13 post-suite pins are kept
-# below for the historical record.
+# The suite is BRACKETED by the control arm — one pass before it and one
+# after — so "the machine was slow all run" can be told apart from "the
+# machine degraded during the run" (the ITERATIVE block runs last and
+# absorbs end-of-run degradation). A pre-suite control runs on a colder JVM
+# than a post-suite one, so each arm has its own pinned reference.
 CONTROL_REV = 2
 CONTROL_REF_ROUND = 14  # machine state the reference medians were pinned at
 CONTROL_REF_SF = "0.1"  # data scale the medians were pinned at
-# pinned r14: per-arm medians of three full bench runs on the r14 round's
-# VM (interleaved with two round-start-HEAD runs of the r13 harness whose
-# post-suite controls read drift 1.08/1.23 vs the r13 pin — i.e. this VM
-# sits within ~20% of the r13 pin machine). The PRE arm runs on a colder
-# JVM, hence its systematically higher pins.
+# pinned r14: per-arm medians of three full bench runs. The PRE arm runs
+# on a colder JVM, hence its systematically higher pins.
 CONTROL_REF_PRE = {
     "ctl_scan_agg": 0.263,
     "ctl_join_agg": 0.2819,
@@ -178,12 +127,12 @@ def _run_control(spark, sf_dir: str, sf: str, ref: dict) -> dict:
         "ref": ref,
         "runs": runs,
     }
-    # the pinned medians are only meaningful at the pinned data scale
-    # (review-found): at any other SPARK_GRAFT_SF_DIR the frozen queries
-    # run against different data volumes and the ratio is garbage. The
-    # controls are still TIMED and reported — those timings are what a
-    # later analyst needs to re-pin CONTROL_REF at a new scale — but the
-    # drift factor is nulled rather than ~10x wrong.
+    # the pinned medians are only meaningful at the pinned data scale: at
+    # any other SPARK_GRAFT_SF_DIR the frozen queries run against different
+    # data volumes and the ratio is garbage. The controls are still TIMED
+    # and reported — those timings are what a later analyst needs to re-pin
+    # CONTROL_REF at a new scale — but the drift factor is nulled rather
+    # than ~10x wrong.
     if sf != CONTROL_REF_SF:
         out["machine_drift"] = None
         out["note"] = f"sf {sf} != pinned sf {CONTROL_REF_SF}: drift not comparable"
@@ -198,21 +147,6 @@ def _run_control(spark, sf_dir: str, sf: str, ref: dict) -> dict:
     out["machine_drift"] = round(statistics.median(ratios), 4) if ratios else None
     return out
 
-# Queries whose fn() runs a driver-side fixpoint loop and RETURNS a
-# persisted result: under build-once these would do all their work in the
-# untimed build and the timed pass would just read cache (measured
-# 0.05 s for connected components — nonsense). They are timed with a
-# fresh build per pass, cache cleared first, so every pass pays the full
-# iterative computation.
-ITERATIVE = {
-    "dedup_cluster_components",
-    "graph_pagerank_nations",
-    "text_bpe_learn_merges",
-    # persists its doc-stats and candidate frames internally: build-once
-    # would time a cache read, so it pays the full build every pass
-    "sample_pareto_frontier",
-}
-
 
 def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
@@ -223,9 +157,9 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(app_name="driftdb_spark_bench")
 
-    # drift-control arm, pass 1 of 2 (r14, judge ask #3): machine state at
-    # suite START. Runs on a colder JVM than the post-suite pass, which is
-    # why it has its own pinned reference (CONTROL_REF_PRE). The suite's
+    # drift-control arm, pass 1 of 2: machine state at suite START. Runs
+    # on a colder JVM than the post-suite pass, which is why it has its
+    # own pinned reference (CONTROL_REF_PRE). The suite's
     # own N_WARMUP passes still follow, so the timed region's warm-up
     # protocol is unchanged; the ~18 tiny control materializations ahead of
     # it only make the suite's first warm-up marginally warmer.
@@ -264,12 +198,11 @@ def main() -> None:
     control_post = _run_control(spark, sf_dir, sf, CONTROL_REF_POST)
 
     times = {name: round(statistics.median(ts), 4) for name, ts in runs.items()}
-    # r14 (judge ask #2): the stdout contract line carries MEDIANS ONLY —
-    # BENCH_r12's line was truncated mid-capture because per-pass raw runs
-    # made it grow every round, which zeroed PERF_r13's entire
-    # round-over-round comparison. Raw per-pass runs (suite + both control
-    # arms) now go to a sidecar file next to this script; the one-line JSON
-    # keeps only what the driver's comparison needs.
+    # The stdout contract line carries MEDIANS ONLY: with per-pass raw runs
+    # in it the line grew every round until a capture truncated it. Raw
+    # per-pass runs (suite + both control arms) go to a sidecar file next
+    # to this script; the one-line JSON keeps only what a round-over-round
+    # comparison needs.
     def _slim(control: dict) -> dict:
         return {k: v for k, v in control.items() if k != "runs"}
 
@@ -280,7 +213,7 @@ def main() -> None:
         # Suite composition changes between rounds (r2: 16 queries best-of-3,
         # r3+: median-of-3 over a grown list). Longitudinal consumers must
         # key totals on (suite_rev, n_queries) or compare per-query entries,
-        # never raw totals across revs (ADVICE r3). suite_rev 7 = r14: same
+        # never raw totals across revs. suite_rev 7 = r14: same
         # queries, same timed region; control arm bracketed (pre+post) and
         # raw runs moved to the sidecar.
         "suite_rev": 7,

@@ -274,8 +274,9 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         # Only the wire server wants FAIR scheduling (per-connection pools
         # share cores between concurrent clients); every batch entry point
         # keeps FIFO — FAIR measured 8-18 % slower on shuffle-heavy batch
-        # queries (scripts/bench_isolated_ab.py --scheduler-ab). Scheduler
-        # mode is static per SparkContext, so serve must opt in here.
+        # queries (`git show 52710e8:scripts/bench_isolated_ab.py`,
+        # --scheduler-ab). Scheduler mode is static per SparkContext, so
+        # serve must opt in here.
         spark = get_spark(scheduler="FAIR" if args.cmd == "serve" else "FIFO")
     from driftdb_spark.sql_frontend import DriftSession
 

@@ -682,8 +682,9 @@ def sample_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # anything that ships rows). The previous explode + groupBy +
     # COUNT(DISTINCT) formulation paid a Generate over every token plus
     # TWO token-level exchanges (the count-distinct two-phase aggregate);
-    # all of it vanished from the plan (plans/r13/sample_pareto_frontier
-    # _before/_after: stats subtree Generate+2×Exchange → Project only).
+    # all of it vanished from the plan (`git show
+    # 52710e8:plans/r13/sample_pareto_frontier_before.txt`, and _after.txt:
+    # stats subtree Generate+2×Exchange → Project only).
     # size() yields INT, the old aggregates yielded BIGINT — cast to keep
     # the driver-checked schema identical.
     toks = F.split(F.col("text"), " ")

@@ -330,9 +330,9 @@ _SIM = (
 def ivf_centroid_row(emb: DataFrame) -> DataFrame:
     """The 1-row broadcastable coarse quantizer: the K seed vectors
     (vec_id < K_LISTS) collected into one sorted struct array with
-    precomputed norms. Shared by sim_ann_ivf and the probe-pruning
-    audit (scripts/bench_scaling.py) so the audit always measures the
-    shipped construction."""
+    precomputed norms. The quantizer of sim_ann_ivf; the probe-pruning
+    audit that measured this construction is retired to git history
+    (``git show 52710e8:scripts/bench_scaling.py``)."""
     return (
         emb.filter(F.col("vec_id") < K_LISTS)
         .select(

@@ -543,10 +543,11 @@ def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # F.broadcast() on the per-iteration rank and contribution sides —
     # motivated by the r13 driver scaling block reading 8 cores beating
     # 32 by 3× here — was implemented, A/B'd, measured a consistent
-    # 1.20–1.35× REGRESSION at local[32] (BENCH_query_ab_r14_batch2.json;
-    # interleaved arms, plus an isolated 8-vs-32-core four-way check),
-    # and reverted. Two findings: (1) the r13 anti-scaling did not
-    # reproduce on a clean machine (base medians 1.35 s at 8 cores vs
+    # 1.20–1.35× REGRESSION at local[32] (`git show
+    # 52710e8:BENCH_query_ab_r14_batch2.json`; interleaved arms, plus an
+    # isolated 8-vs-32-core four-way check), and reverted. Two findings:
+    # (1) the r13 anti-scaling did not reproduce on a clean machine
+    # (base medians 1.35 s at 8 cores vs
     # 1.33 s at 32 — flat, scheduling-floor-bound; the r13 ratio was the
     # degraded-machine artifact its own control arm flagged at 2.1×);
     # (2) static broadcast hints force each iteration's contribution

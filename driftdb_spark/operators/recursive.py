@@ -46,9 +46,10 @@ def recursive_cte(
     do not re-enter the working set, exactly the reference's algorithm).
 
     Per-iteration mechanics, settled by an isolated A/B
-    (scripts/bench_recursive_ab.py, 26-step walk at sf0.01, median of 5
-    interleaved reps): lazy ``localCheckpoint`` materialized by the
-    emptiness probe's ``count()`` — one job per iteration — plus a
+    (``git show 52710e8:scripts/bench_recursive_ab.py``, 26-step walk at
+    sf0.01, median of 5 interleaved reps): lazy ``localCheckpoint``
+    materialized by the emptiness probe's ``count()`` — one job per
+    iteration — plus a
     ``coalesce(1)`` of each frontier whose MEASURED count is tiny, so a
     near-empty working set stops scheduling default-parallelism tasks to
     move a handful of rows (the decision keys on the counted frame
@@ -60,7 +61,7 @@ def recursive_cte(
     two-stage job while eager's materialize + limit-1 probe are two
     one-stage jobs — and lazy + measured-small coalesce 2.41 s (1.18x
     over r8; 1.12-1.21x across three invocations,
-    BENCH_recursive_ab_r10.json). That sits
+    ``git show 52710e8:BENCH_recursive_ab_r10.json``). That sits
     at the driver-side floor: a recursive CTE must materialize every
     frontier before the driver can decide to continue, so wall ==
     iterations x per-job fixed cost (~0.11 s on this machine) no matter

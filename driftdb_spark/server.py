@@ -49,6 +49,7 @@ hostile client cannot allocate arbitrary memory.
 from __future__ import annotations
 
 import hashlib
+import itertools
 import os
 import re
 import socketserver
@@ -65,7 +66,6 @@ _CANCEL_REQUEST = 80877102
 _MAX_STARTUP = 1 << 20  # 1 MiB
 _MAX_FRAME = 16 << 20  # 16 MiB
 
-_QUERYLIKE = re.compile(r"^\s*(SELECT|WITH|VALUES|EXPLAIN|TABLE|SHOW)\b", re.IGNORECASE)
 _SET_AUTH = re.compile(r"^SET\s+SESSION\s+AUTHORIZATION\s+(\w+)$", re.IGNORECASE)
 _RESET_AUTH = re.compile(r"^RESET\s+SESSION\s+AUTHORIZATION$", re.IGNORECASE)
 _SHOW = re.compile(r"^SHOW\s+(\w+(?:\s+\w+)*)$", re.IGNORECASE)
@@ -834,8 +834,9 @@ class _Handler(socketserver.BaseRequestHandler):
             )
             err.sqlstate = "0A000"
             raise err
-        if _BENIGN_SET.match(sql):
-            self._complete(sql.split(None, 1)[0].upper())
+        m = _BENIGN_SET.match(sql)
+        if m:
+            self._complete(m.group(1).upper())
             return True
         return False
 
@@ -881,13 +882,23 @@ class _Handler(socketserver.BaseRequestHandler):
                 self._send(bytes(blob))
                 n += int(k)
             return n
+        fix = self._tz_row_fixer(result.schema, self.session.spark)
+        rows = result.toLocalIterator(prefetchPartitions=True)
+        return self._send_frames(self._data_row_frames(rows, fix))
+
+    def _data_row_frames(self, rows, fix):
+        """One encoded DataRow per row, timestamps normalized by ``fix``."""
+        for r in rows:
+            vals = list(r)
+            yield self._data_row_bytes(fix(vals) if fix else vals)
+
+    def _send_frames(self, frames) -> int:
+        """Send encoded frames coalesced into ~64 KiB socket writes;
+        returns how many frames were sent."""
         n = 0
         buf: list[bytes] = []
         buflen = 0
-        fix = self._tz_row_fixer(result.schema, self.session.spark)
-        for r in result.toLocalIterator(prefetchPartitions=True):
-            vals = list(r)
-            b = self._data_row_bytes(fix(vals) if fix else vals)
+        for b in frames:
             buf.append(b)
             buflen += len(b)
             if buflen >= 65536:
@@ -913,9 +924,9 @@ class _Handler(socketserver.BaseRequestHandler):
     }
 
     def _tag_for(self, sql: str, result) -> str:
-        verb = sql.split(None, 1)[0].upper()
         if isinstance(result, str):
             return result
+        verb = classify(sql).verb or ""
         return self._TAGS.get(verb, verb).format(n=result)
 
     # -- COPY (bulk data transfer; the reference declares CopyIn/CopyOut
@@ -1023,22 +1034,15 @@ class _Handler(socketserver.BaseRequestHandler):
         )
         self._send(self._msg(b"H", body))  # CopyOutResponse
         sep = "," if fmt.lower() == "csv" else "\t"
-        n = 0
-        buf: list[bytes] = []
-        buflen = 0
         fix = self._tz_row_fixer(result.schema, self.session.spark)
-        for r in result.toLocalIterator(prefetchPartitions=True):
+
+        def copy_data(r) -> bytes:
             vals = fix(list(r)) if fix else r
             line = sep.join(self._copy_escape(v) for v in vals) + "\n"
-            b = self._msg(b"d", line.encode())
-            buf.append(b)
-            buflen += len(b)
-            if buflen >= 65536:
-                self._send(b"".join(buf))
-                buf, buflen = [], 0
-            n += 1
-        if buf:
-            self._send(b"".join(buf))
+            return self._msg(b"d", line.encode())
+
+        rows = result.toLocalIterator(prefetchPartitions=True)
+        n = self._send_frames(map(copy_data, rows))
         self._send(self._msg(b"c", b""))  # CopyDone
         self._complete(f"COPY {n}")
 
@@ -1175,22 +1179,13 @@ class _Handler(socketserver.BaseRequestHandler):
             # belongs to Execute
             self._row_description(["plan"])
             return
-        if _QUERYLIKE.match(sql) and not _SHOW.match(sql):
+        if _is_readonly_sql(sql) and not _SHOW.match(sql):
+            # a read of any kind (SELECT/VALUES/TABLE, WITH … SELECT,
+            # SHOW/DESCRIBE) plans for its schema; a word-only SHOW is
+            # the compat shim's to answer at Execute, and anything that
+            # may write (WITH … INSERT included) waits for Execute
             try:
-                if self._isolated and _is_readonly_sql(sql):
-                    df = (
-                        self.session.sql(sql, args)
-                        if args
-                        else self.session.sql(sql)
-                    )
-                else:
-                    with self.server.exec_lock:
-                        df = (
-                            self.session.sql(sql, args)
-                            if args
-                            else self.session.sql(sql)
-                        )
-                self._row_description(df.columns)
+                self._row_description(self._dispatch(sql, args).columns)
                 return
             except Exception:
                 pass
@@ -1248,30 +1243,10 @@ class _Handler(socketserver.BaseRequestHandler):
         rest), then PortalSuspended ('s') if rows remain else
         CommandComplete — the protocol's paging contract."""
         it = p["iter"]
-        budget = max_rows if max_rows > 0 else None
-        buf: list[bytes] = []
-        buflen = 0
-        while budget is None or budget > 0:
-            if p["pending"] is not None:
-                row = p["pending"]
-                p["pending"] = None
-            else:
-                row = next(it, None)
-                if row is None:
-                    break
-            vals = list(row)
-            fix = p.get("fix")
-            b = self._data_row_bytes(fix(vals) if fix else vals)
-            buf.append(b)
-            buflen += len(b)
-            if buflen >= 65536:
-                self._send(b"".join(buf))
-                buf, buflen = [], 0
-            p["sent"] += 1
-            if budget is not None:
-                budget -= 1
-        if buf:
-            self._send(b"".join(buf))
+        rows = it if p["pending"] is None else itertools.chain([p["pending"]], it)
+        if max_rows > 0:
+            rows = itertools.islice(rows, max_rows)
+        p["sent"] += self._send_frames(self._data_row_frames(rows, p["fix"]))
         # one-row lookahead decides suspended-vs-complete
         p["pending"] = next(it, None)
         if p["pending"] is None:
@@ -1310,14 +1285,9 @@ class _Handler(socketserver.BaseRequestHandler):
             # Isolated SparkSession per connection (shared SparkContext):
             # private temp-view namespace → concurrent READ dispatch needs
             # no global lock (see _dispatch). Falls back to the base
-            # session's Spark below if cloning fails (or when the A/B
-            # knob forces serial mode), in which case _isolated stays
-            # False and every statement takes exec_lock.
-            spark = (
-                base.spark
-                if getattr(self.server, "serialize_dispatch", False)
-                else _clone_spark(base.spark)
-            )
+            # session's Spark below if cloning fails, in which case
+            # _isolated stays False and every statement takes exec_lock.
+            spark = _clone_spark(base.spark)
             self.session = type(base)(spark, base.storage_dir)
             # ONE security monitor server-wide: per-connection escalation/
             # rate-limit events aggregate on the base session's counters
@@ -1557,7 +1527,6 @@ class PgWireServer:
         ssl_context=None,
         max_connections: int | None = None,
         warm_workers: bool = False,
-        serialize_dispatch: bool = False,
     ):
         if auth_method not in ("md5", "cleartext"):
             raise ValueError("auth_method must be 'md5' or 'cleartext'")
@@ -1569,11 +1538,6 @@ class PgWireServer:
         self._tcp.allow_reuse_address = True
         self._tcp.session = session
         self._tcp.exec_lock = threading.Lock()
-        # A/B + debug knob: force the pre-r9 behavior (every statement,
-        # reads included, holds exec_lock and shares the base session's
-        # SparkSession). bench_wire_concurrent.py measures the win of
-        # per-connection sessions + lock-free reads against this.
-        self._tcp.serialize_dispatch = serialize_dispatch
         self._tcp.users = dict(users or {})
         self._tcp.superusers = set(superusers or ())
         self._tcp.auth_method = auth_method

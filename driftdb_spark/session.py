@@ -14,8 +14,10 @@ config here is chosen to also hold on a multi-executor cluster at ~100 TB:
 
 from __future__ import annotations
 
+import logging
 import os
 
+from pyspark.logger import PySparkLogger
 from pyspark.sql import SparkSession
 
 
@@ -57,15 +59,16 @@ def get_spark(
     is scheduling, not session startup.
 
     ``scheduler``: job-scheduling mode for the SparkContext. FIFO is the
-    engine default — an isolated A/B (scripts/bench_isolated_ab.py
-    --scheduler-ab; both orders, fresh processes) measured FAIR costing
-    8-18 % on shuffle-heavy batch queries, so batch/bench work must not
-    pay it. The wire-serve path opts into FAIR at session build time
-    (cli serve → get_spark(scheduler="FAIR")) so concurrent connections
-    share executor cores via per-connection pools instead of queueing
-    whole jobs. Scheduler mode is static per SparkContext: it cannot be
-    flipped after getOrCreate, which is why it is a build-time argument
-    and not a server-side conf set.
+    engine default — an isolated A/B (``git show
+    52710e8:scripts/bench_isolated_ab.py``, --scheduler-ab; both orders,
+    fresh processes) measured FAIR costing 8-18 % on shuffle-heavy batch
+    queries, so batch/bench work must not pay it. The wire-serve path opts
+    into FAIR at session build time (cli serve →
+    get_spark(scheduler="FAIR")) so concurrent connections share executor
+    cores via per-connection pools instead of queueing whole jobs.
+    Scheduler mode is static per SparkContext: it cannot be flipped after
+    getOrCreate, which is why it is a build-time argument and not a
+    server-side conf set.
     """
     cpus = _cpus()
     builder = (
@@ -91,7 +94,8 @@ def get_spark(
     # Production-scale I/O knobs (optimization guide §2.3/§6), env-
     # parameterized with INERT local defaults: the driver's bench must stay
     # comparable across rounds and core counts, so nothing changes unless
-    # the operator opts in. Cluster guidance (OPTIMIZATION_r13.md):
+    # the operator opts in. Cluster guidance (`git show
+    # 52710e8:OPTIMIZATION_r13.md`):
     # SPARK_GRAFT_MAX_PARTITION_BYTES=512m-1g for large sequential scans
     # (fewer map tasks feeding every shuffle), SPARK_GRAFT_IO_CODEC=zstd
     # for shuffle/spill compression on real networks (better ratio for a
@@ -104,14 +108,20 @@ def get_spark(
         builder = builder.config("spark.io.compression.codec", io_codec)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # PySpark logs every captured exception that carries a query context
+    # as a ~10 KB ERROR JSON record on stderr; the session's query log
+    # already records the error, and the exception still raises. The
+    # loggers must come from PySparkLogger.getLogger: a plain Logger
+    # registered first under these names would be handed back to PySpark,
+    # whose structured-keyword logger.exception() call it rejects.
+    for name in ("SQLQueryContextLogger", "DataFrameQueryContextLogger"):
+        PySparkLogger.getLogger(name).setLevel(logging.CRITICAL)
     # getOrCreate reuses a live SparkContext, silently dropping every
     # builder config — including the scheduler, which cannot change after
     # launch. A serve path that requested FAIR but got a pre-existing
     # FIFO context would have inert per-connection pools: say so.
     actual = spark.sparkContext.getConf().get("spark.scheduler.mode", "FIFO")
     if actual.upper() != scheduler.upper():
-        import logging
-
         logging.getLogger(__name__).warning(
             "get_spark(scheduler=%r) reused a live SparkContext running %s "
             "— scheduler mode is fixed at JVM launch; restart the process "

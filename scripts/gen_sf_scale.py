@@ -1,6 +1,6 @@
 """Synthesize an sf1-scale testdata decade from the driver's sf0.1 tables.
 
-The driver ships sf0.001/0.01/0.1 only; the scaling-curve bench needs one
+The driver ships sf0.001/0.01/0.1 only; a claimed win is checked at one
 more decade to separate per-iteration scheduling overhead from data cost on
 the iterative operators (BPE, pagerank, connected components, k-means). We
 cannot write to /root/testdata, so sf1 lands in the repo-local (gitignored)
@@ -65,10 +65,9 @@ def perturb_replica_text(df, r: int):
     bit-identical — the same planted dups exist within each replica —
     while making shingle spaces across replicas disjoint, i.e. an Nx
     corpus with the SAME dup rate, which is what a real decade looks
-    like. Replica 0 passes through untouched. (Shared with
-    bench_lsh_decade.py so the two decades use one construction;
-    n_chars metadata is intentionally left at the original value —
-    the benches measure plan scaling, not metadata consistency.)"""
+    like. Replica 0 passes through untouched. (n_chars metadata is
+    intentionally left at the original value — the decade measures plan
+    scaling, not metadata consistency.)"""
     if r == 0:
         return df
     return df.withColumn(

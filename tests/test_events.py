@@ -510,8 +510,8 @@ def test_snapshot_bounds_tail_scan_in_plan(spark, log):
     with a snapshot present, state_at must replay only the tail — asserted
     here as the `sequence > snap_seq` bound reaching the parquet scan as a
     pushed filter (row-group pruning at scale). The 10M-event timing behind
-    this shape is scripts/bench_snapshot_tail.py → BENCH_snapshot_tail.json
-    (3.1x over full replay)."""
+    this shape is ``git show 52710e8:scripts/bench_snapshot_tail.py`` →
+    ``git show 52710e8:BENCH_snapshot_tail.json`` (3.1x over full replay)."""
     import io
     from contextlib import redirect_stdout
 

@@ -8,6 +8,7 @@ way this server routes them into DriftSession.sql.
 
 from __future__ import annotations
 
+import re
 import socket
 import struct
 
@@ -214,23 +215,7 @@ class ExtClient(Client):
         """Parse/Bind/Describe(portal)/Execute/Sync — the libpq
         PQexecParams flow. ``oids`` declares parameter types in Parse
         (0 / omitted = unspecified, server infers from shape)."""
-        body = name.encode() + b"\x00" + query.encode() + b"\x00"
-        body += struct.pack(f"!H{len(oids)}I", len(oids), *oids)
-        self.send_msg(b"P", body)
-        bind = b"\x00" + name.encode() + b"\x00" + struct.pack("!H", 0)
-        bind += struct.pack("!H", len(params))
-        for p in params:
-            if p is None:
-                bind += struct.pack("!i", -1)
-            else:
-                b = str(p).encode()
-                bind += struct.pack("!i", len(b)) + b
-        bind += struct.pack("!H", 0)  # result formats: default text
-        self.send_msg(b"B", bind)
-        self.send_msg(b"D", b"P\x00")
-        self.send_msg(b"E", b"\x00" + struct.pack("!i", 0))
-        self.send_msg(b"S", b"")
-        msgs = self.read_until_ready()
+        msgs = self.ext_messages(query, params, name, oids)
         cols, rows, tag, err = [], [], None, None
         for t, p in msgs:
             if t == "T":
@@ -258,6 +243,26 @@ class ExtClient(Client):
             elif t == "E":
                 err = p
         return cols, rows, tag, err
+
+    def ext_messages(self, query, params=(), name="", oids=()):
+        """The raw (type, payload) replies to one ext_query flow."""
+        body = name.encode() + b"\x00" + query.encode() + b"\x00"
+        body += struct.pack(f"!H{len(oids)}I", len(oids), *oids)
+        self.send_msg(b"P", body)
+        bind = b"\x00" + name.encode() + b"\x00" + struct.pack("!H", 0)
+        bind += struct.pack("!H", len(params))
+        for p in params:
+            if p is None:
+                bind += struct.pack("!i", -1)
+            else:
+                b = str(p).encode()
+                bind += struct.pack("!i", len(b)) + b
+        bind += struct.pack("!H", 0)  # result formats: default text
+        self.send_msg(b"B", bind)
+        self.send_msg(b"D", b"P\x00")
+        self.send_msg(b"E", b"\x00" + struct.pack("!i", 0))
+        self.send_msg(b"S", b"")
+        return self.read_until_ready()
 
     def txn_status(self):
         """Send an empty Sync and return the ReadyForQuery status byte."""
@@ -292,6 +297,11 @@ def test_extended_protocol_prepared_statements(server):
     assert err is None and rows == [["2"]]
     cols, rows, _t, err = c.ext_query("SELECT 41 + 1 AS v")
     assert err is None and rows == [["42"]]
+    # Describe(portal) answers a read with its RowDescription, ahead of
+    # Execute: a SHOW with a quoted argument and a WITH … SELECT
+    for q in ("SHOW TABLES LIKE 'pt*'", "WITH w AS (SELECT 1 AS v) SELECT v FROM w"):
+        types = [t for t, _p in c.ext_messages(q)]
+        assert types[:3] == ["1", "2", "T"] and "E" not in types, (q, types)
     # a $N inside a literal is text, not a marker
     cols, rows, _t, err = c.ext_query("SELECT '$1 off' AS a, $1 AS b", [5])
     assert err is None and rows == [["$1 off", "5"]]
@@ -1396,7 +1406,10 @@ def test_parse_session_tz_offset_styles():
 def test_cte_dml_executes_over_wire_under_exec_lock(server):
     """WITH…INSERT executes over the wire (r10: it was classified as a
     write but then died in Catalyst with an opaque RDD error), publishes
-    its rows, and is serialized on exec_lock like every other write."""
+    its rows, and is serialized on exec_lock like every other write. Over
+    the extended protocol, Describe runs no write: the row is published
+    once, by Execute. Command tags carry the statement's verb past a WITH
+    prefix and leading comments."""
 
     class CountingLock:
         def __init__(self, inner):
@@ -1410,7 +1423,7 @@ def test_cte_dml_executes_over_wire_under_exec_lock(server):
             return self.inner.__exit__(*a)
 
     host, port = server.address
-    c = Client(host, port)
+    c = ExtClient(host, port)
     c.ssl_probe()
     c.startup()
     _c, _r, _t, err = c.query("CREATE TABLE wcd (id INT PRIMARY KEY, v INT)")
@@ -1425,12 +1438,23 @@ def test_cte_dml_executes_over_wire_under_exec_lock(server):
             "WITH src AS (SELECT id + 1 AS id, v + 1 AS v FROM wcd) "
             "INSERT INTO wcd SELECT * FROM src"
         )
-        assert err is None
+        assert err is None and re.fullmatch(r"INSERT 0 \d+", tag)
         assert lock.count >= 1  # the write serialized on exec_lock
         _c, rows, _t, err = c.query("SELECT id, v FROM wcd ORDER BY id")
         assert err is None and rows == [["1", "10"], ["2", "11"]]
+        _c, _r, tag, err = c.ext_query(
+            "WITH s AS (SELECT max(id) + 1 AS id, 0 AS v FROM wcd) "
+            "INSERT INTO wcd SELECT * FROM s"
+        )
+        assert err is None and re.fullmatch(r"INSERT 0 \d+", tag)
+        _c, rows, _t, err = c.query("SELECT id FROM wcd ORDER BY id")
+        assert err is None and rows == [["1"], ["2"], ["3"]]
     finally:
         server._tcp.exec_lock = lock.inner
+    _c, _r, tag, err = c.query("/* c */ UPDATE wcd SET v = 0 WHERE id = 1")
+    assert err is None and re.fullmatch(r"UPDATE \d+", tag)
+    _c, _r, tag, err = c.query("-- c\nDELETE FROM wcd WHERE id = 3")
+    assert err is None and re.fullmatch(r"DELETE \d+", tag), tag
     c.close()
 
 

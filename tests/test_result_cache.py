@@ -291,8 +291,9 @@ def test_warm_rerun_is_5x_faster_on_cacheable_queries(spark, tmp_path):
     """Effectiveness, not just correctness (round-8 ask): a warm rerun of
     a cacheable aggregate must be >=5x faster than the cold run — the hit
     path is a scan of the materialized parquet, never a re-execution of
-    the join/shuffle. Companion artifact: BENCH_cache_r08.json
-    (scripts/bench_cache.py) measures the full suite + invalidation cost."""
+    the join/shuffle. The full suite + invalidation cost was measured by
+    ``git show 52710e8:scripts/bench_cache.py`` into
+    ``git show 52710e8:BENCH_cache_r08.json``."""
     import statistics
     import time
 
@@ -331,7 +332,8 @@ def test_warm_rerun_is_5x_faster_on_cacheable_queries(spark, tmp_path):
     # r8 ADVICE: the hit/miss counters above already prove the cache
     # property deterministically, so the wall-clock ratio is a SOFT
     # check — under heavy ambient load it skips instead of flaking
-    # (BENCH_cache_r08 carries the hard number: 38x p50 isolated).
+    # (`git show 52710e8:BENCH_cache_r08.json` carries the hard number: 38x
+    # p50 isolated).
     warm = statistics.median(warms)
     if cold / warm < 5:
         t0 = time.perf_counter()

@@ -317,7 +317,7 @@ def test_catalog_persists_across_sessions(spark, tmp_path):
         )
 
 
-def test_sql_views_and_explain_dispatch(spark, tmp_path):
+def test_sql_views_and_explain_dispatch(spark, tmp_path, capfd):
     """CREATE VIEW persists SQL text re-executed per query (stays current
     as events land — reference views.rs semantics); EXPLAIN returns the
     formatted physical plan; DROP VIEW unregisters."""
@@ -343,8 +343,14 @@ def test_sql_views_and_explain_dispatch(spark, tmp_path):
     sess.sql("DROP VIEW big")
     import pytest as _pytest
 
+    capfd.readouterr()
     with _pytest.raises(Exception):
         sess.sql("SELECT * FROM big").collect()
+    # the analysis error is the query log's to record: PySpark's
+    # query-context logger does not dump it on stderr as well
+    assert "SQLQueryContextLogger" not in capfd.readouterr().err
+    last = sess.query_log().collect()[-1]
+    assert last.statement == "SELECT * FROM big" and "big" in last.error
 
 
 def test_sql_ddl_maintenance_dispatch(spark, tmp_path):
