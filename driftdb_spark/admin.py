@@ -38,7 +38,6 @@ __all__ = [
     "status",
     "health_check",
     "verify_integrity",
-    "prune_commit_log",
     "index_stats",
     "config_dump",
     "migration_status",
@@ -278,11 +277,9 @@ def verify_integrity(
         )
         def _floor_check():
             ev_max = int(ev.agg(F.max("sequence")).first()[0] or 0)
-            if not log.meta_store.exists():
-                # warn-only: pre-meta stores can't be checked, and failing
+            if not log.has_meta():
+                # warn-only: pre-meta logs can't be checked, and failing
                 # them would make verify useless on every legacy log.
-                # Asked of the STORE (not os.path.exists(meta.json)) so a
-                # commit-log-backed table is verified, not skipped.
                 return "missing meta (legacy log)"
             floor = int(log.read_meta().get("seq_floor", 0))
             if ev_max > floor:
@@ -334,66 +331,6 @@ def verify_integrity(
 
             r["checksum_rows"] = _safe(_full_read)
 
-        # manifest agreement — commit-log stores only: the store's
-        # add/remove file-action fold (commitlog.entries_at) must name
-        # exactly the published entries; a STABLE mismatch means the log
-        # can no longer answer "what entries exist at version V"
-        # truthfully. The JSON store keeps no manifest: check skipped.
-        if hasattr(log.meta_store, "entries_at"):
-
-            def _manifest_check():
-                import time as _t
-
-                # recheck-on-mismatch (review-found): verify runs against
-                # a LIVE table, and an append renaming its batch into the
-                # dir before recording its add is a benign in-flight
-                # state, not corruption — only a mismatch stable across
-                # re-reads is reported. Manifest BEFORE directory
-                # (review-found): appends publish-then-commit, so an
-                # entry the manifest names is already in the dir at any
-                # later read — reading the dir first let a whole append
-                # land between the reads and show up as a spurious
-                # manifest-only entry, one more transient shape for the
-                # retry loop to absorb; in this order a manifest-only
-                # entry is a reliable phantom (rewrite-crash) signal.
-                for _attempt in range(3):
-                    got = log.meta_store.entries_at()
-                    want = log._log_entries()
-                    if got == want:
-                        return "ok"
-                    _t.sleep(0.05)
-                # pre-manifest carve-out (review-found): a log written
-                # before file actions existed has real batches but zero
-                # recorded actions — warn, don't fail (same contract as
-                # the 'missing meta (legacy log)' floor check); `admin
-                # recover` seeds the manifest. Keyed off the fold's
-                # actions_seen flag, which checkpoints persist — NOT off
-                # scanning surviving commit files (review-found: after a
-                # retention prune() removes the action-carrying tail,
-                # the scan misclassified a real divergence — e.g. an
-                # append crash after purge-to-empty+prune — as
-                # pre-manifest and verify passed on a corrupted
-                # manifest).
-                if (
-                    not got
-                    and want
-                    and not log.meta_store.read().get("actions_seen")
-                ):
-                    return (
-                        "no file actions recorded (pre-manifest commit "
-                        "log); run `admin recover` to seed the manifest"
-                    )
-                extra = sorted(set(got) - set(want))
-                missing = sorted(set(want) - set(got))
-                return (
-                    f"MISMATCH: manifest-only={extra[:3]} "
-                    f"dir-only={missing[:3]} — a crash between an "
-                    "append's publish and its commit, a crash between a "
-                    "rewrite's commit and its swap, or hand-moved batch "
-                    "dirs; `admin recover` reconciles the manifest"
-                )
-
-            r["manifest"] = _safe(_manifest_check)
         r["ok"] = (
             r["sequence_duplicates"] == 0
             and r["batch_misaligned"] == 0
@@ -401,50 +338,10 @@ def verify_integrity(
             and r["pk_duplicates"] == 0
             and r["constraints"] in ("ok", "none declared")
             and r["snapshots"] == "ok"
-            and (
-                r.get("manifest", "ok") == "ok"
-                or str(r.get("manifest", "")).startswith("no file actions")
-            )
             and not str(r.get("checksum_rows", "")).startswith("error")
         )
         out[name] = r
     return {"ok": all(r["ok"] for r in out.values()), "tables": out}
-
-
-def prune_commit_log(
-    sess, table: str | None = None, keep_commits: int | None = None
-) -> dict:
-    """Retention cleanup of commit-log metadata — the operator entry
-    point for ``CommitLogMetaStore.prune()`` (Delta's metadata cleanup,
-    ``delta.logRetentionDuration``; the reference's analogous lifecycle
-    is segment rotation, table_storage.rs:212-261). Without this the
-    lifecycle is Python-only and ``read()``'s directory listing grows
-    one dirent per commit for the table's life.
-
-    Lock-free by design: prune only removes commit files whose fold is
-    inside the latest checkpoint, writers claim versions put-if-absent,
-    and readers retry their listing on a concurrent removal — the
-    concurrency stress in tests/test_commitlog.py pins this, so no
-    rewrite lock is taken here. ``keep_commits`` (default one
-    checkpoint interval) retains headroom so consumers whose watermark
-    trails the checkpoint by a few versions keep getting exact
-    ``rewrites_since`` answers instead of the conservative reseed.
-    Tables on the JSON meta store keep no commit log and are reported
-    as skipped."""
-    from driftdb_spark.commitlog import CHECKPOINT_INTERVAL
-
-    if keep_commits is None:
-        keep_commits = CHECKPOINT_INTERVAL
-    names = [table] if table else sorted(sess._tables)
-    out: dict = {}
-    for name in names:
-        log, _cols = sess._tables[name]
-        store = log.meta_store
-        if not hasattr(store, "prune"):
-            out[name] = {"skipped": "json meta store keeps no commit log"}
-            continue
-        out[name] = store.prune(keep_commits=keep_commits)
-    return {"tables": out}
 
 
 def index_stats(sess, table: str | None = None) -> list[dict]:
@@ -701,71 +598,6 @@ def recover(
                     act(name, "remove_purge_scratch", st, age_sec=round(age))
                     if not dry_run:
                         shutil.rmtree(st, ignore_errors=True)
-            # commit-log scratch (_commit_log/_tmp-*): a crash between the
-            # commit body's scratch write and its os.link publish strands
-            # the scratch file forever — invisible to every reader (the
-            # put-if-absent protocol only opens *.json), pure dead disk
-            # accumulating one file per crash (advisor-found: every other
-            # scratch family was swept, this one wasn't). Files, not dirs;
-            # same age gate — an in-flight commit keeps its scratch.
-            for st in glob.glob(os.path.join(log.path, "_commit_log", "_tmp-*")):
-                try:
-                    age = now - os.path.getmtime(st)
-                except OSError:
-                    continue
-                if age >= min_staging_age_sec:
-                    act(name, "remove_commitlog_scratch", st, age_sec=round(age))
-                    if not dry_run:
-                        with contextlib.suppress(OSError):
-                            os.remove(st)
-            # manifest reconciliation (commit-log stores only,
-            # review-found): a crash between a rewrite's clock commit and
-            # its swap leaves the recorded file actions AHEAD of the
-            # directory (phantom adds/removes), and a crash between an
-            # append's publish and its commit leaves them BEHIND (a live
-            # batch with no recorded add). Neither heals on its own — a
-            # later rewrite's removes are always the pinned DIRECTORY
-            # set, so a phantom entry is never removed and `admin verify`
-            # stays red forever. Under the rewrite lock the directory is
-            # rewrite-quiescent (a racing APPEND is add-only, and
-            # re-recording an add is idempotent in the set fold), so
-            # repair = ONE commit whose actions are exactly the diff.
-            if hasattr(log.meta_store, "entries_at"):
-                try:
-                    # manifest BEFORE directory (review-found): the
-                    # rewrite lock held here excludes rewrites but NOT
-                    # appends, and appends publish-then-commit. Reading
-                    # the dir first let an append land between the two
-                    # reads and get its LIVE batch recorded as a
-                    # manifest REMOVE — recover manufacturing the exact
-                    # corruption it repairs. In this order a racing
-                    # append can only surface as a directory-only entry,
-                    # which is re-recorded as an add (idempotent in the
-                    # set fold).
-                    got = set(log.meta_store.entries_at())
-                    want = set(log._log_entries())
-                except (OSError, ValueError):
-                    want = got = set()  # unreadable manifest: nothing provable
-                if want != got:
-                    act(
-                        name,
-                        "reconcile_manifest",
-                        log.path,
-                        adds=sorted(want - got),
-                        removes=sorted(got - want),
-                    )
-                    if not dry_run:
-                        # carry the real high-water mark: when this seeds
-                        # a FRESH commit-log store (migration from the
-                        # JSON store), the floor must land at-or-above
-                        # every assigned sequence or verify's floor check
-                        # would flag the seeded table; bump folds max, so
-                        # an already-correct clock is unchanged
-                        log.meta_store.bump(
-                            seq_floor=log.last_sequence(),
-                            adds=sorted(want - got),
-                            removes=sorted(got - want),
-                        )
         if dry_lockfree and os.path.exists(lock_file):
             # a first-ever rewrite created the lock mid-scan: our
             # lock-free plan may list its LIVE staging as scratch.

@@ -79,7 +79,7 @@ class _TableDict(dict):
 # tables once into a multi-file copy under the repo warehouse, fingerprinted
 # against the source file so edits invalidate. Values are byte-identical
 # (parquet→parquet roundtrip); correctness checks still compare against
-# DuckDB reading the ORIGINAL files. Disable with SPARK_GRAFT_RECHUNK=0.
+# DuckDB reading the ORIGINAL files.
 _CHUNK_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "_chunked")
 # Partition sizing is by ROWS, not cores: a fact table gets ~one split per
 # _RECHUNK_ROWS_PER_SPLIT rows (capped at defaultParallelism), while small
@@ -92,8 +92,6 @@ _RECHUNK_ROWS_PER_SPLIT = 75_000
 def _rechunked_path(spark: SparkSession, name: str, path: str, sf_dir: str) -> str | None:
     """Return the path of a splittable copy of ``path``, building it if
     needed; None when the source is already parallelizable or too small."""
-    if os.environ.get("SPARK_GRAFT_RECHUNK", "1") == "0":
-        return None
     try:
         import pyarrow.parquet as pq
 

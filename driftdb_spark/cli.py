@@ -124,21 +124,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     ap.add_argument("--section", default=None, choices=("storage", "session", "spark"))
     asub.add_parser("migrations", help="migration ledger status")
     ap = asub.add_parser(
-        "prune-log",
-        help="retention cleanup of commit-log metadata: remove commit "
-        "files folded into the latest checkpoint (Delta metadata "
-        "cleanup; reference segment rotation, table_storage.rs)",
-    )
-    ap.add_argument("--table", default=None)
-    ap.add_argument(
-        "--keep",
-        type=int,
-        default=None,
-        metavar="N",
-        help="retain N newest prunable commits as consumer headroom "
-        "(default: one checkpoint interval)",
-    )
-    ap = asub.add_parser(
         "recover",
         help="complete interrupted log swaps, rescue stranded batches, "
         "reclaim torn-write scratch (reference error_recovery.rs)",
@@ -364,14 +349,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             print(json.dumps(admin.config_dump(sess, section=args.section)))
         elif args.admin_cmd == "migrations":
             print(json.dumps(admin.migration_status(sess)))
-        elif args.admin_cmd == "prune-log":
-            print(
-                json.dumps(
-                    admin.prune_commit_log(
-                        sess, table=args.table, keep_commits=args.keep
-                    )
-                )
-            )
         elif args.admin_cmd == "recover":
             print(
                 json.dumps(

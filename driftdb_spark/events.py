@@ -71,6 +71,14 @@ class ConcurrentAppendError(RuntimeError):
     standing in for the reference's per-table lock + AtomicU64
     (table_storage.rs:212-261)."""
 
+
+class LegacyCommitLogTable(RuntimeError):
+    """The table directory holds a ``_commit_log/`` written by the retired
+    commit-log clock (removed after ``cf1dcbf``). Its ``meta.json`` floor
+    may be stale, so the engine refuses the table rather than reuse
+    purged sequence numbers."""
+
+
 EVENT_SCHEMA = T.StructType(
     [
         T.StructField("sequence", T.LongType(), False),
@@ -216,66 +224,6 @@ def pk_conflicts(ev: DataFrame, rows: DataFrame, pk_col: str) -> DataFrame:
     )
 
 
-class JsonFileMetaStore:
-    """Default persisted-meta backend: one flock'd JSON file per table.
-
-    Advances under a read-modify-write (two publishers racing a plain
-    replace could persist the smaller floor); ``seq_floor`` only ever
-    rises; a rewrite bumps the generation and stamps a fresh rewrite_id.
-    Atomic tmp+rename so a reader never sees a torn file. On a real
-    cluster this per-table counter lives in the commit protocol (Delta
-    log version) instead of a local file — SCALE.md §6; the executable
-    proof of that mapping is ``commitlog.CommitLogMetaStore``, which
-    implements this same two-method interface."""
-
-    def __init__(self, table_path: str):
-        self.table_path = table_path
-
-    def _meta_path(self) -> str:
-        return os.path.join(self.table_path, "meta.json")
-
-    def exists(self) -> bool:
-        """Whether this table has EVER persisted meta — `admin verify`
-        uses this to distinguish a checkable store from a pre-meta legacy
-        log (which warns instead of failing). Store-specific because the
-        probe must match the backend, not assume meta.json."""
-        return os.path.exists(self._meta_path())
-
-    def read(self) -> dict:
-        try:
-            with open(self._meta_path()) as fh:
-                return json.load(fh)
-        except (FileNotFoundError, ValueError):
-            return {"seq_floor": 0, "generation": 0, "rewrite_id": ""}
-
-    def bump(
-        self,
-        seq_floor: int,
-        rewrite: bool = False,
-        adds: list[str] | None = None,
-        removes: list[str] | None = None,
-    ) -> dict:
-        # adds/removes (Delta-style file actions) are accepted for
-        # interface parity and ignored: the JSON store keeps no entry
-        # manifest — the events directory is authoritative; the
-        # commit-log store records them (commitlog.entries_at).
-        del adds, removes
-        os.makedirs(self.table_path, exist_ok=True)
-        lock_path = os.path.join(self.table_path, ".meta.lock")
-        with open(lock_path, "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            meta = self.read()
-            meta["seq_floor"] = max(int(meta.get("seq_floor", 0)), int(seq_floor))
-            if rewrite:
-                meta["generation"] = int(meta.get("generation", 0)) + 1
-                meta["rewrite_id"] = uuid.uuid4().hex[:12]
-            tmp = self._meta_path() + f".tmp-{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as fh:
-                json.dump(meta, fh, sort_keys=True)
-            os.replace(tmp, self._meta_path())
-            return meta
-
-
 class EventLog:
     """Append-only event log for one logical table."""
 
@@ -286,7 +234,6 @@ class EventLog:
         pk_col: str = "id",
         validate_fn=None,
         post_commit_fn=None,
-        meta_store=None,
     ):
         """``validate_fn(batch: DataFrame, event_type: str) -> DataFrame``
         is the BEFORE-trigger analog (reference triggers.rs:30-145): it may
@@ -309,24 +256,16 @@ class EventLog:
         self.post_commit_fn = post_commit_fn
         self._events_dir = os.path.join(path, "events")
         self._snap_dir = os.path.join(path, "snapshots")
-        # pluggable sequence-clock/rewrite-generation backend (SCALE.md §6).
-        # When the caller doesn't inject one, the ON-DISK format decides:
-        # a table with a _commit_log/ directory runs on the commit-log
-        # store, the same way a _delta_log/ directory IS what makes a
-        # directory a Delta table. Without this, a commit-store table
-        # re-opened by a fresh session (the CLI constructs sessions from
-        # --data) silently fell back to meta.json — which after a
-        # purge-to-empty holds NO floor, so the next append would reuse
-        # purged sequence numbers (the reverse-migration twin of the
-        # aliased-sequence family; review-found).
-        if meta_store is None:
-            if os.path.isdir(os.path.join(path, "_commit_log")):
-                from driftdb_spark.commitlog import CommitLogMetaStore
-
-                meta_store = CommitLogMetaStore(path)
-            else:
-                meta_store = JsonFileMetaStore(path)
-        self.meta_store = meta_store
+        if os.path.isdir(os.path.join(path, "_commit_log")):
+            # the retired commit-log clock kept its floor there, not in
+            # meta.json; opening on meta.json alone could reuse purged
+            # sequence numbers
+            raise LegacyCommitLogTable(
+                f"table {path!r} holds a _commit_log/ directory: its sequence "
+                "clock lives in that log, which this engine no longer reads; "
+                "read the table with the store at "
+                "`git show cf1dcbf:driftdb_spark/commitlog.py`"
+            )
         # Replica logs are read-only: every mutation path (append, txn
         # publish, snapshot, compact, purge) refuses with SQLSTATE 25006.
         # Set by replication.Replica; cleared by promote().
@@ -340,10 +279,15 @@ class EventLog:
             )
 
     # -- persisted meta (sequence high-water + rewrite generation) -----------
-    # NOTE: there is deliberately no EventLog-level meta path — the
-    # on-disk shape belongs to the STORE (meta.json is a JsonFileMetaStore
-    # detail; the commit-log store has none). Probe via meta_store.exists()
-    # / read(); a path probe here caused the r12 verify bypass.
+
+    def _meta_path(self) -> str:
+        return os.path.join(self.path, "meta.json")
+
+    def has_meta(self) -> bool:
+        """Whether this table has EVER persisted meta — `admin verify`
+        uses this to tell a checkable table from a pre-meta legacy log
+        (which warns instead of failing)."""
+        return os.path.exists(self._meta_path())
 
     def read_meta(self) -> dict:
         """Persisted per-table meta: ``seq_floor`` is the monotonic
@@ -356,24 +300,33 @@ class EventLog:
         ``AS OF @SEQ:N`` identities at new rows). ``generation`` counts
         log rewrites (compact/purge) and ``rewrite_id`` is a fresh token
         per rewrite, so replication's ship() detects rewrites explicitly
-        instead of inferring them from entry-name sets.
+        instead of inferring them from entry-name sets."""
+        try:
+            with open(self._meta_path()) as fh:
+                return json.load(fh)
+        except (FileNotFoundError, ValueError):
+            return {"seq_floor": 0, "generation": 0, "rewrite_id": ""}
 
-        Delegates to the pluggable ``meta_store`` — the default is the
-        flock'd JSON file; :class:`driftdb_spark.commitlog.
-        CommitLogMetaStore` is the Delta-commit-protocol shape proving
-        the SCALE.md §6 collapse claim executable."""
-        return self.meta_store.read()
-
-    def _bump_meta(
-        self,
-        seq_floor: int,
-        rewrite: bool = False,
-        adds: list[str] | None = None,
-        removes: list[str] | None = None,
-    ) -> None:
-        self.meta_store.bump(
-            seq_floor=seq_floor, rewrite=rewrite, adds=adds, removes=removes
-        )
+    def _bump_meta(self, seq_floor: int, rewrite: bool = False) -> None:
+        """Advance the persisted meta under a flock'd read-modify-write
+        (two publishers racing a plain replace could persist the smaller
+        floor); ``seq_floor`` only ever rises; a rewrite bumps the
+        generation and stamps a fresh rewrite_id. Atomic tmp+rename so a
+        reader never sees a torn file. On a real cluster this per-table
+        counter is the commit protocol's version (a Delta log version) —
+        SCALE.md §6."""
+        os.makedirs(self.path, exist_ok=True)
+        with open(os.path.join(self.path, ".meta.lock"), "w") as lk:
+            fcntl.flock(lk, fcntl.LOCK_EX)
+            meta = self.read_meta()
+            meta["seq_floor"] = max(int(meta.get("seq_floor", 0)), int(seq_floor))
+            if rewrite:
+                meta["generation"] = int(meta.get("generation", 0)) + 1
+                meta["rewrite_id"] = uuid.uuid4().hex[:12]
+            tmp = self._meta_path() + f".tmp-{uuid.uuid4().hex[:8]}"
+            with open(tmp, "w") as fh:
+                json.dump(meta, fh, sort_keys=True)
+            os.replace(tmp, self._meta_path())
 
     @contextlib.contextmanager
     def _rewrite_lock(self, op: str = "rewrite"):
@@ -639,14 +592,8 @@ class EventLog:
             # a crash in between leaves the floor stale, which the newest
             # entry's footer covers (last_sequence takes the max of all
             # three sources). The floor is what survives a future
-            # purge-to-empty rewrite. The published entry name rides the
-            # commit as a Delta add-file action (commitlog.entries_at);
-            # the same crash window leaves it unrecorded — locally the
-            # directory stays authoritative (on real Delta the commit IS
-            # the publish, so the window does not exist — SCALE.md §6).
-            self._bump_meta(
-                seq_floor=base + total, adds=[os.path.basename(final)]
-            )
+            # purge-to-empty rewrite.
+            self._bump_meta(seq_floor=base + total)
         finally:
             src.unpersist()
         if self.post_commit_fn is not None:
@@ -902,9 +849,7 @@ class EventLog:
         the sequence clock; see :meth:`read_meta`) and
         ``generation``/``rewrite_id`` (so replication's ship() reseeds
         replicas on the persisted signal, not by diffing entry-name sets
-        a clock reset could alias). The bump also records the rewrite's
-        file actions — retired pinned entries, rebuilt entry — which the
-        commit-log store folds into its manifest (``entries_at``).
+        a clock reset could alias).
 
         The rebuilt log is materialized ONCE, directly under
         ``events.new`` as a hidden staging dir, then renamed to a uniform
@@ -944,7 +889,6 @@ class EventLog:
             .agg(F.min("sequence").alias("lo"))
             .first()
         )
-        adds: list[str] = []
         if row["lo"] is None:
             # the rebuild removed every event (purge-to-empty): the new
             # log is an empty dir with no batch entry
@@ -952,31 +896,15 @@ class EventLog:
         else:
             entry = f"batch-{int(row['lo']):020d}"
             os.rename(staging, os.path.join(new_dir, entry))
-            adds.append(entry)
-        # The clock commit lands AFTER the rebuild is staged and named —
-        # so its body can carry Delta-style file actions: the pinned
-        # entry set this rewrite retires (removes) and the rebuilt entry
-        # (adds), making commitlog.entries_at answerable from the log
-        # alone — but BEFORE any rename touches the live directory: the
-        # crash invariant is bump-before-swap, not bump-before-write
-        # (staging is invisible, and a crash up to here leaves only
-        # reclaimable scratch with NO meta change — the old floor-first
-        # order paid a spurious replica reseed for a crash during the
-        # Spark write; this order doesn't). A crash between this bump and
-        # the renames below still costs at worst one spurious reseed
-        # (safe, idempotent), during which the recorded manifest runs
-        # ahead of the directory — `admin recover` repairs it with a
-        # reconciling commit (recover's reconcile_manifest action;
-        # without that the phantom actions would NEVER heal, because a
-        # later rewrite's removes are always the pinned directory set) —
-        # locally the directory stays authoritative (on real Delta the
-        # commit IS the publish, so that window does not exist).
-        self._bump_meta(
-            seq_floor=self.last_sequence(),
-            rewrite=True,
-            adds=adds,
-            removes=list(known_entries),
-        )
+        # The clock bump lands AFTER the rebuild is staged and named but
+        # BEFORE any rename touches the live directory: the crash
+        # invariant is bump-before-swap, not bump-before-write (staging is
+        # invisible, and a crash up to here leaves only reclaimable
+        # scratch with NO meta change, so no spurious replica reseed for a
+        # crash during the Spark write). A crash between this bump and the
+        # renames below costs at worst one spurious reseed (safe,
+        # idempotent).
+        self._bump_meta(seq_floor=self.last_sequence(), rewrite=True)
         old_dir = self._events_dir + f".old-{uuid.uuid4().hex[:8]}"
         # an absent live dir is a valid (never-written or fully-purged)
         # log: rewrite it as empty rather than crash (fuzz-found)

@@ -91,21 +91,6 @@ def get_spark(
         .config("spark.scheduler.mode", scheduler)
         .config("spark.driver.memory", _driver_memory())
     )
-    # Production-scale I/O knobs (optimization guide §2.3/§6), env-
-    # parameterized with INERT local defaults: the driver's bench must stay
-    # comparable across rounds and core counts, so nothing changes unless
-    # the operator opts in. Cluster guidance (`git show
-    # 52710e8:OPTIMIZATION_r13.md`):
-    # SPARK_GRAFT_MAX_PARTITION_BYTES=512m-1g for large sequential scans
-    # (fewer map tasks feeding every shuffle), SPARK_GRAFT_IO_CODEC=zstd
-    # for shuffle/spill compression on real networks (better ratio for a
-    # bit more CPU — measure per workload; lz4 default locally).
-    max_pb = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-    if max_pb:
-        builder = builder.config("spark.sql.files.maxPartitionBytes", max_pb)
-    io_codec = os.environ.get("SPARK_GRAFT_IO_CODEC")
-    if io_codec:
-        builder = builder.config("spark.io.compression.codec", io_codec)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # PySpark logs every captured exception that carries a query context

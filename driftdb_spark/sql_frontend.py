@@ -59,6 +59,14 @@ class UndefinedColumn(ValueError):
     sqlstate = "42703"
 
 
+class ActiveSqlTransaction(RuntimeError, ValueError):
+    """A log-rewriting maintenance statement (VACUUM, COMPACT, PURGE)
+    inside a transaction block: PostgreSQL's active_sql_transaction
+    (25001). Like any failed statement it poisons the open transaction."""
+
+    sqlstate = "25001"
+
+
 @dataclass
 class DmlShape:
     """An INSERT, UPDATE, DELETE or MERGE as Spark's parser reads it
@@ -627,6 +635,15 @@ class DriftSession:
             timer.cancel()
             sc.setJobGroup("", "")
 
+    def _refuse_in_txn(self, verb: str) -> None:
+        """The one 25001 gate for statements that rewrite a table's log:
+        a rewrite cannot be buffered and rolled back (PostgreSQL refuses
+        VACUUM inside a transaction block the same way)."""
+        if self._active_txn is not None:
+            raise ActiveSqlTransaction(
+                f"{verb} cannot run inside a transaction block"
+            )
+
     def _sql_impl(self, query: str, args=None) -> DataFrame | int:
         stripped = query.strip().rstrip(";").strip()
         # PostgreSQL-style aborted-transaction gate, covering every
@@ -986,10 +1003,7 @@ class DriftSession:
         if m and m.group(1) in self._tables:
             # PostgreSQL convention, reference sql_bridge.rs:279-289:
             # VACUUM <table> → COMPACT.
-            if self._active_txn is not None:
-                err = RuntimeError("VACUUM cannot run inside a transaction block")
-                err.sqlstate = "25001"  # active_sql_transaction
-                raise err
+            self._refuse_in_txn("VACUUM")
             log = self._tables[m.group(1)][0]
             log.compact()
             return log.last_sequence()
@@ -1756,6 +1770,7 @@ class DriftSession:
             log = self._tables[m.group(2)][0]
             if m.group(1).upper() == "SNAPSHOT":
                 return log.snapshot()
+            self._refuse_in_txn("COMPACT")
             log.compact()  # COMPACT implies a fresh snapshot first
             return log.last_sequence()
         m = self._PURGE_RE.match(q)
@@ -1770,16 +1785,7 @@ class DriftSession:
             # Spark's own parser evaluates the literals (no string
             # munging); an attached audit trail is scrubbed in the same
             # statement. Returns the number of events removed.
-            if self._active_txn is not None:
-                # SQLSTATE 25001 active_sql_transaction — PostgreSQL's
-                # code for VACUUM-style statements inside a txn block;
-                # carried over the wire so clients see the real class
-                err = ValueError(
-                    "PURGE is a log-rewriting maintenance statement and "
-                    "cannot run inside a transaction"
-                )
-                err.sqlstate = "25001"
-                raise err
+            self._refuse_in_txn("PURGE")
             log = self._tables[m.group(1)][0]
             keys_df = self.spark.sql(
                 f"SELECT explode(array({m.group(2)})) AS k"

@@ -346,7 +346,7 @@ def test_admin_verify_detects_sequence_clock_regression(spark, tmp_path):
     assert str(r["sequence_floor"]).startswith("VIOLATION")
 
     # a legacy log with no meta at all warns but does not fail
-    os.remove(log.meta_store._meta_path())
+    os.remove(os.path.join(log.path, "meta.json"))
     shutil.rmtree(os.path.join(log._events_dir, f"batch-{hi:020d}"))
     rep2 = admin.verify_integrity(sess, table="items")
     assert rep2["ok"]
@@ -498,39 +498,6 @@ def test_recover_dry_run_is_mutation_free(spark, tmp_path):
     assert not os.path.exists(lock_path)      # lock file NOT created
 
 
-def test_admin_verify_floor_check_on_commitlog_store(spark, tmp_path):
-    """verify's sequence-floor probe asks the META STORE, not
-    os.path.exists(meta.json): a commit-log-backed table is CHECKED (and
-    a forged past-the-floor batch still trips VIOLATION), not skipped as
-    a legacy log (review-found: the probe was hardwired to the JSON
-    file)."""
-    import pyspark.sql.functions as F
-
-    from driftdb_spark.commitlog import CommitLogMetaStore
-
-    data = str(tmp_path / "admclfloor")
-    sess = DriftSession(spark, data)
-    sess.sql("CREATE TABLE items (iid INT PRIMARY KEY, name STRING, qty INT)")
-    log = sess.table("items")
-    log.meta_store = CommitLogMetaStore(log.path)
-    sess.sql("INSERT INTO items VALUES (1, 'bolt', 5), (2, 'nut', 9)")
-    assert not os.path.exists(
-        os.path.join(log.path, "meta.json")
-    )  # no meta.json anywhere
-    rep = admin.verify_integrity(sess, table="items")
-    assert rep["ok"]
-    assert rep["tables"]["items"]["sequence_floor"] == "ok"  # checked, not skipped
-    # forged batch past the commit-log floor still trips the violation
-    hi = log.last_sequence() + 7
-    forged = log.events().limit(1).withColumn(
-        "sequence", F.lit(hi).cast("long")
-    )
-    forged.write.parquet(os.path.join(log._events_dir, f"batch-{hi:020d}"))
-    rep = admin.verify_integrity(sess, table="items")
-    assert not rep["ok"]
-    assert str(rep["tables"]["items"]["sequence_floor"]).startswith("VIOLATION")
-
-
 def test_recover_dry_run_recheck_closes_first_rewrite_race(
     spark, tmp_path, monkeypatch
 ):
@@ -581,44 +548,6 @@ def test_recover_dry_run_recheck_closes_first_rewrite_race(
     t.join(30)
     acts = [a["action"] for a in rep["tables"].get("t", [])]
     assert "remove_rewrite_scratch" not in acts, acts
-
-
-def test_recover_sweeps_commitlog_scratch(spark, tmp_path):
-    """A crash between the commit body's scratch write and its os.link
-    publish strands _commit_log/_tmp-* forever (invisible to the
-    put-if-absent readers, which only open *.json) — recover reclaims it
-    under the same age gate as every other scratch family
-    (advisor-found: this was the one unswept family)."""
-    _data, sess = _mkdb(spark, tmp_path, "clogscratch")
-    log = sess.table("items")
-    clog = os.path.join(log.path, "_commit_log")
-    os.makedirs(clog)
-    with open(os.path.join(clog, "_tmp-deadbeef"), "w") as fh:
-        fh.write("{torn")
-
-    # age gate: a fresh scratch file (in-flight commit) is untouched
-    rep = admin.recover(sess, min_staging_age_sec=3600.0)
-    assert rep["actions_total"] == 0
-    assert os.path.exists(os.path.join(clog, "_tmp-deadbeef"))
-
-    # dry run plans the sweep without touching disk
-    rep = admin.recover(sess, min_staging_age_sec=0.0, dry_run=True)
-    acts = [a["action"] for a in rep["tables"]["items"]]
-    assert "remove_commitlog_scratch" in acts
-    assert os.path.exists(os.path.join(clog, "_tmp-deadbeef"))
-
-    rep = admin.recover(sess, min_staging_age_sec=0.0)
-    acts = [a["action"] for a in rep["tables"]["items"]]
-    assert "remove_commitlog_scratch" in acts
-    assert not os.path.exists(os.path.join(clog, "_tmp-deadbeef"))
-    # committed *.json files are never swept
-    from driftdb_spark.commitlog import CommitLogMetaStore
-
-    store = CommitLogMetaStore(log.path)
-    store.bump(seq_floor=99)
-    rep = admin.recover(sess, min_staging_age_sec=0.0)
-    assert rep["actions_total"] == 0
-    assert store.read()["seq_floor"] == 99
 
 
 def test_dry_run_recover_scans_coexist(spark, tmp_path):
@@ -679,256 +608,3 @@ def test_status_reports_rewrite_lock_holder(spark, tmp_path):
     sess.sql("COMPACT items")
     with open(os.path.join(log.path, ".rewrite.lock")) as fh:
         assert json.loads(fh.read())["op"] == "compact"
-
-
-def test_verify_checks_commitlog_manifest(spark, tmp_path):
-    """On a commit-log-backed table, `admin verify` cross-checks the
-    store's add/remove file-action fold (entries_at) against the
-    published directory — the one documented divergence window (a crash
-    between the rewrite's clock commit and its swap) becomes
-    operator-detectable instead of silent. JSON-store tables skip the
-    check (they keep no manifest)."""
-    from driftdb_spark.commitlog import CommitLogMetaStore
-
-    _data, sess = _mkdb(spark, tmp_path, "manifest")
-    log = sess.table("items")
-
-    # JSON store: no manifest check in the report
-    rep = admin.verify_integrity(sess, "items")
-    assert "manifest" not in rep["tables"]["items"] and rep["ok"]
-
-    # commit-log store: agreement after appends AND a rewrite
-    log.meta_store = CommitLogMetaStore(log.path)
-    sess.sql("INSERT INTO items VALUES (7, 'rivet', 4)")
-    sess.sql("COMPACT items")
-    rep = admin.verify_integrity(sess, "items")
-    assert rep["tables"]["items"]["manifest"] == "ok" and rep["ok"]
-
-    # forge a divergence (the crash-window shape): a recorded add whose
-    # directory entry never materialized
-    log.meta_store.bump(seq_floor=log.last_sequence(), adds=["batch-bogus"])
-    rep = admin.verify_integrity(sess, "items")
-    assert rep["tables"]["items"]["manifest"].startswith("MISMATCH")
-    assert not rep["ok"]
-
-
-def test_recover_reconciles_manifest_after_rewrite_crash(spark, tmp_path, monkeypatch):
-    """Review-found: a crash between a rewrite's clock commit and its
-    swap leaves phantom file actions in the commit-log manifest that NO
-    later operation removes (a rewrite's removes are always the pinned
-    directory set) — verify would stay red forever. recover now repairs
-    it with one reconciling commit; also covers the pre-manifest legacy
-    carve-out (a commit-log table whose batches predate file actions
-    warns instead of failing, and recover seeds the manifest with the
-    real high-water floor)."""
-    from driftdb_spark.commitlog import CommitLogMetaStore
-
-    _data, sess = _mkdb(spark, tmp_path, "manrec")
-    log = sess.table("items")
-    log.meta_store = CommitLogMetaStore(log.path)
-
-    # pre-manifest state: real batches, zero recorded actions -> warn,
-    # not fail (same contract as the legacy floor check)
-    rep = admin.verify_integrity(sess, "items")
-    assert rep["tables"]["items"]["manifest"].startswith("no file actions")
-    assert rep["ok"]
-
-    # recover seeds the manifest AND the floor (>= every sequence)
-    r = admin.recover(sess, min_staging_age_sec=0.0)
-    acts = {a["action"] for a in r["tables"]["items"]}
-    assert "reconcile_manifest" in acts
-    rep = admin.verify_integrity(sess, "items")
-    t = rep["tables"]["items"]
-    assert t["manifest"] == "ok" and t["sequence_floor"] == "ok" and rep["ok"]
-
-    # crash a purge between its clock commit and the live-dir rename:
-    # the manifest now runs AHEAD of the directory (phantom rewrite)
-    calls = {"n": 0}
-    real_rename = os.rename
-
-    def crashing_rename(src, dst, **kw):
-        if calls["n"] == 1:  # 0 = staging->batch in new_dir; 1 = live->old
-            raise RuntimeError("injected crash before the swap")
-        calls["n"] += 1
-        return real_rename(src, dst, **kw)
-
-    monkeypatch.setattr(os, "rename", crashing_rename)
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="injected"):
-        log.purge(spark.createDataFrame([(1,)], "iid int"))
-    monkeypatch.setattr(os, "rename", real_rename)
-
-    rep = admin.verify_integrity(sess, "items")
-    assert rep["tables"]["items"]["manifest"].startswith("MISMATCH")
-    assert not rep["ok"]
-
-    # recover: scratch reclaimed AND manifest reconciled, idempotently
-    r = admin.recover(sess, min_staging_age_sec=0.0)
-    acts = {a["action"] for a in r["tables"]["items"]}
-    assert "reconcile_manifest" in acts
-    assert admin.recover(sess, min_staging_age_sec=0.0)["actions_total"] == 0
-    rep = admin.verify_integrity(sess, "items")
-    assert rep["tables"]["items"]["manifest"] == "ok" and rep["ok"]
-
-    # and the purge contract still holds: the re-run converges with the
-    # manifest tracking the rewrite for real this time
-    log.purge(spark.createDataFrame([(1,)], "iid int"))
-    assert log.events().filter("pk = '1'").count() == 0
-    rep = admin.verify_integrity(sess, "items")
-    assert rep["tables"]["items"]["manifest"] == "ok" and rep["ok"]
-
-
-def test_recover_reconcile_never_removes_live_batch_under_append_race(
-    spark, tmp_path
-):
-    """Review-found: recover's reconcile read the DIRECTORY before the
-    MANIFEST, so an append landing between the two reads (the rewrite
-    lock excludes rewrites, not appends) got its LIVE batch recorded as
-    a manifest REMOVE — recover manufacturing the exact corruption it
-    repairs. The reads are now manifest-first: this test fires a real
-    append right after whichever of the two reads runs first, and
-    asserts the reconcile records no removes (manifest-first turns the
-    race into an idempotent re-add) and verify stays green."""
-    from driftdb_spark.commitlog import CommitLogMetaStore
-
-    _data, sess = _mkdb(spark, tmp_path, "mrord")
-    log = sess.table("items")
-    log.meta_store = CommitLogMetaStore(log.path)
-    admin.recover(sess, min_staging_age_sec=0.0)  # seed the manifest
-    assert admin.verify_integrity(sess, "items")["ok"]
-
-    state = {"fired": False}
-    orig_ea = log.meta_store.entries_at
-    orig_le = log._log_entries
-
-    def fire():
-        # one real append, injected between recover's two reads
-        if not state["fired"]:
-            state["fired"] = True
-            sess.sql("INSERT INTO items VALUES (7, 'race', 1)")
-
-    def ea(*a, **kw):
-        out = orig_ea(*a, **kw)
-        fire()
-        return out
-
-    def le(*a, **kw):
-        out = orig_le(*a, **kw)
-        fire()
-        return out
-
-    log.meta_store.entries_at = ea
-    log._log_entries = le
-    try:
-        r = admin.recover(sess, min_staging_age_sec=0.0)
-    finally:
-        log.meta_store.entries_at = orig_ea
-        del log.__dict__["_log_entries"]
-    assert state["fired"], "race was never injected"
-
-    for a in r["tables"].get("items", []):
-        if a["action"] == "reconcile_manifest":
-            assert not a.get("removes"), (
-                "a LIVE batch was recorded as a manifest remove: "
-                f"{a['removes']}"
-            )
-    rep = admin.verify_integrity(sess, "items")
-    assert rep["tables"]["items"]["manifest"] == "ok" and rep["ok"]
-    # the raced row is durably present
-    assert sess.sql("SELECT name FROM items WHERE iid = 7").collect()[0][0] == "race"
-
-
-def test_verify_manifest_mismatch_not_masked_as_premanifest_after_prune(
-    spark, tmp_path
-):
-    """Review-found: the pre-manifest carve-out scanned SURVIVING commit
-    files for adds/removes, so after a retention prune() removed the
-    action-carrying tail, a real divergence (append crash after
-    purge-to-empty) folded to got=[] and was misclassified as
-    'pre-manifest' — verify passed on a corrupted manifest. The
-    carve-out now keys off the fold's checkpoint-persisted actions_seen
-    flag."""
-    from driftdb_spark.commitlog import CommitLogMetaStore
-
-    _data, sess = _mkdb(spark, tmp_path, "manprune")
-    log = sess.table("items")
-    log.meta_store = CommitLogMetaStore(log.path)
-    admin.recover(sess, min_staging_age_sec=0.0)  # seed the manifest
-
-    # purge every pk: the manifest folds to [] via recorded removes
-    log.purge(spark.createDataFrame([(1,), (2,), (3,)], "iid int"))
-    store = log.meta_store
-    assert store.entries_at() == []
-    # retention: checkpoint at head, prune the action-carrying tail
-    store._write_checkpoint(store.version(), store.read())
-    assert store.prune()["pruned_commits"] > 0
-    assert not any(
-        "adds" in c or "removes" in c for c in store.commits()
-    ), "premise: no surviving commit carries file actions"
-    assert admin.verify_integrity(sess, "items")["ok"]  # healthy so far
-
-    # append crash: batch published, add never committed
-    log._bump_meta = lambda **kw: None
-    try:
-        sess.sql("INSERT INTO items VALUES (9, 'washer', 1)")
-    finally:
-        del log.__dict__["_bump_meta"]
-
-    rep = admin.verify_integrity(sess, "items")
-    assert rep["tables"]["items"]["manifest"].startswith("MISMATCH")
-    assert not rep["ok"]
-
-    # recover heals it; verify green again and the row is live
-    r = admin.recover(sess, min_staging_age_sec=0.0)
-    assert "reconcile_manifest" in {a["action"] for a in r["tables"]["items"]}
-    rep = admin.verify_integrity(sess, "items")
-    assert rep["tables"]["items"]["manifest"] == "ok" and rep["ok"]
-    assert sess.sql("SELECT qty FROM items WHERE iid = 9").collect()[0][0] == 1
-
-
-def test_admin_prune_log_lifecycle(spark, tmp_path, capsys):
-    """Operator entry point for commit-log retention (admin prune-log):
-    JSON-store tables are reported skipped; commit-store tables get
-    their checkpoint-covered commit files removed with keep_commits
-    headroom, stay verify-green, and the verb works end-to-end through
-    the CLI (the backend is auto-detected when the CLI re-opens the
-    table from --data)."""
-    from driftdb_spark.commitlog import CHECKPOINT_INTERVAL, CommitLogMetaStore
-
-    data, sess = _mkdb(spark, tmp_path, "prlog")
-    # json-store table: skipped, nothing touched
-    rep = admin.prune_commit_log(sess)
-    assert rep["tables"]["items"] == {
-        "skipped": "json meta store keeps no commit log"
-    }
-
-    log = sess.table("items")
-    log.meta_store = CommitLogMetaStore(log.path)
-    admin.recover(sess, min_staging_age_sec=0.0)  # seed the manifest
-    store = log.meta_store
-    while store.version() < CHECKPOINT_INTERVAL:
-        store.bump(seq_floor=log.last_sequence())
-    ncommits = len(store._commit_files())
-    assert ncommits == CHECKPOINT_INTERVAL
-
-    # default keep = one checkpoint interval: headroom honored, no-op here
-    rep = admin.prune_commit_log(sess)
-    assert rep["tables"]["items"]["pruned_commits"] == 0
-    assert len(store._commit_files()) == ncommits
-
-    # keep=0 clears everything folded into the checkpoint
-    rep = admin.prune_commit_log(sess, keep_commits=0)
-    r = rep["tables"]["items"]
-    assert r["checkpoint_version"] == CHECKPOINT_INTERVAL
-    assert r["pruned_commits"] == ncommits
-    assert store._commit_files() == []
-    assert admin.verify_integrity(sess, "items")["ok"]
-    assert log.last_sequence() >= 4  # clock survives in the checkpoint
-
-    # CLI surface: fresh session from --data auto-detects the backend
-    sess.sql("INSERT INTO items VALUES (9, 'cli', 1)")
-    out = _run(capsys, spark, "--data", data, "admin", "prune-log", "--keep", "0")[0]
-    assert "pruned_commits" in out["tables"]["items"]
-    out = _run(capsys, spark, "--data", data, "admin", "verify")[0]
-    assert out["ok"]

@@ -860,25 +860,15 @@ def test_statement_job_budget(spark, tmp_path):
     assert got == {1: 11, 3: 3, 4: 4}
 
 
-def _store_log(spark, tmp_path, store: str) -> EventLog:
-    from driftdb_spark.commitlog import CommitLogMetaStore
-
-    path = str(tmp_path / f"tbl-{store}")
-    meta = CommitLogMetaStore(path) if store == "commitlog" else None
-    return EventLog(spark, path, pk_col="id", meta_store=meta)
-
-
 def _batch(seq: int) -> str:
     return f"batch-{seq:020d}"
 
 
-@pytest.mark.parametrize("store", ["json", "commitlog"])
-def test_append_after_lost_floor_bump_gets_fresh_sequence(spark, tmp_path, store):
+def test_append_after_lost_floor_bump_gets_fresh_sequence(spark, log):
     """Crash window of an append: the batch is renamed into place but the
     process dies before ``_bump_meta`` persists the floor. The newest
     entry's footer still carries the head, so the next append takes a
     fresh, monotonic sequence and ``batch-`` name instead of colliding."""
-    log = _store_log(spark, tmp_path, store)
     schema = "id int, name string, qty int"
     assert log.insert(_rows(spark, [(1, "a", 10), (2, "b", 20)], schema)) == 2
     log._bump_meta = lambda **kw: None
@@ -894,23 +884,21 @@ def test_append_after_lost_floor_bump_gets_fresh_sequence(spark, tmp_path, store
     assert log.read_meta()["seq_floor"] == 4
 
 
-@pytest.mark.parametrize("store", ["json", "commitlog"])
-def test_append_after_compact_rescue_with_lost_floor_bump(spark, tmp_path, store):
+def test_append_after_compact_rescue_with_lost_floor_bump(spark, log):
     """The same crash window across a rewrite: a rival append lands after
     compact's floor bump and before its directory swap, and dies before
     persisting its own floor. compact rescues the rival's entry into the
     rebuilt log; the rescued entry is the newest name, so the next append
     still gets a fresh sequence above it."""
-    log = _store_log(spark, tmp_path, store)
     schema = "id int, name string, qty int"
     log.insert(_rows(spark, [(1, "a", 10), (2, "b", 20)], schema))
     log.patch(_rows(spark, [(1, 11)], "id int, qty int"))
     real = log._bump_meta
 
-    def bump(seq_floor, rewrite=False, adds=None, removes=None):
+    def bump(seq_floor, rewrite=False):
         if not rewrite:
             return  # the rival append's floor bump is lost
-        real(seq_floor=seq_floor, rewrite=True, adds=adds, removes=removes)
+        real(seq_floor=seq_floor, rewrite=True)
         log.insert(_rows(spark, [(7, "g", 70)], schema))
 
     log._bump_meta = bump
@@ -925,3 +913,31 @@ def test_append_after_compact_rescue_with_lost_floor_bump(spark, tmp_path, store
     assert log._log_entries()[-1] == _batch(5)
     state = {r["pk"]: r["row"]["qty"] for r in log.state_at().collect()}
     assert state == {"1": "11", "2": "20", "7": "70", "8": "80"}
+
+
+def test_commit_log_table_is_refused(spark, tmp_path):
+    """A table directory holding ``_commit_log/`` was written by the
+    retired commit-log clock, which kept its floor there; its meta.json
+    may be stale (a crash after creating the directory, before the first
+    commit, leaves it empty beside the live meta.json). Opening it on
+    meta.json alone could reuse purged sequences, so both a direct
+    ``EventLog`` and a fresh session over the catalog refuse it, naming
+    the table path and where the old store's code lives."""
+    import os
+
+    from driftdb_spark.events import LegacyCommitLogTable
+    from driftdb_spark.sql_frontend import DriftSession
+
+    data = str(tmp_path / "db")
+    sess = DriftSession(spark, data)
+    sess.sql("CREATE TABLE t (id INT PRIMARY KEY, v INT)")
+    sess.sql("INSERT INTO t VALUES (1, 10), (2, 20)")
+    path = sess.table("t").path
+    os.makedirs(os.path.join(path, "_commit_log"))
+
+    with pytest.raises(LegacyCommitLogTable) as exc:
+        EventLog(spark, path, pk_col="id")
+    assert repr(path) in str(exc.value)
+    assert "git show cf1dcbf:" in str(exc.value)
+    with pytest.raises(LegacyCommitLogTable):
+        DriftSession(spark, data)

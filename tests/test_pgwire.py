@@ -1485,17 +1485,18 @@ def test_cte_shadow_and_purge_in_txn_sqlstates_over_wire(server):
     _c, rows, _t, err = c.query("SELECT count(*) AS n FROM shadowed")
     assert err is None and rows == [["1"]]
 
-    # PURGE inside a txn block -> 25001 active_sql_transaction, and the
-    # failure poisons the txn like any other error (PostgreSQL abort
-    # gate): the next command reports 25P02 until ROLLBACK
-    _c, _r, _t, err = c.query("BEGIN")
-    assert err is None
-    _c, _r, _t, err = c.query("PURGE FROM shadowed KEYS (1)")
-    assert err is not None and b"25001" in err
-    _c, _r, _t, err = c.query("INSERT INTO shadowed VALUES (3, 30)")
-    assert err is not None and b"25P02" in err
-    _c, _r, _t, err = c.query("ROLLBACK")
-    assert err is None
+    # PURGE or COMPACT inside a txn block -> 25001 active_sql_transaction,
+    # and the failure poisons the txn like any other error (PostgreSQL
+    # abort gate): the next command reports 25P02 until ROLLBACK
+    for stmt in ("PURGE FROM shadowed KEYS (1)", "COMPACT shadowed"):
+        _c, _r, _t, err = c.query("BEGIN")
+        assert err is None
+        _c, _r, _t, err = c.query(stmt)
+        assert err is not None and b"25001" in err
+        _c, _r, _t, err = c.query("INSERT INTO shadowed VALUES (3, 30)")
+        assert err is not None and b"25P02" in err
+        _c, _r, _t, err = c.query("ROLLBACK")
+        assert err is None
     # and outside a txn the same PURGE executes (history gone for key 1)
     _c, _r, _t, err = c.query("PURGE FROM shadowed KEYS (1)")
     assert err is None

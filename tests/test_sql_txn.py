@@ -304,8 +304,12 @@ def test_vacuum_checkpoint_analyze(sess, tmp_path):
     assert rows["id"].n_nulls == 0
     # bare ANALYZE covers every table
     assert sess.sql("ANALYZE").select("table").distinct().count() == 1
-    # VACUUM refuses to run inside a transaction block (PostgreSQL)
-    sess.sql("BEGIN")
-    with pytest.raises(RuntimeError, match="inside a transaction"):
-        sess.sql("VACUUM products")
-    sess.sql("ROLLBACK")
+    # VACUUM and COMPACT refuse to run inside a transaction block
+    # (PostgreSQL, 25001); the refusal poisons the block until ROLLBACK
+    for stmt in ("VACUUM products", "COMPACT products"):
+        sess.sql("BEGIN")
+        with pytest.raises(RuntimeError, match="inside a transaction"):
+            sess.sql(stmt)
+        with pytest.raises(TransactionAborted):
+            sess.sql("SELECT qty FROM products WHERE id = 1")
+        sess.sql("ROLLBACK")
