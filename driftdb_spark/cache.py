@@ -6,10 +6,12 @@ hit/miss statistics, ``should_cache`` verb gating) with one deliberate
 upgrade: the reference serves a cached entry until a TTL expires or
 someone manually calls ``invalidate_pattern`` — a write inside the TTL
 window serves STALE rows. Here the cache key embeds a **version vector**
-of every table the statement reads — the sorted batch-directory listing
-plus snapshot sequences of each table's event log (a pure ``os.listdir``,
-zero Spark jobs, and exact: every published write changes the listing,
-and compaction/purge rewrites it). A write therefore *changes the key*,
+of every table the statement reaches — the tables of its scope
+(``DriftSession._scope``: named directly, in a view definition or in an
+RLS predicate) — the sorted batch-directory listing plus snapshot
+sequences of each table's event log (a pure ``os.listdir``, zero Spark
+jobs, and exact: every published write changes the listing, and
+compaction/purge rewrites it). A write therefore *changes the key*,
 so staleness is structurally impossible and no TTL exists at all.
 
 Scale posture: cached results are parquet directories under
@@ -27,12 +29,13 @@ transaction control never get here. Additionally bypassed: statements
 inside an open transaction (buffered writes are invisible to the version
 vector; the reference's ``cache_transactional`` defaults false),
 ``information_schema`` rewrites (they read live catalog, not logs), and
-statements referencing any relation that is not a catalog table or a
-stored view expandable to catalog tables (a temp view's content is
-unversionable). Temporal ``FOR SYSTEM_TIME`` reads cache like everything
-else (reference ``cache_temporal``): the AsOf target is part of the key,
-and the version vector merely over-invalidates pinned-sequence reads
-(re-executes after a write — correct, just conservative).
+statements whose text or in-scope view definitions parse to a relation
+that is not a catalog table or plain view (a temp view's content is
+unversionable), or whose scope holds a materialized view. Temporal
+``FOR SYSTEM_TIME`` reads cache like everything else (reference
+``cache_temporal``): the AsOf target is part of the key, and the version
+vector merely over-invalidates pinned-sequence reads (re-executes after
+a write — correct, just conservative).
 
 Security: the key includes the session's security context (user, roles,
 superuser — reference CacheKey.user, cache.rs:66-73) AND a hash of the
@@ -46,31 +49,13 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import re
 import shutil
 from collections import OrderedDict
 
+from driftdb_spark.temporal import parse_system_time
+from driftdb_spark.views import parsed_plan, plan_relations
+
 __all__ = ["ResultCache"]
-
-_RELATION_RE = re.compile(r"'UnresolvedRelation \[([^\]]+)\]")
-_CTE_RE = re.compile(r"\bCTE \[([^\]]+)\]")
-
-
-def _parse_relations(spark, sql: str) -> set[str] | None:
-    """Referenced relation names from the UNRESOLVED parse plan (no
-    analysis, no catalog lookups), CTE aliases excluded. None = the text
-    didn't parse (let the normal path raise the real error)."""
-    try:
-        plan = (
-            spark._jsparkSession.sessionState().sqlParser().parsePlan(sql).toString()
-        )
-    except Exception:
-        return None
-    rels = {r.strip().split(".")[-1].lower() for r in _RELATION_RE.findall(plan)}
-    ctes = {
-        a.strip().lower() for m in _CTE_RE.findall(plan) for a in m.split(",")
-    }
-    return rels - ctes
 
 
 class ResultCache:
@@ -113,38 +98,7 @@ class ResultCache:
 
     # -- keying ------------------------------------------------------------
 
-    def _expand_to_tables(self, rels: set[str]) -> set[str] | None:
-        """Resolve referenced relations to base catalog tables, expanding
-        stored view definitions to fixpoint. None = some relation is
-        neither a table nor an expandable view (uncacheable)."""
-        sess = self._sess
-        tables: set[str] = set()
-        pending = list(rels)
-        seen: set[str] = set()
-        while pending:
-            r = pending.pop()
-            if r in seen:
-                continue
-            seen.add(r)
-            if r in sess._tables:
-                tables.add(r)
-                continue
-            defn = sess._views.get(r)
-            if defn is None:
-                # materialized/incremental views read their own stored
-                # parquet; their refresh time is not in any log listing,
-                # so results through them are unversionable — bypass.
-                return None
-            from driftdb_spark.temporal import parse_system_time
-
-            clean_defn, _asof = parse_system_time(defn)
-            sub = _parse_relations(sess.spark, clean_defn)
-            if sub is None:
-                return None
-            pending.extend(sub)
-        return tables
-
-    def _version_token(self, tables: set[str]) -> str:
+    def _version_token(self, tables: list[str]) -> str:
         sess = self._sess
         h = hashlib.sha256()
         for t in sorted(tables):
@@ -164,7 +118,7 @@ class ResultCache:
         h.update(json.dumps(sess._views, sort_keys=True).encode())
         return h.hexdigest()
 
-    def _key(self, clean: str, asof, args, tables: set[str]) -> str:
+    def _key(self, clean: str, asof, args, tables: list[str]) -> str:
         sec = self._sess._security
         parts = [
             clean,
@@ -182,16 +136,33 @@ class ResultCache:
         ]
         return hashlib.sha256("\1".join(parts).encode()).hexdigest()
 
-    def cacheable(self, clean: str) -> set[str] | None:
-        """Tables read by ``clean`` if it is cacheable, else None."""
-        if self._sess._active_txn is not None:
+    def cacheable(self, clean: str, scope: list[str] | None) -> list[str] | None:
+        """The tables that key ``clean``'s entry — every table in its
+        scope (``DriftSession._scope``), so a table reached only through
+        an RLS predicate counts too — or None when it is not cacheable:
+        every relation ``clean`` and each in-scope view definition parse
+        to must be a catalog table or plain view, and no materialized
+        view may be in scope (its refresh is in no log listing)."""
+        sess = self._sess
+        if sess._active_txn is not None or scope is None:
             return None
         if "information_schema" in clean.lower():
             return None
-        rels = _parse_relations(self._sess.spark, clean)
-        if not rels:  # parse failure, or zero relations (SELECT 1 — not worth a slot)
+        if any(name in sess._mviews for name in scope):
             return None
-        return self._expand_to_tables(rels)
+        try:
+            rels = plan_relations(parsed_plan(sess.spark, clean))
+            if not rels:  # zero relations (SELECT 1): not worth a slot
+                return None
+            for name in scope:
+                if name in sess._views:
+                    defn, _asof = parse_system_time(sess._views[name])
+                    rels |= plan_relations(parsed_plan(sess.spark, defn))
+        except Exception:  # unparsable text: the normal path raises the real error
+            return None
+        if any(r not in sess._tables and r not in sess._views for r in rels):
+            return None
+        return [n for n in scope if n in sess._tables]
 
     # -- storage -----------------------------------------------------------
 
@@ -255,7 +226,7 @@ class ResultCache:
             self.evictions += 1
             self._sweep_queue.append(meta["path"])
 
-    # -- management (reference clear/invalidate_pattern/statistics) --------
+    # -- management (reference clear/statistics) ---------------------------
 
     def clear(self) -> None:
         for meta in self._entries.values():
@@ -268,15 +239,6 @@ class ResultCache:
         self._entries.clear()
         self._sweep_queue.clear()
         shutil.rmtree(self._dir, ignore_errors=True)
-
-    def invalidate_table(self, table: str) -> int:
-        """Drop every entry — version-vector keying makes per-table
-        tracking unnecessary for correctness (a write already changes the
-        key), so this is housekeeping for space, kept for parity with the
-        reference's invalidate_pattern (cache.rs:247-264)."""
-        n = len(self._entries)
-        self.clear()
-        return n
 
     def statistics(self) -> dict:
         total = self.hits + self.misses

@@ -276,7 +276,7 @@ def _clone_spark(spark):
     """Per-connection SparkSession: same SparkContext (one JVM, one
     executor pool, one scheduler) but a separate SessionState — its own
     temp-view catalog and SQL conf. This is what makes lock-free
-    concurrent read dispatch safe: each connection's `_register_states`
+    concurrent read dispatch safe: each connection's `_register`
     temp views land in a private namespace instead of racing siblings
     (the reference serves each connection as an independent task over a
     shared engine — driftdb-server executor.rs:351-460).
@@ -1065,7 +1065,7 @@ class _Handler(socketserver.BaseRequestHandler):
             return
         # READ statements dispatch concurrently across connections —
         # each connection owns a cloned SparkSession (private temp-view
-        # namespace), so _register_states → spark.sql can interleave
+        # namespace), so _register → spark.sql can interleave
         # freely. Writes serialize on exec_lock inside _dispatch.
         result = self._dispatch(sql)
         self._check_cancelled()

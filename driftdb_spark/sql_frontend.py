@@ -131,7 +131,7 @@ class DriftSession:
         self._constraints: dict = {}  # table -> TableConstraints
         self._views: dict[str, str] = {}
         self._mviews: dict[str, str] = {}  # materialized views: name -> SQL
-        # mview name -> registered parquet path: _register_views re-resolves
+        # mview name -> registered parquet path: _register re-resolves
         # the versioned pointer per statement (a sibling session's REFRESH
         # moves it) and re-reads only when it actually moved
         self._mview_paths: dict[str, str] = {}
@@ -758,19 +758,20 @@ class DriftSession:
         is_info = bool(self._INFO_SCHEMA_RE.search(clean))
         if is_info:
             clean = self._rewrite_info_schema(clean)
+        # register only what this statement can reach — O(referenced),
+        # not O(catalog) (see _scope)
+        scope = self._scope(clean)
         cache = self._result_cache
         if cache is not None and not is_info:
-            tables = cache.cacheable(clean)
+            tables = cache.cacheable(clean, scope)
             if tables is not None:
                 key = cache._key(clean, asof, args, tables)
                 hit = cache.lookup(key)
                 if hit is not None:
                     # a hit scans the materialized parquet directly — no
-                    # state-view registration, no re-planning, no scope scan
+                    # state-view registration, no re-planning
                     return hit
-                only = self._statement_scope(clean)
-                self._register_states(asof, only)
-                self._register_views(asof, only)
+                self._register(asof, scope)
                 df = (
                     self.spark.sql(clean)
                     if args is None
@@ -778,25 +779,10 @@ class DriftSession:
                 )
                 return cache.store(key, df)
             cache.bypasses += 1
-        # register only what this statement can reach — O(referenced),
-        # not O(catalog) (see _referenced_catalog_objects)
-        only = self._statement_scope(clean)
-        self._register_states(asof, only)
-        self._register_views(asof, only)
+        self._register(asof, scope)
         if args is None:
             return self.spark.sql(clean)
         return self.spark.sql(clean, args=args)
-
-    _IDENTIFIER_RE = _re.compile(r"\bIDENTIFIER\s*\(", _re.IGNORECASE)
-
-    def _statement_scope(self, clean: str) -> set[str] | None:
-        """The registration scope for one statement, or None (= register
-        everything) when the statement can name objects NON-textually:
-        Spark's IDENTIFIER() clause resolves a table name from an
-        expression or parameter, which a word-token scan cannot see."""
-        if self._IDENTIFIER_RE.search(clean):
-            return None
-        return self._referenced_catalog_objects(clean)
 
     _TRUNCATE_RE = _re.compile(
         r"^TRUNCATE\s+(?:TABLE\s+)?(\w+)$", _re.IGNORECASE
@@ -1662,9 +1648,7 @@ class DriftSession:
             ):
                 # the MERGE join and UPDATE/DELETE subqueries read the temp
                 # views of what the statement names, the target included
-                scope = self._referenced_catalog_objects(shape.text)
-                self._register_states(AsOf.now(), scope)
-                self._register_views(AsOf.now(), scope)
+                self._register(AsOf.now(), self._scope(shape.text))
             # _sql_insert / _sql_update / _sql_delete / _sql_merge
             return getattr(self, f"_sql_{shape.verb.lower()}")(shape)
         m = self._CREATE_IMVIEW_RE.match(q)
@@ -2716,9 +2700,7 @@ class DriftSession:
         column: its VALUES or query source, read at the source's own FOR
         SYSTEM_TIME target over the states and stored views it names."""
         cols = list(shape.columns or self._tables[shape.table][1])
-        scope = self._referenced_catalog_objects(shape.source)
-        self._register_states(shape.asof, scope)
-        self._register_views(shape.asof, scope)
+        self._register(shape.asof, self._scope(shape.source))
         return self.spark.sql(shape.source).toDF(*cols)
 
     def _sql_insert(self, shape: DmlShape) -> int:
@@ -2941,28 +2923,39 @@ class DriftSession:
         """SHOW DRIFT — event history (reference query/executor.rs:327-354)."""
         return self.table(table).drift_history(pk)
 
-    def _referenced_catalog_objects(self, *texts: str) -> set[str]:
-        """Names of catalog objects (tables, views, materialized views)
-        whose names appear as word tokens in any of ``texts``, expanded to
-        a FIXPOINT through view definitions and RLS policy expressions — a
-        strict SUPERSET of what the statement can touch. A name inside a
-        string literal over-registers (one wasted temp-view registration);
-        a miss is impossible for textual SQL, because every reachable
-        object is reachable through some name appearing in the scanned
-        text chain (direct reference, or via a view whose name appears,
-        or via an RLS predicate of a referenced table).
+    _IDENTIFIER_RE = _re.compile(r"\bIDENTIFIER\s*\(", _re.IGNORECASE)
 
-        This exists so per-statement state registration is O(referenced),
-        not O(catalog): registering one table's state view costs ~85 ms of
+    def _scope(self, *texts: str) -> list[str] | None:
+        """What a statement reaches: the catalog objects (tables, views,
+        materialized views) whose names appear as word tokens in
+        ``texts``, followed through view definitions and RLS policy
+        expressions, in DEPENDENCY ORDER — each object after everything
+        its view body or RLS predicates name (DFS post-order), so
+        :meth:`_register` analyzes every view body and RLS filter against
+        this statement's registration of what it reads. A strict SUPERSET
+        of what the statement can touch: a name inside a string literal
+        over-registers (one wasted temp view); a miss is impossible for
+        textual SQL. A cycle (a policy naming its own table, or a name
+        matched inside a literal) is cut at its back edge, which resolves
+        against whatever temp view that name already has.
+
+        None (= the whole catalog) when a text holds IDENTIFIER(: Spark
+        resolves that name from an expression or parameter, which a
+        word-token scan cannot see.
+
+        This keeps per-statement registration O(referenced), not
+        O(catalog): registering one table's state view costs ~85 ms of
         JVM roundtrips (state fold plan + createOrReplaceTempView), so a
         200-table catalog would pay ~17 s per one-table SELECT if every
         statement re-registered everything — measured 1.83 s/statement at
         just 20 tables before this filter, 0.28 s after."""
+        if any(self._IDENTIFIER_RE.search(t) for t in texts if t):
+            return None
         names = frozenset(self._tables) | frozenset(self._views) | frozenset(
             self._mviews
         )
         if not names:
-            return set()
+            return []
         cached = getattr(self, "_scope_rx_cache", None)
         if cached is not None and cached[0] == names:
             rx, canon = cached[1], cached[2]
@@ -2978,35 +2971,60 @@ class DriftSession:
             )
             canon = {n.lower(): n for n in names}
             self._scope_rx_cache = (names, rx, canon)
-        needed: set[str] = set()
-        stack = [t for t in texts if t]
-        while stack:
-            t = stack.pop()
-            for match in rx.findall(t):
-                n = canon[match.lower()]
-                if n in needed:
-                    continue
-                needed.add(n)
-                if n in self._views:
-                    stack.append(self._views[n])
-                if n in self._tables:
-                    # RLS predicates may reference OTHER tables (EXISTS
-                    # subqueries); their state views must register too
-                    for pol in self.rls.policies(n):
-                        if pol.using_expr:
-                            stack.append(pol.using_expr)
-                        if pol.check_expr:
-                            stack.append(pol.check_expr)
-        return needed
 
-    def _register_views(self, asof: AsOf, only: set[str] | None = None) -> None:
-        """Re-execute every stored view definition over the just-registered
-        state views (reference re-runs view SQL inline per query). A view
-        whose definition carries its own FOR SYSTEM_TIME keeps it; others
-        see the query's temporal context via the state views. ``only``
-        (from :meth:`_referenced_catalog_objects`) restricts the work to
-        the statement's objects — an unreferenced view's stale temp view
-        is unreachable by definition, so skipping it is invisible.
+        def named(*ts: str | None) -> list[str]:
+            return [canon[m.lower()] for t in ts if t for m in rx.findall(t)]
+
+        def reads(name: str) -> list[str]:
+            out = named(self._views.get(name))
+            if name in self._tables:
+                # RLS predicates may reference OTHER tables (EXISTS / IN
+                # subqueries); their state views must register first
+                for pol in self.rls.policies(name):
+                    out += named(pol.using_expr, pol.check_expr)
+            return out
+
+        order: list[str] = []
+        seen: set[str] = set()
+        for root in named(*texts):
+            if root in seen:
+                continue
+            seen.add(root)
+            stack = [(root, iter(reads(root)))]
+            while stack:
+                name, todo = stack[-1]
+                nxt = next((n for n in todo if n not in seen), None)
+                if nxt is None:
+                    stack.pop()
+                    order.append(name)
+                else:
+                    seen.add(nxt)
+                    stack.append((nxt, iter(reads(nxt))))
+        return order
+
+    def _catalog_order(self) -> list[str]:
+        """The whole catalog in dependency order: each name, as text,
+        reaches itself (the scope IDENTIFIER( falls back to)."""
+        return self._scope(*sorted({*self._tables, *self._views, *self._mviews}))
+
+    def _register(
+        self, asof: AsOf, scope: list[str] | None, pinning: frozenset[str] = frozenset()
+    ) -> None:
+        """Register, in order, the temp view of every object in ``scope``
+        (from :meth:`_scope`; None = the whole catalog) at ``asof``: a
+        table's state view (behind its RLS read filter), a materialized
+        view's stored result, a view's re-executed definition (the
+        reference re-runs view SQL inline per query). An object outside
+        the scope is unreachable from the statement, so its temp view —
+        stale or absent — is never read.
+
+        A view whose definition carries its own FOR SYSTEM_TIME registers
+        its own sub-scope at that target, defines itself over it, then
+        restores the sub-scope at ``asof``. The sub-scope leaves out that
+        view and every view an outer call is still pinning (``pinning``):
+        its body may name one of them (a column alias, a literal,
+        IDENTIFIER( reaching the whole catalog), and re-entering it would
+        never end; that name resolves like any other cut back edge.
 
         Materialized views re-resolve their versioned parquet pointer here,
         PER STATEMENT: sessions share the storage dir but not the temp-view
@@ -3019,25 +3037,8 @@ class DriftSession:
         only happens when the pointer actually moved."""
         from driftdb_spark.views import resolve_versioned
 
-        for name in self._mviews:
-            if only is not None and name not in only:
-                continue
-            path = resolve_versioned(self.storage_dir, f"mv_{name}")
-            if path is not None and self._mview_paths.get(name) != path:
-                self.spark.read.parquet(path).createOrReplaceTempView(name)
-                self._mview_paths[name] = path
-        for name, definition in self._views.items():
-            if only is not None and name not in only:
-                continue
-            clean, view_asof = parse_system_time(definition)
-            if view_asof.sequence is not None or view_asof.timestamp is not None:
-                self._register_states(view_asof, only)
-                self.spark.sql(clean).createOrReplaceTempView(name)
-                self._register_states(asof, only)
-            else:
-                self.spark.sql(clean).createOrReplaceTempView(name)
-
-    def _register_states(self, asof: AsOf, only: set[str] | None = None) -> None:
+        if scope is None:
+            scope = self._catalog_order()
         # Read-your-writes inside an open SQL transaction: a table touched
         # by the transaction registers its buffered view (committed ∪
         # staged events) — but ONLY for "current" reads. An explicit
@@ -3049,27 +3050,42 @@ class DriftSession:
             and asof.between is None
             and not asof.all_history
         )
-        for name, (log, schema_cols) in self._tables.items():
-            if only is not None and name not in only:
-                # not reachable from this statement's text (nor through
-                # any referenced view/RLS predicate): its temp view —
-                # fresh or stale — cannot be read, so skip the ~85 ms of
-                # plan-build + registration roundtrips
-                continue
-            rls_pred = self.rls.read_predicate(name, self._security)
-            if asof.all_history:
-                view = log.events()
+        for name in scope:
+            if name in self._views:
+                clean, view_asof = parse_system_time(self._views[name])
+                if view_asof.sequence is None and view_asof.timestamp is None:
+                    self.spark.sql(clean).createOrReplaceTempView(name)
+                    continue
+                inner = pinning | {name}
+                sub = self._scope(clean)
+                sub = [n for n in (self._catalog_order() if sub is None else sub)
+                       if n not in inner]
+                self._register(view_asof, sub, inner)
+                self.spark.sql(clean).createOrReplaceTempView(name)
+                self._register(asof, sub, inner)
+            elif name in self._mviews:
+                path = resolve_versioned(self.storage_dir, f"mv_{name}")
+                if path is not None and self._mview_paths.get(name) != path:
+                    self.spark.read.parquet(path).createOrReplaceTempView(name)
+                    self._mview_paths[name] = path
+            else:
+                log, schema_cols = self._tables[name]
+                rls_pred = self.rls.read_predicate(name, self._security)
+                if asof.all_history:
+                    view = log.events()
+                    if rls_pred is not None:
+                        # history rows expose the payload map; gate on the
+                        # reconstructed-state keys instead: a user sees the
+                        # history only of rows currently visible to them.
+                        visible = (
+                            log.state_df(schema_cols).filter(rls_pred).select("pk")
+                        )
+                        view = view.join(visible, "pk", "left_semi")
+                    view.createOrReplaceTempView(name)
+                    continue
+                view = (
+                    self._view(name) if current else log.state_df(schema_cols, asof)
+                ).drop("pk", "last_seq")
                 if rls_pred is not None:
-                    # history rows expose the payload map; gate on the
-                    # reconstructed-state keys instead: a user sees the
-                    # history only of rows currently visible to them.
-                    visible = log.state_df(schema_cols).filter(rls_pred).select("pk")
-                    view = view.join(visible, "pk", "left_semi")
+                    view = view.filter(rls_pred)
                 view.createOrReplaceTempView(name)
-                continue
-            view = (
-                self._view(name) if current else log.state_df(schema_cols, asof)
-            ).drop("pk", "last_seq")
-            if rls_pred is not None:
-                view = view.filter(rls_pred)
-            view.createOrReplaceTempView(name)

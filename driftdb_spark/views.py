@@ -2,11 +2,14 @@
 (reference crates/driftdb-core/src/views.rs:30-119, refresh :541; executed by
 re-running the view SQL inline, sql_bridge.rs:1203-1259).
 
-Plain views are Spark temp views (Catalyst inlines the definition — identical
-to the reference's inline re-execution, minus the re-parse). Materialized
-views persist the result to parquet and re-register the scan; ``refresh``
-recomputes. On a cluster the parquet write becomes a Delta table and refresh
-can be incremental; the API is unchanged.
+``DriftSession`` owns plain and materialized views: a plain view is a Spark
+temp view re-defined per statement from its stored SQL (Catalyst inlines
+it — the reference's inline re-execution, minus the re-parse); a
+materialized view persists its result to parquet and REFRESH recomputes it.
+This module holds what they share: the versioned publish below, the
+parsed-plan relation scan (``parsed_plan``, ``plan_relations``), and incremental
+materialized views (``IncrementalViewRegistry``). On a cluster the parquet
+write becomes a Delta table; the API is unchanged.
 
 Materialized results publish through a VERSIONED pointer (``<stem>.current``
 names the live data directory; the pointer rewrite is the single atomic
@@ -20,7 +23,7 @@ from __future__ import annotations
 import os
 import re
 import shutil
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -103,9 +106,25 @@ def drop_versioned(storage_dir: str, stem: str) -> None:
 # -- incremental-view contract validation ------------------------------------
 
 _RELATION_RE = re.compile(r"'UnresolvedRelation \[([^\]]+)\]")
+_CTE_RE = re.compile(r"\bCTE \[([^\]]+)\]")
 _AGGREGATE_RE = re.compile(r"'Aggregate \[([^\]]*)\]")
 _GROUP_TOKEN_RE = re.compile(r"^'(?:\w+\.)?(\w+)$")
-_CTE_RE = re.compile(r"\bCTE \[([^\]]+)\]")
+
+
+def parsed_plan(spark: SparkSession, sql: str) -> str:
+    """``sql``'s UNRESOLVED parse plan as text: no analysis, no catalog
+    lookups. Raises Spark's ParseException when the text does not parse."""
+    return spark._jsparkSession.sessionState().sqlParser().parsePlan(sql).toString()
+
+
+def plan_relations(plan: str) -> set[str]:
+    """The relations a parsed (unresolved) plan string reads, lowercased.
+    CTE aliases surface as UnresolvedRelation too (`CTE [t, u]` header,
+    then 'UnresolvedRelation [t]); they are names the query defines
+    itself, not catalog objects, so they are left out."""
+    rels = {r.strip().lower() for r in _RELATION_RE.findall(plan)}
+    ctes = {a.strip().lower() for m in _CTE_RE.findall(plan) for a in m.split(",")}
+    return rels - ctes
 
 
 def validate_incremental_contract(
@@ -126,19 +145,8 @@ def validate_incremental_contract(
       affected-group projection could not compute them); any nested
       aggregate must group by a superset of ``group_cols``.
     """
-    plan = (
-        spark._jsparkSession.sessionState().sqlParser().parsePlan(sql).toString()
-    )
-    rels = {r.strip().lower() for r in _RELATION_RE.findall(plan)}
-    # CTE aliases surface as UnresolvedRelation in the parsed plan
-    # (`CTE [t, u]` header, then 'UnresolvedRelation [t]) — they are
-    # names defined by the query itself, not foreign tables.
-    cte_aliases = {
-        a.strip().lower()
-        for m in _CTE_RE.findall(plan)
-        for a in m.split(",")
-    }
-    rels -= cte_aliases
+    plan = parsed_plan(spark, sql)
+    rels = plan_relations(plan)
     if not rels:
         raise ValueError(
             "incremental view definition must read FROM the source table "
@@ -193,50 +201,6 @@ def validate_incremental_contract(
                 f"(got: {g or '<empty>'}) — otherwise its output rows mix "
                 "input from multiple outer groups"
             )
-
-
-@dataclass
-class ViewRegistry:
-    spark: SparkSession
-    storage_dir: str
-    _defs: dict[str, str] = field(default_factory=dict)
-    _materialized: set[str] = field(default_factory=set)
-
-    def create_view(self, name: str, sql: str) -> None:
-        """CREATE VIEW name AS <sql> — logical, inlined at query time."""
-        self.spark.sql(sql).createOrReplaceTempView(name)
-        self._defs[name] = sql
-
-    def create_materialized_view(self, name: str, sql: str) -> None:
-        """CREATE MATERIALIZED VIEW — computed now, persisted, scan-backed."""
-        self._defs[name] = sql
-        self._materialized.add(name)
-        self.refresh(name)
-
-    def refresh(self, name: str) -> None:
-        """Recompute a materialized view from its definition (reference
-        refresh policies views.rs:541 — here: on demand). The result
-        publishes via the versioned pointer, so a crashed refresh leaves
-        the previous result live."""
-        if name not in self._materialized:
-            raise ValueError(f"{name} is not a materialized view")
-        path = publish_versioned(
-            self.spark.sql(self._defs[name]), self.storage_dir, f"mv_{name}"
-        )
-        self.spark.read.parquet(path).createOrReplaceTempView(name)
-
-    def drop_view(self, name: str) -> None:
-        self.spark.catalog.dropTempView(name)
-        self._defs.pop(name, None)
-        if name in self._materialized:
-            drop_versioned(self.storage_dir, f"mv_{name}")
-        self._materialized.discard(name)
-
-    def definition(self, name: str) -> str | None:
-        return self._defs.get(name)
-
-    def query(self, sql: str) -> DataFrame:
-        return self.spark.sql(sql)
 
 
 @dataclass

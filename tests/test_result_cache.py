@@ -94,6 +94,33 @@ def test_security_context_scopes_entries(spark, tmp_path):
     sess.set_security_context(None)
 
 
+def test_write_to_rls_reached_table_invalidates(spark, tmp_path):
+    """A table the statement reaches only through an RLS predicate keys
+    the entry too: a write to it changes what the policy lets through,
+    so the next read must miss, not serve the old rows."""
+    sess = _mkdb(spark, tmp_path, "cacherlsacl")
+    sess.sql("CREATE TABLE grants (gid INT PRIMARY KEY, usr STRING)")
+    sess.sql("ALTER TABLE t ENABLE ROW LEVEL SECURITY")
+    sess.sql(
+        "CREATE POLICY pg ON t USING "
+        "(id IN (SELECT gid FROM grants WHERE usr = current_user))"
+    )
+    sess.sql("INSERT INTO grants VALUES (1, 'alice')")
+    assert _rows(sess.sql("SELECT gid FROM grants")) == [(1,)]
+    cache = sess.enable_result_cache()
+    q = "SELECT id FROM t"
+    sess.set_security_context("alice")
+    assert _rows(sess.sql(q)) == [(1,)]
+    assert _rows(sess.sql(q)) == [(1,)]
+    assert cache.statistics()["hits"] == 1
+    sess.set_security_context(None)
+    sess.sql("INSERT INTO grants VALUES (2, 'alice')")
+    sess.set_security_context("alice")
+    assert _rows(sess.sql(q)) == [(1,), (2,)]
+    assert cache.statistics()["hits"] == 1
+    sess.set_security_context(None)
+
+
 def test_parameterized_statements_key_on_args(spark, tmp_path):
     sess = _mkdb(spark, tmp_path, "cacheargs")
     cache = sess.enable_result_cache()

@@ -205,3 +205,27 @@ def test_backslash_username_binds_safely(sess):
     sess.set_security_context("evil\\")
     assert _ids(sess) == set()  # no rows owned; predicate stays well-formed
     sess.set_security_context(None)
+
+
+def test_subquery_policy_reads_current_state_of_named_table(sess, spark, tmp_path):
+    """A policy whose USING subquery names another table is analyzed
+    against THIS statement's registration of that table: the table's
+    state view registers before the filtered one, so a grant written just
+    before a read is visible to it (not one statement later), and a
+    session that never read the table still resolves it."""
+    sess.sql("CREATE TABLE doc_acl (doc int PRIMARY KEY, usr string)")
+    sess.sql(
+        "CREATE POLICY shared ON docs USING "
+        "(id IN (SELECT doc FROM doc_acl WHERE usr = current_user))"
+    )
+    assert sess.sql("SELECT COUNT(*) AS n FROM doc_acl").first()["n"] == 0
+    sess.sql("SET SESSION AUTHORIZATION bob")
+    assert _ids(sess) == {2}
+    sess.sql("RESET SESSION AUTHORIZATION")
+    sess.sql("INSERT INTO doc_acl VALUES (1, 'bob')")
+    sess.sql("SET SESSION AUTHORIZATION bob")
+    assert _ids(sess) == {1, 2}
+    # own temp-view namespace, doc_acl never registered in it
+    fresh = DriftSession(spark.newSession(), str(tmp_path))
+    fresh.sql("SET SESSION AUTHORIZATION bob")
+    assert _ids(fresh) == {1, 2}

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from driftdb_spark.plans.stats import analyze_table, plan_facts
 from driftdb_spark.sql_frontend import DriftSession
-from driftdb_spark.views import ViewRegistry
 
 COLS = {"id": "int", "name": "string", "qty": "int"}
 
@@ -77,23 +76,6 @@ def test_update_expressions_see_old_row(sess):
     )
     rows = {(r.id, r.name, r.qty) for r in sess.sql("SELECT * FROM products").collect()}
     assert rows == {(1, "BOLT-V2", 10), (2, " WHERE X", 9), (3, "GEAR", 1)}
-
-
-def test_views_and_materialized_views(sess, spark, tmp_path):
-    reg = ViewRegistry(spark, str(tmp_path / "views"))
-    # registration is statement-scoped (O(referenced), not O(catalog)):
-    # the trigger statement must actually reference the table
-    sess.sql("SELECT COUNT(*) FROM products")
-    reg.create_view("cheap", "SELECT id, name FROM products WHERE qty < 6")
-    assert {r.id for r in spark.sql("SELECT * FROM cheap").collect()} == {1, 3}
-
-    reg.create_materialized_view("mv_cheap", "SELECT id, name FROM products WHERE qty < 6")
-    sess.table("products").update_where(COLS, "id = 2", {"qty": "1"})
-    sess.sql("SELECT COUNT(*) FROM products")  # re-register current state
-    # materialized view is stale until refresh
-    assert {r.id for r in spark.sql("SELECT * FROM mv_cheap").collect()} == {1, 3}
-    reg.refresh("mv_cheap")
-    assert {r.id for r in spark.sql("SELECT * FROM mv_cheap").collect()} == {1, 2, 3}
 
 
 def test_analyze_and_plan_facts(sess, spark):
@@ -1215,7 +1197,7 @@ def test_mview_refresh_visible_across_cloned_sessions(spark, tmp_path):
     moves the on-disk version pointer in a namespace B cannot see. B kept
     its connect-time registration: after one refresh it silently served
     stale rows, after two the registered directory is swept (publish keeps
-    current+previous one cycle) and the SELECT broke. _register_views now
+    current+previous one cycle) and the SELECT broke. _register now
     re-resolves the pointer per statement, so B always reads current."""
     from driftdb_spark.server import _clone_spark
     from driftdb_spark.sql_frontend import DriftSession
@@ -1328,7 +1310,9 @@ def test_statement_scoped_registration(spark, tmp_path):
     Pins the correctness half: reachability through a view, through a
     nested view, and the superset property (unreferenced tables are NOT
     registered — their temp views stay stale/absent, which is invisible
-    because nothing in the statement can read them)."""
+    because nothing in the statement can read them); and the ORDER: a
+    view registers after what its body names, whatever the catalog's
+    own order (a re-created inner view, a fresh session's sorted load)."""
     from driftdb_spark.sql_frontend import DriftSession
 
     d = str(tmp_path / "scoped")
@@ -1340,13 +1324,15 @@ def test_statement_scoped_registration(spark, tmp_path):
     s.sql("CREATE VIEW sv2 AS SELECT * FROM sv1 WHERE v > 0")
 
     # the scan: direct, via view, via nested view, plus RLS predicates
-    only = s._referenced_catalog_objects("SELECT * FROM st0")
-    assert only == {"st0"}
-    only = s._referenced_catalog_objects("SELECT * FROM sv2")
-    assert only == {"sv2", "sv1", "st1"}
+    only = s._scope("SELECT * FROM st0")
+    assert set(only) == {"st0"}
+    only = s._scope("SELECT * FROM sv2")
+    assert set(only) == {"sv2", "sv1", "st1"}
+    # dependency order: each object after everything its body names
+    assert only == ["st1", "sv1", "sv2"]
     # a name inside a literal over-registers (superset is fine)
-    only = s._referenced_catalog_objects("SELECT 'st2' FROM st0")
-    assert only == {"st0", "st2"}
+    only = s._scope("SELECT 'st2' FROM st0")
+    assert set(only) == {"st0", "st2"}
 
     # correctness through the full dispatch: nested view reads fresh state
     assert s.sql("SELECT v FROM sv2").collect()[0].v == 20
@@ -1354,6 +1340,37 @@ def test_statement_scoped_registration(spark, tmp_path):
     assert s.sql("SELECT v FROM sv2").collect()[0].v == 99
     # unreferenced tables still answer correctly when referenced next
     assert s.sql("SELECT v FROM st2").collect()[0].v == 30
+
+    # DROP and re-CREATE of the inner view: the outer one, now earlier in
+    # the catalog, must still register after it
+    s.sql("DROP VIEW sv1")
+    s.sql("CREATE VIEW sv1 AS SELECT id, v + 1 AS v FROM st1")
+    assert s.sql("SELECT v FROM sv2").collect()[0].v == 100
+
+    # a view over a view whose name sorts later, read from a fresh
+    # session with its own (empty) temp-view namespace, as every wire
+    # connection has: the catalog file lists adouble before zbase
+    s.sql("CREATE VIEW zbase AS SELECT id, v FROM st0")
+    s.sql("CREATE VIEW adouble AS SELECT id, v * 2 AS v FROM zbase")
+    fresh = DriftSession(spark.newSession(), d)
+    assert fresh.sql("SELECT v FROM adouble").collect()[0].v == 20
+
+    # a view pinned by its own FOR SYSTEM_TIME whose body names the view
+    # itself (a column alias): it reads at its own target while the outer
+    # statement reads current state, and neither it nor a whole-catalog
+    # IDENTIFIER( registration re-enters the view
+    s.sql("CREATE TABLE pt (id INT PRIMARY KEY, x INT)")
+    s.sql("INSERT INTO pt VALUES (1, 5)")
+    s.sql("INSERT INTO pt VALUES (2, 7)")
+    s.sql("CREATE VIEW total AS SELECT SUM(x) AS total FROM pt "
+          "FOR SYSTEM_TIME AS OF @SEQ:1")
+    assert s._scope("SELECT * FROM total") == ["pt", "total"]
+    got = s.sql("SELECT (SELECT total FROM total) AS pinned, "
+                "(SELECT SUM(x) FROM pt) AS now").collect()[0]
+    assert (got.pinned, got.now) == (5, 12)
+    n = s.sql("SELECT COUNT(*) AS n FROM IDENTIFIER(:t)", args={"t": "pt"})
+    assert n.collect()[0].n == 2
+    assert s.sql("SELECT total FROM total").collect()[0].total == 5
 
 
 def test_scoped_registration_dml_and_dynamic_identifiers(spark, tmp_path):
