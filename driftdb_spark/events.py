@@ -39,6 +39,7 @@ from __future__ import annotations
 import contextlib
 import errno
 import fcntl
+import functools
 import glob
 import json
 import os
@@ -203,8 +204,8 @@ def pk_conflicts(ev: DataFrame, rows: DataFrame, pk_col: str) -> DataFrame:
     Inserts) plus the batch's keys, grouped by pk. A key conflicts when it
     repeats within the batch (the reference's per-row check catches the
     second occurrence) or when it is live: its last Insert is newer than
-    its last SoftDelete, the liveness rule of :func:`fold_events`. Shared
-    by ``EventLog.insert`` and the transaction buffer's insert."""
+    its last SoftDelete, the liveness rule of :func:`fold_events`. The
+    gate of :meth:`DmlVerbs.insert` and of a PK-changing UPDATE."""
     batch = rows.select(
         F.col(pk_col).cast("string").alias("pk"),
         F.lit(None).cast("long").alias("sequence"),
@@ -224,7 +225,111 @@ def pk_conflicts(ev: DataFrame, rows: DataFrame, pk_col: str) -> DataFrame:
     )
 
 
-class EventLog:
+class DmlVerbs:
+    """DML as event appends (reference execute_sql_insert/update/delete,
+    sql_bridge.rs:3388-3661, :5473-5669, :5981-6087), written once for
+    both write targets. Each verb turns its batch into a statement list
+    and hands it to ``_sink``: an :class:`EventLog` publishes the list as
+    one atomic batch, a :class:`~driftdb_spark.transactions.Transaction`
+    buffers it until COMMIT. A target supplies ``pk_col``,
+    ``validate_fn``, ``_replay_events()`` (its state as of now, as
+    events), ``state_df(schema_cols)`` and ``_sink(stmts)``."""
+
+    def _statement(self, batch: DataFrame, event_type: str) -> tuple[str, DataFrame]:
+        """One statement: ``(event_type, frame of (pk, payload))``, the
+        batch after ``validate_fn``. The payload maps the batch's own
+        columns (none for a SoftDelete)."""
+        payload = (
+            F.lit(None).cast(EVENT_SCHEMA["payload"].dataType)
+            if event_type == SOFT_DELETE
+            else _payload_map(batch, self.pk_col)
+        )
+        if self.validate_fn is not None:
+            batch = self.validate_fn(batch, event_type)
+        return event_type, batch.select(
+            F.col(self.pk_col).cast("string").alias("pk"), payload.alias("payload")
+        )
+
+    def _refuse(self, msg: str) -> None:
+        """Refuse a statement before anything is written."""
+        raise ValueError(msg)
+
+    def insert(self, rows: DataFrame):
+        """Full-row Insert events. PK uniqueness against current state
+        (for a transaction, committed state + its buffer, as the reference
+        checks, sql_bridge.rs:3505-3661) and within the batch (found by the
+        constraint fuzz) is one aggregation, :func:`pk_conflicts`, gated
+        before anything is written."""
+        if not pk_conflicts(self._replay_events(), rows, self.pk_col).isEmpty():
+            self._refuse("duplicate primary key(s) in insert batch")
+        return self._sink([self._statement(rows, INSERT)])
+
+    def upsert(self, rows: DataFrame):
+        """Insert without the PK-uniqueness gate (last writer wins)."""
+        return self._sink([self._statement(rows, INSERT)])
+
+    def patch(self, partial_rows: DataFrame):
+        """Partial-row Patch events: only the provided columns are merged
+        field-by-field into existing rows at read time."""
+        return self._sink([self._statement(partial_rows, PATCH)])
+
+    def soft_delete(self, keys: DataFrame):
+        """SoftDelete events for the given PKs."""
+        return self._sink([self._statement(keys.select(self.pk_col), SOFT_DELETE)])
+
+    def update_where(
+        self, schema_cols: dict[str, str], condition: str, assignments: dict[str, object]
+    ):
+        """UPDATE ... WHERE (reference execute_sql_update,
+        sql_bridge.rs:5473-5669): the rows of the target's state that match
+        ``condition`` — a transaction's state includes its buffer — get
+        the assignments, SQL expression strings evaluated against the OLD
+        row, as one Patch per match.
+
+        An UPDATE that assigns the PRIMARY KEY cannot be a Patch (the event
+        key would still be the old PK). It is SoftDelete(old keys) +
+        Insert(new full rows), the PostgreSQL delete+insert model the
+        reference uses, as ONE two-statement list gated once: a new key may
+        not hit a surviving row, and the new keys are unique among
+        themselves. So it publishes as one batch outside BEGIN and buffers
+        as two statements inside. Time travel before it still shows the
+        old key, exactly like replaying the reference's event pair."""
+        matching = self.state_df(schema_cols).filter(condition)
+        if self.pk_col not in assignments:
+            patch = matching.select(
+                self.pk_col,
+                *[F.expr(str(expr)).alias(col) for col, expr in assignments.items()],
+            )
+            return self._sink([self._statement(patch, PATCH)])
+        new_rows = matching.select(
+            *[
+                F.expr(str(assignments[c])).alias(c) if c in assignments else F.col(c)
+                for c in schema_cols
+            ]
+        )
+        old_keys = matching.select(self.pk_col)
+        survivors = self._replay_events().join(
+            old_keys.select(F.col(self.pk_col).cast("string").alias("pk")),
+            "pk",
+            "left_anti",
+        )
+        if not pk_conflicts(survivors, new_rows, self.pk_col).isEmpty():
+            self._refuse(
+                "primary-key UPDATE would collide with an existing or sibling "
+                "key; nothing was changed"
+            )
+        return self._sink(
+            [self._statement(old_keys, SOFT_DELETE), self._statement(new_rows, INSERT)]
+        )
+
+    def delete_where(self, schema_cols: dict[str, str], condition: str):
+        """DELETE ... WHERE as SoftDelete events (reference
+        execute_sql_delete, sql_bridge.rs:5981-6087)."""
+        matching = self.state_df(schema_cols).filter(condition)
+        return self.soft_delete(matching.select(self.pk_col))
+
+
+class EventLog(DmlVerbs):
     """Append-only event log for one logical table."""
 
     def __init__(
@@ -462,22 +567,16 @@ class EventLog:
                 hi = max(hi, int(stats.max))
         return hi
 
-    def _append(self, batch: DataFrame, event_type: str, payload: F.Column | None) -> int:
-        """Assign contiguous sequences to the batch and publish it atomically.
-
-        Sequence assignment is the zipWithIndex recipe: each partition is
-        sorted locally and numbers its own rows (parallel), one counts pass
-        collects the per-partition row counts, and the driver turns them
-        into partition start offsets that the write inlines as a literal
-        array. No global sort, and the row total falls out of the same
-        counts.
+    def _sink(self, stmts: list[tuple[str, DataFrame]]) -> int:
+        """Publish a statement list (a write, a PK-changing UPDATE's
+        SoftDelete + Insert pair, or a COMMIT's buffer) as ONE atomic
+        batch; returns the last sequence.
 
         Publication is staged-then-renamed: the batch is written under
         ``events/_staging-<token>`` (hidden from Spark's file listing) and
         one ``os.rename`` flips it to ``batch-<startseq>``. POSIX rename is
         atomic, so readers see the whole batch or none of it — the
         reference's buffered-transaction COMMIT (sql_bridge.rs:453-568).
-
         The final name IS the concurrency claim: it carries no random
         token, so two writers that raced the same last_sequence target the
         same directory name, and ``rename`` onto an existing non-empty
@@ -486,35 +585,25 @@ class EventLog:
         rolls back from staging and raises :class:`ConcurrentAppendError`
         for retry — Delta's commit-file protocol).
 
-        Partition pinning caveat: ``persist()`` (MEMORY_AND_DISK) keeps the
-        counts pass and the write pass aligned by spilling, not
-        recomputing; only executor loss (not applicable in local mode)
-        could recompute a nondeterministic upstream into different
-        partitions. On a cluster, Delta commit versions replace this whole
-        path. The steps themselves are in :meth:`_assign_and_publish`.
-        """
-        if self.validate_fn is not None:
-            batch = self.validate_fn(batch, event_type)
-        src = batch.select(
-            F.col(self.pk_col).cast("string").alias("pk"),
-            (
-                payload
-                if payload is not None
-                else F.lit(None).cast(EVENT_SCHEMA["payload"].dataType)
-            ).alias("payload"),
-        ).withColumn("event_type", F.lit(event_type))
-        return self._assign_and_publish(src, ["pk"], event_type)
-
-    def _append_multi(self, staged: DataFrame) -> int:
-        """Publish a multi-statement transaction buffer — columns
-        ``(_stmt, event_type, pk, payload)`` — as ONE atomic batch
-        (reference buffered-txn COMMIT, sql_bridge.rs:453-568). The fold
-        compares sequences only within a pk, so co-locating each pk's
-        events (repartition) and numbering partitions ordered by
-        ``(pk, _stmt)`` preserves statement order exactly where it
-        matters, with no global sort."""
-        src = staged.repartition(F.col("pk"))
-        return self._assign_and_publish(src, ["pk", "_stmt"], "TXN")
+        One statement numbers its rows in pk order and reaches the commit
+        hook under its own event type. Several are tagged with their
+        statement index and reach the hook as ``TXN``; the fold compares
+        sequences only within a pk, so co-locating each pk's events
+        (repartition) and numbering partitions ordered by ``(pk, _stmt)``
+        preserves statement order exactly where it matters, with no global
+        sort. The steps are in :meth:`_assign_and_publish`."""
+        if len(stmts) == 1:
+            ((event_type, frame),) = stmts
+            src = frame.withColumn("event_type", F.lit(event_type))
+            return self._assign_and_publish(src, ["pk"], event_type)
+        parts = [
+            frame.select(
+                F.lit(i).alias("_stmt"), F.lit(event_type).alias("event_type"), "pk", "payload"
+            )
+            for i, (event_type, frame) in enumerate(stmts)
+        ]
+        staged = functools.reduce(DataFrame.unionByName, parts)
+        return self._assign_and_publish(staged.repartition(F.col("pk")), ["pk", "_stmt"], "TXN")
 
     def _assign_and_publish(
         self, src: DataFrame, order_cols: list[str], hook_event_type: str
@@ -526,8 +615,14 @@ class EventLog:
         pass), then write ``sequence = base + offset[_pid] + index + 1``
         with the offsets inlined as a literal array, and publish by
         rename. The local sort keeps ``order_cols`` order within each
-        partition, which is what ``_append_multi``'s ``(pk, _stmt)``
-        statement order relies on."""
+        partition, which is what :meth:`_sink`'s ``(pk, _stmt)`` statement
+        order relies on.
+
+        ``persist()`` (MEMORY_AND_DISK) keeps the counts pass and the write
+        pass aligned by spilling, not recomputing; only executor loss (not
+        applicable in local mode) could recompute a nondeterministic
+        upstream into different partitions. On a cluster, Delta commit
+        versions replace this whole path."""
         self._check_writable("append")
         base = self.last_sequence()
         src = (
@@ -614,101 +709,6 @@ class EventLog:
         from driftdb_spark.transactions import Transaction
 
         return Transaction(self)
-
-    # -- DML as event appends (reference execute_sql_insert/update/delete,
-    # sql_bridge.rs:3388-3661, :5473-5669, :5981-6087) ----------------------
-
-    def insert(self, rows: DataFrame) -> int:
-        """Full-row Insert events. PK uniqueness against current state
-        (reference checks committed state + txn buffer) and within the
-        batch (found by the constraint fuzz) is one aggregation,
-        :func:`pk_conflicts`, gated here before anything publishes."""
-        if not pk_conflicts(self._replay_events(), rows, self.pk_col).isEmpty():
-            raise ValueError("duplicate primary key(s) in insert batch")
-        return self._append(rows, INSERT, _payload_map(rows, self.pk_col))
-
-    def upsert(self, rows: DataFrame) -> int:
-        """Insert without the PK-uniqueness gate (last writer wins)."""
-        return self._append(rows, INSERT, _payload_map(rows, self.pk_col))
-
-    def patch(self, partial_rows: DataFrame) -> int:
-        """Partial-row Patch events: only the provided columns are merged
-        field-by-field into existing rows at read time."""
-        return self._append(partial_rows, PATCH, _payload_map(partial_rows, self.pk_col))
-
-    def soft_delete(self, keys: DataFrame) -> int:
-        """SoftDelete events for the given PKs."""
-        return self._append(keys.select(self.pk_col), SOFT_DELETE, None)
-
-    def update_where(
-        self, schema_cols: dict[str, str], condition: str, assignments: dict[str, object]
-    ) -> int:
-        """UPDATE ... WHERE as Patch events (reference execute_sql_update,
-        sql_bridge.rs:5473-5669): select matching current-state rows,
-        evaluate assignment expressions against the OLD row, append one
-        Patch per match. Assignment values are SQL expression strings —
-        they may reference existing columns.
-
-        An UPDATE that assigns the PRIMARY KEY cannot be a Patch (the event
-        key would still be the old PK); the reference models it as
-        SoftDelete(old) + Insert(new row) — the PostgreSQL delete+insert
-        model (sql_bridge.rs:5473-5669) — and so does this: the full new
-        row is computed from the OLD row with assignments applied, the old
-        keys are soft-deleted, and the new rows insert through the normal
-        PK-uniqueness gate. Time travel before the UPDATE still shows the
-        old key, exactly like replaying the reference's event pair."""
-        matching = self.state_df(schema_cols).filter(condition)
-        if self.pk_col in assignments:
-            new_rows = matching.select(
-                *[
-                    F.expr(str(assignments[c])).alias(c)
-                    if c in assignments
-                    else F.col(c)
-                    for c in schema_cols
-                ]
-            )
-            # Pin the new rows BEFORE appending the deletes: new_rows reads
-            # the event log lazily, and the SoftDelete batch would otherwise
-            # erase the very rows the plan re-reads (persist spills rather
-            # than recomputes — same pinning contract as _append's).
-            new_rows = new_rows.persist()
-            try:
-                new_rows.count()
-                # The delete and insert are two appends, not one
-                # transaction, so PK collisions must fail BEFORE anything
-                # publishes: a new key may not hit a surviving (non-updated)
-                # row, and the new keys must be unique among themselves.
-                survivors = self._replay_events().join(
-                    matching.select(
-                        F.col(self.pk_col).cast("string").alias("pk")
-                    ),
-                    "pk",
-                    "left_anti",
-                )
-                if not pk_conflicts(survivors, new_rows, self.pk_col).isEmpty():
-                    raise ValueError(
-                        "primary-key UPDATE would collide with an existing "
-                        "or sibling key; nothing was changed"
-                    )
-                self.soft_delete(matching.select(self.pk_col))
-                return self.insert(new_rows)
-            finally:
-                new_rows.unpersist()
-        patch = matching.select(
-            self.pk_col, *[F.expr(str(expr)).alias(col) for col, expr in assignments.items()]
-        )
-        return self._append(patch, PATCH, _payload_map(patch, self.pk_col))
-
-    def delete_where(self, schema_cols: dict[str, str], condition: str) -> int:
-        """DELETE ... WHERE as SoftDelete events (reference
-        execute_sql_delete, sql_bridge.rs:5981-6087)."""
-        matching = self.state_df(schema_cols).filter(condition)
-        return self.soft_delete(matching.select(self.pk_col))
-
-    def truncate(self, schema_cols: dict[str, str]) -> int:
-        """TRUNCATE = soft-delete every visible row (reference
-        sql_bridge.rs:701-749 does exactly this)."""
-        return self.delete_where(schema_cols, "true")
 
     # -- reconstruction (reference table_storage.rs:344-428) -----------------
 

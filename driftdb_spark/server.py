@@ -66,8 +66,6 @@ _CANCEL_REQUEST = 80877102
 _MAX_STARTUP = 1 << 20  # 1 MiB
 _MAX_FRAME = 16 << 20  # 16 MiB
 
-_SET_AUTH = re.compile(r"^SET\s+SESSION\s+AUTHORIZATION\s+(\w+)$", re.IGNORECASE)
-_RESET_AUTH = re.compile(r"^RESET\s+SESSION\s+AUTHORIZATION$", re.IGNORECASE)
 _SHOW = re.compile(r"^SHOW\s+(\w+(?:\s+\w+)*)$", re.IGNORECASE)
 _BENIGN_SET = re.compile(r"^(SET|RESET)\s+(?!SESSION\s+AUTHORIZATION)\w+", re.IGNORECASE)
 # Identity-changing variants the benign shim must NOT swallow: a client
@@ -760,42 +758,24 @@ class _Handler(socketserver.BaseRequestHandler):
         context; superusers get a bypassing superuser context. Trust mode
         keeps the owner context (embedded/test semantics)."""
         if not self.server.users:
-            self.wire_superuser = True  # trust mode: embedded owner
-            return
-        self.wire_superuser = self.username in self.server.superusers
+            return  # trust mode: embedded owner
         # enter_authenticated (not bare set_security_context): the session
-        # remembers the restricted identity and refuses SET/RESET SESSION
-        # AUTHORIZATION on every statement path — PREPARE/EXECUTE and
-        # procedure bodies included — not just this wire-level gate.
+        # remembers the identity, so it refuses SET/RESET SESSION
+        # AUTHORIZATION from a restricted one on every statement path
+        # (simple query, PREPARE/EXECUTE, procedure bodies) and RESET
+        # restores it.
         self.session.enter_authenticated(
-            self.username, superuser=self.wire_superuser
+            self.username, superuser=self.username in self.server.superusers
         )
 
     # -- statement dispatch ----------------------------------------------------
 
     def _dispatch(self, sql: str, args=None):
-        """Route one statement through the session, applying the wire-level
-        authorization gate on SET/RESET SESSION AUTHORIZATION: only
-        superuser connections may assume another identity, and RESET
+        """Route one statement through the session. SET/RESET SESSION
+        AUTHORIZATION is the session's to gate like any other statement:
+        only a superuser connection may assume another identity, and RESET
         restores the *authenticated* user (reference executor.rs:351-460
         gates these the same way)."""
-        m = _SET_AUTH.match(sql)
-        if m is not None or _RESET_AUTH.match(sql):
-            if not self.wire_superuser:
-                err = PermissionError(
-                    "permission denied to set session authorization"
-                )
-                err.sqlstate = "42501"
-                raise err
-            if m is not None:
-                self.session.set_security_context(m.group(1))
-            elif self.server.users:
-                self.session.set_security_context(
-                    self.username, superuser=self.wire_superuser
-                )
-            else:
-                self.session.set_security_context(None)
-            return "SET" if m is not None else "RESET"
         if self._isolated and _is_readonly_sql(sql):
             # Reads dispatch CONCURRENTLY across connections: this
             # connection's SparkSession analyzes/executes in its own
@@ -1313,7 +1293,6 @@ class _Handler(socketserver.BaseRequestHandler):
             self.session is not base and self.session.spark is not base.spark
         )
         self.username = ""
-        self.wire_superuser = False
         self._stmts: dict[str, tuple[str, int, list[int]]] = {}
         self._portals: dict[str, dict] = {}
         ext_error = False  # after an extended-protocol error: skip to Sync

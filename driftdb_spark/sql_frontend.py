@@ -155,9 +155,8 @@ class DriftSession:
         # Authenticated identity this session was ENTERED under (set by the
         # wire server): (username, superuser). While a restricted identity
         # is active, SET/RESET SESSION AUTHORIZATION is refused in the
-        # dispatcher itself — regardless of how the statement arrives
-        # (simple query, PREPARE/EXECUTE, CALL body, nested sql) — so the
-        # wire-level gate cannot be laundered through an indirect path.
+        # dispatcher itself — the one gate, whichever way the statement
+        # arrives (simple query, PREPARE/EXECUTE, CALL body, nested sql).
         self._auth_identity: tuple[str, bool] | None = None
         # True while this session fronts a read-only replica
         # (replication.Replica); promote() clears it.
@@ -248,8 +247,7 @@ class DriftSession:
         :meth:`set_security_context`, the identity is remembered: a
         non-superuser session then refuses SET/RESET SESSION
         AUTHORIZATION on EVERY statement path — including PREPARE/
-        EXECUTE and procedure bodies, which re-enter ``sql`` below the
-        wire server's own regex gate."""
+        EXECUTE and procedure bodies, which re-enter ``sql``."""
         self._auth_identity = (username, bool(superuser))
         # authenticated identities automatically carry their RBAC-granted
         # roles (rbac.rs get_user_roles at connection time) so RLS policy
@@ -1274,9 +1272,9 @@ class DriftSession:
     def _require_authorization_privilege(self) -> None:
         """Only a superuser (or the embedded owner) may change session
         authorization. Enforced HERE — in the one dispatcher every
-        statement path funnels through — so PREPARE/EXECUTE, CALL bodies,
-        and nested sql cannot launder the statement past a wire-level
-        regex gate (PostgreSQL error 42501)."""
+        statement path funnels through — so the wire, PREPARE/EXECUTE,
+        CALL bodies and nested sql all meet the same gate (PostgreSQL
+        error 42501)."""
         if self._auth_identity is not None and not self._auth_identity[1]:
             self.security.record(
                 "privilege_violation",
@@ -2528,9 +2526,10 @@ class DriftSession:
 
     def _writer(self, table: str):
         """Where a statement's events go: the open transaction's buffer
-        for the table, or its EventLog. Both expose ``insert`` /
-        ``patch`` / ``soft_delete`` / ``update_where`` /
-        ``delete_where``."""
+        for the table, or its EventLog. Both take their DML verbs from
+        ``events.DmlVerbs`` and differ only in the sink: the EventLog
+        publishes each statement list as one batch, the transaction
+        buffers it until COMMIT."""
         if self._active_txn is not None:
             return self._active_txn.table(table)
         return self._tables[table][0]

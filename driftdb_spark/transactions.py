@@ -9,11 +9,11 @@ transaction ("commands ignored until end of transaction block"; COMMIT of
 an aborted transaction behaves as ROLLBACK) — reference
 sql_bridge.rs:453-568, transaction.rs:25-120.
 
-Here the buffer is a list of staged statement frames and COMMIT publishes
-them as ONE batch through the same staged-rename atomic append the
-single-statement DML path uses — so a multi-statement transaction is
-all-or-nothing with respect to readers exactly like a single batch, and two
-racing COMMITs serialize through the same filesystem-arbitrated claim
+Here the buffer is a list of staged statement frames and COMMIT hands it to
+the same publish (``EventLog._sink``) every write outside BEGIN uses, which
+writes it as ONE batch by staged rename — so a multi-statement transaction
+is all-or-nothing with respect to readers exactly like a single batch, and
+two racing COMMITs serialize through the same filesystem-arbitrated claim
 (``ConcurrentAppendError`` for the loser). Delta's equivalent is one commit
 file per transaction.
 
@@ -34,9 +34,14 @@ Every DML entry point of ``DriftSession`` (INSERT, COPY via
 same gates inside and outside BEGIN, reading ``DriftSession._view`` (this
 buffer's view for a touched table) and writing through
 ``DriftSession._writer`` (a ``Transaction`` here, the ``EventLog``
-outside). ``Transaction`` mirrors the ``EventLog`` write surface
-(``insert`` / ``patch`` / ``soft_delete`` / ``update_where`` /
-``delete_where``) for that reason. A MERGE outside BEGIN runs in a
+outside). The write surface is shared, not mirrored: both classes take
+their ``insert`` / ``upsert`` / ``patch`` / ``soft_delete`` /
+``update_where`` / ``delete_where`` from ``events.DmlVerbs``, which builds
+every statement's ``(event_type, pk, payload)`` frame once and hands the
+statement list to the target's sink — the ``EventLog`` publishes it, a
+``Transaction`` pins and buffers it. So a PK-changing UPDATE (SoftDelete
+old keys + Insert new rows) is one atomic batch outside BEGIN and two
+buffered statements inside. A MERGE outside BEGIN runs in a
 statement-scoped ``SessionTransaction``, committed when its last clause
 succeeds and rolled back on any error.
 
@@ -54,17 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from driftdb_spark.events import (
-    EVENT_SCHEMA,
-    INSERT,
-    PATCH,
-    SOFT_DELETE,
-    EventLog,
-    _payload_map,
-    fold_events,
-    pk_conflicts,
-    typed_state,
-)
+from driftdb_spark.events import EVENT_SCHEMA, DmlVerbs, EventLog, fold_events, typed_state
 
 
 class TransactionAborted(RuntimeError):
@@ -82,7 +77,7 @@ class TransactionAborted(RuntimeError):
         super().__init__(msg)
 
 
-class Transaction:
+class Transaction(DmlVerbs):
     """Buffered per-table transaction. Use via ``EventLog.begin()``."""
 
     def __init__(self, log: EventLog):
@@ -93,6 +88,9 @@ class Transaction:
         self._aborted = False
         self._done = False
 
+    pk_col = property(lambda self: self.log.pk_col)
+    validate_fn = property(lambda self: self.log.validate_fn)
+
     # -- staging -------------------------------------------------------------
 
     def _gate(self) -> None:
@@ -101,72 +99,21 @@ class Transaction:
         if self._aborted:
             raise TransactionAborted()
 
-    def _stage(self, batch: DataFrame, event_type: str, payload) -> None:
-        if self.log.validate_fn is not None:
-            batch = self.log.validate_fn(batch, event_type)
-        normalized = batch.select(
-            F.col(self.log.pk_col).cast("string").alias("pk"),
-            (
-                payload
-                if payload is not None
-                else F.lit(None).cast(EVENT_SCHEMA["payload"].dataType)
-            ).alias("payload"),
-        )
-        # Pin the statement's rows now: later statements and the commit
-        # itself must see THIS statement as of its execution point, and the
-        # plan may read state the commit will change.
-        normalized = normalized.persist()
-        normalized.count()
-        self._stmts.append((event_type, normalized))
+    def _refuse(self, msg: str) -> None:
+        """A refused statement aborts the transaction."""
+        self._aborted = True
+        super()._refuse(msg)
 
-    def insert(self, rows: DataFrame) -> None:
-        """INSERT with PK uniqueness against committed state + the buffer
-        (reference checks both, sql_bridge.rs:3505-3661). A violation
-        aborts the transaction."""
+    def _sink(self, stmts: list[tuple[str, DataFrame]]) -> None:
+        """Buffer a statement list until COMMIT. Each statement's rows are
+        pinned now: later statements and the commit itself must see it as
+        of its execution point, and its plan may read state the commit
+        will change."""
         self._gate()
-        try:
-            if not pk_conflicts(self._replay_events(), rows, self.log.pk_col).isEmpty():
-                raise ValueError("duplicate primary key(s) in transaction insert")
-            self._stage(rows, INSERT, _payload_map(rows, self.log.pk_col))
-        except ValueError:
-            self._aborted = True
-            raise
-
-    def patch(self, partial_rows: DataFrame) -> None:
-        self._gate()
-        self._stage(partial_rows, PATCH, _payload_map(partial_rows, self.log.pk_col))
-
-    def soft_delete(self, keys: DataFrame) -> None:
-        self._gate()
-        self._stage(keys.select(self.log.pk_col), SOFT_DELETE, None)
-
-    def update_where(
-        self, schema_cols: dict[str, str], condition: str, assignments: dict[str, object]
-    ) -> None:
-        """UPDATE ... WHERE against the transaction's OWN view of state
-        (committed ∪ buffer) — a row inserted or patched earlier in the
-        txn is visible to the condition and the assignment expressions,
-        exactly like the reference's buffered execution."""
-        self._gate()
-        if self.log.pk_col in assignments:
-            raise ValueError(
-                "PK-changing UPDATE inside a transaction is not supported; "
-                "use EventLog.update_where (delete+insert model) outside"
-            )
-        matching = self.state_df(schema_cols).filter(condition)
-        patch = matching.select(
-            F.col("pk").alias(self.log.pk_col),
-            *[F.expr(str(expr)).alias(col) for col, expr in assignments.items()],
-        )
-        self._stage(patch, PATCH, _payload_map(patch, self.log.pk_col))
-
-    def delete_where(self, schema_cols: dict[str, str], condition: str) -> None:
-        """DELETE ... WHERE against the txn's view of state."""
-        self._gate()
-        matching = self.state_df(schema_cols).filter(condition)
-        self._stage(
-            matching.select(F.col("pk").alias(self.log.pk_col)), SOFT_DELETE, None
-        )
+        pinned = [(event_type, frame.persist()) for event_type, frame in stmts]
+        for _event_type, frame in pinned:
+            frame.count()
+        self._stmts += pinned
 
     # -- reads ---------------------------------------------------------------
 
@@ -240,16 +187,7 @@ class Transaction:
             self.rollback()
             return self.log.last_sequence()
         try:
-            staged = None
-            for i, (etype, df) in enumerate(self._stmts):
-                part = df.select(
-                    F.lit(i).alias("_stmt"),
-                    F.lit(etype).alias("event_type"),
-                    "pk",
-                    "payload",
-                )
-                staged = part if staged is None else staged.unionByName(part)
-            return self.log._append_multi(staged)
+            return self.log._sink(self._stmts)
         finally:
             for _etype, df in self._stmts:
                 df.unpersist()

@@ -556,8 +556,10 @@ def test_update_pk_change_is_delete_plus_insert(spark, log):
     txn_update_pk_change_test.rs). Non-assigned columns carry over from the
     OLD row; time travel before the update still shows the old key."""
     log.insert(_rows(spark, [(1, "a", 10), (2, "b", 20)], "id int, name string, qty int"))
+    entries = len(log._log_entries())
     end = log.update_where(COLS, "id = 1", {"id": "id + 100", "qty": "qty * 2"})
-    assert end > 0
+    assert end == 4
+    assert len(log._log_entries()) == entries + 1  # one atomic batch
     state = {r.pk: r for r in log.state_df(COLS).collect()}
     assert set(state) == {"101", "2"}
     assert state["101"]["name"] == "a" and state["101"]["qty"] == 20
@@ -582,6 +584,32 @@ def test_update_pk_change_collision_fails_atomically(spark, log):
     # nothing changed: no delete, no insert
     assert {r.pk for r in log.state_df(COLS).collect()} == {"1", "2"}
     assert log.last_sequence() == 2
+
+
+def test_update_pk_change_survives_a_lost_publish_race(spark, log, monkeypatch):
+    """A PK-changing UPDATE whose publish loses a race (any publish after
+    the first raises ConcurrentAppendError) leaves the row under its old
+    key or its new key, never under neither: the SoftDelete and the Insert
+    publish together or not at all."""
+    from driftdb_spark.events import ConcurrentAppendError
+
+    log.insert(_rows(spark, [(1, "a", 10), (2, "b", 20)], "id int, name string, qty int"))
+    real = EventLog._assign_and_publish
+    calls = []
+
+    def publish(self, *args, **kwargs):
+        calls.append(args)
+        if len(calls) > 1:
+            raise ConcurrentAppendError("a rival append won; retry")
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(EventLog, "_assign_and_publish", publish)
+    try:
+        log.update_where(COLS, "id = 1", {"id": "201"})
+    except ConcurrentAppendError:
+        pass
+    live = {r.pk for r in log.state_at().collect()}
+    assert live in ({"1", "2"}, {"201", "2"})
 
 
 def test_insert_rejects_duplicate_pk_within_batch(spark, tmp_path):
@@ -836,14 +864,16 @@ def test_statement_job_budget(spark, tmp_path):
     sess.sql("INSERT INTO t VALUES (1, 'a', 1), (2, 'b', 2), (3, 'c', 3)")
     head, n = _jobs(spark, sess.table("t").last_sequence)
     assert (head, n) == (3, 0)
-    # ceilings: measured 6 / 5 / 5 on local[4]; AQE may run one more
-    # shuffle stage as its own job
+    # (last sequence, job ceiling): measured 6 / 5 / 5 / 12 on local[4];
+    # AQE may run one more shuffle stage as its own job. The PK-changing
+    # UPDATE is one gate and one batch of two events.
     budget = {
-        "INSERT INTO t VALUES (4, 'd', 4)": 6,
-        "UPDATE t SET qty = qty + 10 WHERE id = 1": 5,
-        "DELETE FROM t WHERE id = 2": 5,
+        "INSERT INTO t VALUES (4, 'd', 4)": (4, 6),
+        "UPDATE t SET qty = qty + 10 WHERE id = 1": (5, 5),
+        "DELETE FROM t WHERE id = 2": (6, 5),
+        "UPDATE t SET id = 201 WHERE id = 3": (8, 12),
     }
-    for seq, (stmt, most) in enumerate(budget.items(), start=4):
+    for stmt, (seq, most) in budget.items():
         end, n = _jobs(spark, lambda: sess.sql(stmt))
         assert end == seq
         assert n <= most, f"{stmt!r} ran {n} Spark jobs, budget {most}"
@@ -857,7 +887,7 @@ def test_statement_job_budget(spark, tmp_path):
         assert [tuple(r) for r in rows] == want
         assert n <= 3, f"{stmt!r} ran {n} Spark jobs, budget 3"
     got = {r.id: r.qty for r in sess.sql("SELECT id, qty FROM t").collect()}
-    assert got == {1: 11, 3: 3, 4: 4}
+    assert got == {1: 11, 4: 4, 201: 3}
 
 
 def _batch(seq: int) -> str:

@@ -44,7 +44,7 @@ def test_delete_truncate_and_history(sess, spark):
     hist = sess.sql("SELECT * FROM products FOR SYSTEM_TIME ALL")
     assert hist.count() == 4  # 3 inserts + 1 soft delete
     assert sess.drift("products", 2).count() == 2
-    log.truncate(COLS)
+    log.delete_where(COLS, "true")
     assert sess.sql("SELECT COUNT(*) AS n FROM products").first()["n"] == 0
 
 

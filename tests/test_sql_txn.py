@@ -36,26 +36,34 @@ def _ids(sess):
 
 
 def test_begin_commit_read_your_writes(sess):
+    log = sess.table("products")
+    entries = len(log._log_entries())
     sess.sql("BEGIN")
     sess.sql("INSERT INTO products VALUES (4, 'cam', 7)")
-    # Inside the txn, SELECT sees the buffered row...
-    assert _ids(sess) == {1, 2, 3, 4}
+    # a PK-changing UPDATE buffers its SoftDelete + Insert pair
+    sess.sql("UPDATE products SET id = 30 WHERE id = 3")
+    # Inside the txn, SELECT sees the buffered rows under their new keys...
+    assert _ids(sess) == {1, 2, 30, 4}
     # ...but committed storage does not until COMMIT.
-    assert sess.table("products").state_at().count() == 3
+    assert log.state_at().count() == 3
     sess.sql("COMMIT")
-    assert _ids(sess) == {1, 2, 3, 4}
-    assert sess.table("products").state_at().count() == 4
+    assert _ids(sess) == {1, 2, 30, 4}
+    assert sess.sql("SELECT name FROM products WHERE id = 30").first()["name"] == "gear"
+    assert len(log._log_entries()) == entries + 1  # one batch for the block
 
 
 def test_rollback_discards_buffer(sess):
+    head = sess.table("products").last_sequence()
     sess.sql("BEGIN")
     sess.sql("DELETE FROM products WHERE id = 2")
     sess.sql("UPDATE products SET qty = qty + 100 WHERE id = 1")
-    assert _ids(sess) == {1, 3}
+    sess.sql("UPDATE products SET id = 30 WHERE id = 3")
+    assert _ids(sess) == {1, 30}
     assert sess.sql("SELECT qty FROM products WHERE id = 1").first()["qty"] == 105
     sess.sql("ROLLBACK")
     assert _ids(sess) == {1, 2, 3}
     assert sess.sql("SELECT qty FROM products WHERE id = 1").first()["qty"] == 5
+    assert sess.table("products").last_sequence() == head
 
 
 def test_update_sees_earlier_txn_insert(sess):

@@ -179,12 +179,13 @@ def test_txn_update_delete_where_read_your_writes(spark, log):
 def test_txn_commit_equals_sequential_appends_fuzz(spark, tmp_path):
     """Property: committing a random statement list as ONE transaction
     produces the same final state as applying the same statements as
-    individual appends — _append_multi's per-key (pk, stmt) ordering is
-    exactly sequential-execution order."""
+    individual appends — the commit's per-key (pk, stmt) ordering is
+    exactly sequential-execution order. A PK-changing UPDATE stages two
+    statements in the transaction and publishes one batch outside it."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    stmt_st = st.sampled_from(["INSERT", "PATCH", "SOFT_DELETE"])
+    stmt_st = st.sampled_from(["INSERT", "PATCH", "SOFT_DELETE", "PK_UPDATE"])
     step_st = st.tuples(
         stmt_st,
         st.lists(st.sampled_from([1, 2, 3]), min_size=1, max_size=3, unique=True),
@@ -216,6 +217,18 @@ def test_txn_commit_equals_sequential_appends_fuzz(spark, tmp_path):
                 rows = _rows(spark, [(p, val) for p in pks], "id int, qty int")
                 txn.patch(rows)
                 log_b.patch(rows)
+            elif etype == "PK_UPDATE":
+                where = f"id IN ({', '.join(map(str, pks))})"
+                moved = {"id": f"id + {val + 10}"}
+                try:
+                    log_b.update_where(COLS, where, moved)
+                except ValueError:
+                    # a key collision refuses the same way inside BEGIN
+                    # (and aborts the transaction)
+                    with pytest.raises(ValueError, match="collide"):
+                        txn.update_where(COLS, where, moved)
+                    return
+                txn.update_where(COLS, where, moved)
             else:
                 rows = _rows(spark, [(p,) for p in pks], "id int")
                 txn.soft_delete(rows)
